@@ -28,6 +28,7 @@ field, and the stdout contract are unchanged.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -563,6 +564,7 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
 
     from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.replay import (
         chunked_replay,
+        rocksdb_state,
     )
     from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.velocity import (
         velocity_features_stream,
@@ -588,12 +590,6 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
             )
         )
 
-    ROCKSDB = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
-
     total_events = n * replicas
     out: dict = {"n_events": total_events, "batches_requested": replicas}
     try:
@@ -603,15 +599,15 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
         # measured, not asserted. Stateless rule alerts carry no state, so
         # only the stateful lines get a RocksDB twin.
         sustained_lines = [
-            ("stream_rule_alerts_sustained", rule_alerts, None),
-            ("stream_velocity_stateful_sustained", velocity_features_stream, None),
+            ("stream_rule_alerts_sustained", rule_alerts, False),
+            ("stream_velocity_stateful_sustained", velocity_features_stream, False),
             (
                 "stream_velocity_stateful_sustained_rocksdb",
                 velocity_features_stream,
-                ROCKSDB,
+                True,
             ),
-            ("stream_windowed_agg_sustained", windowed_agg, None),
-            ("stream_windowed_agg_sustained_rocksdb", windowed_agg, ROCKSDB),
+            ("stream_windowed_agg_sustained", windowed_agg, False),
+            ("stream_windowed_agg_sustained_rocksdb", windowed_agg, True),
         ]
         # transformWithStateInPandas sustained line (r13 unlock): the SAME
         # per-user profile semantics as the applyInPandasWithState velocity
@@ -628,20 +624,18 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
             if _protobuf_available():
                 tws_transform = account_type_profile_stream
                 sustained_lines.append(
-                    ("stream_tws_profile_sustained", tws_transform, ROCKSDB)
+                    ("stream_tws_profile_sustained", tws_transform, True)
                 )
         except Exception:
             pass
-        for name, transform, provider in sustained_lines:
+        for name, transform, rocksdb in sustained_lines:
             if transform is windowed_agg:
                 mode = "complete"
             elif transform is tws_transform:
                 mode = "update"
             else:
                 mode = "append"
-            if provider:
-                spark.conf.set(PROVIDER_CONF, provider)
-            try:
+            with rocksdb_state(spark) if rocksdb else contextlib.nullcontext():
                 t0 = time.perf_counter()
                 tbl, batches = chunked_replay(
                     spark,
@@ -653,15 +647,12 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
                 )
                 rows = tbl.count()
                 wall = time.perf_counter() - t0
-            finally:
-                if provider:
-                    spark.conf.unset(PROVIDER_CONF)
             out[name] = {
                 "wall_sec": round(wall, 3),
                 "batches": batches,
                 "out_rows": rows,
                 "events_per_sec": round(total_events / wall, 1),
-                "state_provider": "rocksdb" if provider else "hdfs-default",
+                "state_provider": "rocksdb" if rocksdb else "hdfs-default",
             }
         out["stream_velocity_stateful_sustained_rocksdb_changelog"] = (
             _changelog_sustained_line(
@@ -691,34 +682,19 @@ def _changelog_sustained_line(
     import glob
     import tempfile
 
-    from pyspark.sql import functions as F  # noqa: F811
-
-    ROCKSDB = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.replay import (
+        rocksdb_state,
+        spool_stream,
     )
-    PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+
     CHANGELOG_CONF = (
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     )
     ckpt = tempfile.mkdtemp(prefix="ckpt_changelog_")
     sink = tempfile.mkdtemp(prefix="sink_changelog_")
-    physical = spark.read.parquet(os.path.join(spool, "chunk_0001.parquet")).schema
 
     def run_once() -> float:
-        raw = (
-            spark.readStream.schema(physical)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(spool)
-        )
-        ts_type = dict(raw.dtypes).get("ts")
-        if ts_type == "bigint":
-            raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-        stream = raw.select(
-            "event_id", "ts", "user_id", "event_type", "value", "props"
-        )
+        stream = spool_stream(spark, spool)
         t0 = time.perf_counter()
         q = (
             transform(stream)
@@ -732,25 +708,24 @@ def _changelog_sustained_line(
         q.awaitTermination()
         return time.perf_counter() - t0
 
-    spark.conf.set(PROVIDER_CONF, ROCKSDB)
     spark.conf.set(CHANGELOG_CONF, "true")
     try:
-        wall = run_once()
-        ckpt_bytes = state_bytes = 0
-        for root, _, files in os.walk(ckpt):
-            for f in files:
-                sz = os.path.getsize(os.path.join(root, f))
-                ckpt_bytes += sz
-                if f"{os.sep}state{os.sep}" in os.path.join(root, f):
-                    state_bytes += sz
-        changelog_files = glob.glob(f"{ckpt}/state/**/*.changelog", recursive=True)
-        changelog_bytes = sum(os.path.getsize(f) for f in changelog_files)
-        # recovery: restart from the same checkpoint with no new input —
-        # the wall is dominated by state load (snapshot + changelog replay)
-        recovery_wall = run_once()
+        with rocksdb_state(spark):
+            wall = run_once()
+            ckpt_bytes = state_bytes = 0
+            for root, _, files in os.walk(ckpt):
+                for f in files:
+                    sz = os.path.getsize(os.path.join(root, f))
+                    ckpt_bytes += sz
+                    if f"{os.sep}state{os.sep}" in os.path.join(root, f):
+                        state_bytes += sz
+            changelog_files = glob.glob(f"{ckpt}/state/**/*.changelog", recursive=True)
+            changelog_bytes = sum(os.path.getsize(f) for f in changelog_files)
+            # recovery: restart from the same checkpoint with no new input —
+            # the wall is dominated by state load (snapshot + changelog replay)
+            recovery_wall = run_once()
     finally:
         spark.conf.unset(CHANGELOG_CONF)
-        spark.conf.unset(PROVIDER_CONF)
         import shutil as _shutil
 
         _shutil.rmtree(sink, ignore_errors=True)

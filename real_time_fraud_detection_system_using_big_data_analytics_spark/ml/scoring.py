@@ -170,9 +170,7 @@ def stream_ml_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_ml.py before). LR weights stay non-SQL-expressible — the
     audit checks the streaming EXECUTION against the batch plan instead
     of recomputing the model."""
-    import tempfile
-    import uuid
-
+    from ..streaming.replay import run_to_memory
     from ..streaming.sources import events_file_stream
 
     model = FraudPipeline().fit(events_as_transactions(spark, sf_dir))
@@ -182,17 +180,7 @@ def stream_ml_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("fraud_prediction").alias("p_stream"),
         F.col("fraud_probability").alias("prob_stream"),
     )
-    name = "mlstream_" + uuid.uuid4().hex[:8]
-    q = (
-        scored_stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_mls_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    streamed = spark.table(name)
+    streamed = run_to_memory(scored_stream, "append")
 
     batch = FraudPipeline.score(
         model, as_transactions(load_tables(spark, sf_dir, names=("events",))["events"], with_key=True)

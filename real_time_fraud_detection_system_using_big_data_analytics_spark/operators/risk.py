@@ -39,11 +39,7 @@ from pyspark.sql.window import Window as W
 from ..functions.scalars import q
 from ..plans.registry import register
 from ..sources.tables import load_tables
-
-# AML structuring parameters: "reporting threshold" 100 with a [90, 100)
-# sub-threshold band, 24 h lookback, alert at >= 2 band transactions.
-_BAND_LO, _BAND_HI = 90.0, 100.0
-_LOOKBACK_US = 24 * 3600 * 1_000_000  # rolling window, epoch-microseconds
+from ..streaming.cusum import BAND_HI, BAND_LO, H_CENTS, LOOKBACK_US, REF_CENTS
 
 
 @register(
@@ -53,14 +49,14 @@ _LOOKBACK_US = 24 * 3600 * 1_000_000  # rolling window, epoch-microseconds
       SELECT event_id, user_id, ts, epoch_us(ts) AS ts_us,
              CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS cents
       FROM events
-      WHERE value >= {_BAND_LO} AND value < {_BAND_HI}
+      WHERE value >= {BAND_LO} AND value < {BAND_HI}
     ), windowed AS (
       SELECT event_id, user_id, ts,
              COUNT(*) OVER w AS n_band_24h,
              CAST(SUM(cents) OVER w AS BIGINT) AS sum_band_cents_24h
       FROM band
       WINDOW w AS (PARTITION BY user_id ORDER BY ts_us
-                   RANGE BETWEEN {_LOOKBACK_US} PRECEDING AND CURRENT ROW)
+                   RANGE BETWEEN {LOOKBACK_US} PRECEDING AND CURRENT ROW)
     )
     SELECT event_id, user_id, ts, n_band_24h, sum_band_cents_24h
     FROM windowed WHERE n_band_24h >= 2
@@ -86,7 +82,7 @@ def fraud_structuring_subthreshold(spark: SparkSession, sf_dir: str) -> DataFram
     twin is stream_velocity_stateful's timeout discipline."""
     ev = load_tables(spark, sf_dir, names=("events",))["events"]
     band = ev.filter(
-        (F.col("value") >= _BAND_LO) & (F.col("value") < _BAND_HI)
+        (F.col("value") >= BAND_LO) & (F.col("value") < BAND_HI)
     ).select(
         "event_id",
         "user_id",
@@ -97,7 +93,7 @@ def fraud_structuring_subthreshold(spark: SparkSession, sf_dir: str) -> DataFram
     w = (
         W.partitionBy("user_id")
         .orderBy("ts_us")
-        .rangeBetween(-_LOOKBACK_US, 0)
+        .rangeBetween(-LOOKBACK_US, 0)
     )
     return (
         band.select(
@@ -111,18 +107,12 @@ def fraud_structuring_subthreshold(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-# CUSUM parameters: drift target mu+slack = 105.00 (cents 10500), decision
-# threshold h = 400.00 (cents 40000).
-_CUSUM_REF_CENTS = 10_500
-_CUSUM_H_CENTS = 40_000
-
-
 @register(
     "fraud_cusum_drift",
     oracle=f"""
     WITH d AS (
       SELECT event_id, user_id, ts,
-             CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) - {_CUSUM_REF_CENTS}
+             CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) - {REF_CENTS}
                AS delta_cents
       FROM events
     ), prefix AS (
@@ -142,7 +132,7 @@ _CUSUM_H_CENTS = 40_000
     )
     SELECT event_id, user_id,
            p - LEAST(run_min_p, 0) AS cusum_cents,
-           (p - LEAST(run_min_p, 0)) > {_CUSUM_H_CENTS} AS drift_alert
+           (p - LEAST(run_min_p, 0)) > {H_CENTS} AS drift_alert
     FROM runmin
     """,
 )
@@ -172,7 +162,7 @@ def fraud_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         (
             F.floor(F.col("value") * 100.0 + 0.5).cast("bigint")
-            - F.lit(_CUSUM_REF_CENTS)
+            - F.lit(REF_CENTS)
         ).alias("delta_cents"),
     )
     w = (
@@ -204,7 +194,7 @@ def fraud_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         s.alias("cusum_cents"),
-        (s > _CUSUM_H_CENTS).alias("drift_alert"),
+        (s > H_CENTS).alias("drift_alert"),
     )
 
 

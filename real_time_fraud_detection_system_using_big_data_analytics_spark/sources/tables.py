@@ -89,6 +89,25 @@ def fan_out(df: DataFrame, partitions: int | None = None) -> DataFrame:
     return df.repartition(n)
 
 
+def normalize_events(df: DataFrame) -> DataFrame:
+    """Give an events frame, batch or streaming, the logical layout: ``ts``
+    as TimestampType and the six events columns in order.
+
+    Older testdata stored ``ts`` as parquet TIMESTAMP(NANOS), which Spark
+    surfaces as bigint under ``nanosAsLong``; current testdata stores
+    TIMESTAMP(MICROS). Branch on the actual dtype so both vintages load."""
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        # raw ns long -> truncate to micros (same as DuckDB's ns->us)
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif ts_type == "timestamp_ntz":
+        # parquet TIMESTAMP(isAdjustedToUTC=false) infers as NTZ in Spark 4;
+        # with the session tz pinned to UTC this cast keeps the same
+        # wall-clock instant and gives every consumer one TimestampType
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df.select("event_id", "ts", "user_id", "event_type", "value", "props")
+
+
 def load_tables(
     spark: SparkSession,
     sf_dir: str,
@@ -101,26 +120,13 @@ def load_tables(
     is stable regardless of who created the session.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Older driver testdata stored events.ts as parquet TIMESTAMP(NANOS);
-    # Spark has no ns timestamps, so with nanosAsLong it surfaces as bigint.
-    # Current testdata stores TIMESTAMP(MICROS) which reads natively as
-    # timestamp. Branch on the column's actual dtype so both vintages load.
+    # ns timestamps surface as bigint; normalize_events converts them
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     dfs: dict[str, DataFrame] = {}
     for name in names:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         if name == "events":
-            ts_type = dict(df.dtypes).get("ts")
-            if ts_type == "bigint":
-                # raw ns long -> truncate to micros (same as DuckDB's ns->us)
-                df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-            elif ts_type == "timestamp_ntz":
-                # parquet TIMESTAMP(isAdjustedToUTC=false) infers as NTZ in
-                # Spark 4; with the session tz pinned to UTC this cast keeps
-                # the same wall-clock instant and gives every consumer one
-                # uniform TimestampType
-                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-            df = df.select("event_id", "ts", "user_id", "event_type", "value", "props")
+            df = normalize_events(df)
         expected = EXPECTED_COLUMNS.get(name)
         if expected is not None:
             actual = dict(df.dtypes)

@@ -17,18 +17,23 @@ event. State store cost at 100 TB: 16 bytes per account.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
-from collections.abc import Iterable, Iterator
-
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .sources import events_file_stream
+from .account_state import (
+    BUFFER_STATE_SCHEMA,
+    keyed_state_fn,
+    keyed_state_stream,
+    to_cents,
+    trailing_window,
+)
 
-REF_CENTS = 10_500  # shared with operators/risk.py (_CUSUM_REF_CENTS)
+# CUSUM parameters, shared with the batch twin operators/risk.py: drift
+# target mu+slack = 105.00 (cents 10500), decision threshold h = 400.00.
+REF_CENTS = 10_500
 H_CENTS = 40_000
 
 OUTPUT_SCHEMA = T.StructType(
@@ -48,75 +53,39 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def _cusum_fn(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Vectorized per-batch update: integer-cent deltas cumsum onto the
-    carried prefix, running min via minimum.accumulate seeded with the
-    carried min — identical int64 algebra to the batch closed form."""
-    import numpy as np
+def _cusum_step(state: tuple, pdf: pd.DataFrame) -> tuple[dict, tuple]:
+    """Integer-cent deltas cumsum onto the carried prefix, running min via
+    minimum.accumulate seeded with the carried min — identical int64
+    algebra to the batch closed form."""
+    prefix, min_prefix = state
+    pdf = pdf.sort_values(["ts_us", "event_id"])
+    p = prefix + np.cumsum(to_cents(pdf["value"]) - REF_CENTS, dtype=np.int64)
+    run_min = np.minimum.accumulate(np.minimum(p, min_prefix))
+    s = p - np.minimum(run_min, 0)
+    out = {
+        "event_id": pdf["event_id"].to_numpy(np.int64),
+        "cusum_cents": s,
+        "drift_alert": s > H_CENTS,
+    }
+    return out, (int(p[-1]), int(run_min[-1]))
 
-    if state.exists:
-        prefix, min_prefix = state.get
-    else:
-        prefix, min_prefix = 0, 0  # P_0 = 0 participates in the min
-    user_id = key[0]
-    for pdf in pdfs:
-        if len(pdf) == 0:
-            continue
-        pdf = pdf.sort_values(["ts_us", "event_id"])
-        cents = np.floor(pdf["value"].to_numpy(np.float64) * 100.0 + 0.5).astype(
-            np.int64
-        )
-        p = prefix + np.cumsum(cents - REF_CENTS, dtype=np.int64)
-        run_min = np.minimum.accumulate(np.minimum(p, min_prefix))
-        s = p - np.minimum(run_min, 0)
-        yield pd.DataFrame(
-            {
-                "event_id": pdf["event_id"].to_numpy(np.int64),
-                "user_id": np.full(len(pdf), user_id, dtype=np.int64),
-                "cusum_cents": s,
-                "drift_alert": s > H_CENTS,
-            }
-        )
-        prefix = int(p[-1])
-        min_prefix = int(run_min[-1])
-    state.update((prefix, min_prefix))
+
+# P_0 = 0 participates in the min
+_cusum_fn = keyed_state_fn(_cusum_step, (0, 0), OUTPUT_SCHEMA)
 
 
 def cusum_stream(events: DataFrame) -> DataFrame:
-    from pyspark.sql import functions as F
-
     prepared = events.select(
         "user_id", "event_id", F.unix_micros("ts").alias("ts_us"), "value", "ts"
     ).withWatermark("ts", "1 hour")
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        _cusum_fn,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def run_cusum_hermetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = events_file_stream(spark, sf_dir)
-    out = cusum_stream(stream)
-    name = "cusum_" + uuid.uuid4().hex[:8]
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return keyed_state_stream(prepared, _cusum_fn, OUTPUT_SCHEMA, STATE_SCHEMA)
 
 
 # --- Streaming structuring (smurfing) screen --------------------------------
 
+# AML structuring parameters, shared with operators/risk.py: "reporting
+# threshold" 100 with a [90, 100) sub-threshold band, 24 h lookback (epoch
+# microseconds), alert at >= 2 band transactions.
 BAND_LO, BAND_HI = 90.0, 100.0
 LOOKBACK_US = 24 * 3600 * 1_000_000
 
@@ -129,66 +98,33 @@ STRUCT_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-STRUCT_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("ts_us", T.ArrayType(T.LongType())),
-        T.StructField("cents", T.ArrayType(T.LongType())),
-    ]
-)
+
+def _structuring_step(state: tuple, pdf: pd.DataFrame) -> tuple[dict, tuple]:
+    """Band events in the trailing 24 h, the current row INCLUDED (unlike
+    velocity's strictly-prior frame); alert rows are those with >= 2.
+    Integer-cent sums, so the replay equals the batch RANGE frame
+    bit-for-bit."""
+    pdf = pdf.sort_values(["ts_us", "event_id"])
+    n, total, state = trailing_window(
+        state,
+        pdf["ts_us"].to_numpy(np.int64),
+        pdf["cents"].to_numpy(np.int64),
+        LOOKBACK_US,
+        include_self=True,
+    )
+    hit = n >= 2
+    out = {
+        "event_id": pdf["event_id"].to_numpy(np.int64)[hit],
+        "n_band_24h": n[hit],
+        "sum_band_cents_24h": total[hit],
+    }
+    return out, state
 
 
-def _structuring_fn(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Buffered per-account state pruned to the 24 h horizon; counts and
-    sums are int64 (integer cents), so the windowed sum is exact and the
-    replay equals the batch RANGE frame bit-for-bit. Unlike velocity's
-    strictly-prior frame, the alert frame INCLUDES the current row —
-    searchsorted side='left' over (buffer ++ batch) with the row itself
-    appended before the prefix-sum difference."""
-    import numpy as np
-
-    if state.exists:
-        buf_ts, buf_cents = state.get
-    else:
-        buf_ts, buf_cents = [], []
-    user_id = key[0]
-    for pdf in pdfs:
-        if len(pdf) == 0:
-            continue
-        pdf = pdf.sort_values(["ts_us", "event_id"])
-        ts = np.concatenate(
-            [np.asarray(buf_ts, dtype=np.int64), pdf["ts_us"].to_numpy(np.int64)]
-        )
-        cents = np.concatenate(
-            [
-                np.asarray(buf_cents, dtype=np.int64),
-                pdf["cents"].to_numpy(np.int64),
-            ]
-        )
-        b = len(buf_ts)
-        k = np.arange(b, len(ts))
-        lo = np.searchsorted(ts, ts[k] - LOOKBACK_US, side="left")
-        cs = np.concatenate([[0], np.cumsum(cents, dtype=np.int64)])
-        n_band = k + 1 - lo
-        sum_band = cs[k + 1] - cs[lo]
-        keep_mask = n_band >= 2
-        yield pd.DataFrame(
-            {
-                "event_id": pdf["event_id"].to_numpy(np.int64)[keep_mask],
-                "user_id": np.full(int(keep_mask.sum()), user_id, dtype=np.int64),
-                "n_band_24h": n_band[keep_mask],
-                "sum_band_cents_24h": sum_band[keep_mask],
-            }
-        )
-        keep = ts >= ts[-1] - LOOKBACK_US
-        buf_ts, buf_cents = ts[keep].tolist(), cents[keep].tolist()
-    state.update((buf_ts, buf_cents))
+_structuring_fn = keyed_state_fn(_structuring_step, ([], []), STRUCT_OUTPUT_SCHEMA)
 
 
 def structuring_stream(events: DataFrame) -> DataFrame:
-    from pyspark.sql import functions as F
-
     prepared = (
         events.filter((F.col("value") >= BAND_LO) & (F.col("value") < BAND_HI))
         .select(
@@ -200,26 +136,6 @@ def structuring_stream(events: DataFrame) -> DataFrame:
         )
         .withWatermark("ts", "1 hour")
     )
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        _structuring_fn,
-        outputStructType=STRUCT_OUTPUT_SCHEMA,
-        stateStructType=STRUCT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state_stream(
+        prepared, _structuring_fn, STRUCT_OUTPUT_SCHEMA, BUFFER_STATE_SCHEMA
     )
-
-
-def run_structuring_hermetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = events_file_stream(spark, sf_dir)
-    out = structuring_stream(stream)
-    name = "struct_" + uuid.uuid4().hex[:8]
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)

@@ -231,7 +231,7 @@ def stream_exactly_once_filesink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .replay import spool_event_chunks
+    from .replay import spool_event_chunks, spool_stream
 
     spool = spool_event_chunks(spark, sf_dir, 5)
     hold = tempfile.mkdtemp(prefix="xonce_hold_")
@@ -242,16 +242,10 @@ def stream_exactly_once_filesink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     sink = tempfile.mkdtemp(prefix="xonce_sink_")
     ckpt = tempfile.mkdtemp(prefix="xonce_ckpt_")
-    physical = spark.read.parquet(os.path.join(spool, "chunk_0001.parquet")).schema
 
     def run_pass() -> None:
-        raw = (
-            spark.readStream.schema(physical)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(spool)
-        )
         out = (
-            raw.filter(
+            spool_stream(spark, spool).filter(
                 F.col("event_type").isin("purchase", "error") & (F.col("value") > 50)
             )
             .select(
@@ -285,6 +279,6 @@ def stream_exactly_once_filesink(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         F.sum("value_cents").alias("total_cents"),
     )
-    shutil.rmtree(spool, ignore_errors=True)
-    shutil.rmtree(hold, ignore_errors=True)
+    for d in (spool, hold, ckpt):
+        shutil.rmtree(d, ignore_errors=True)
     return result

@@ -15,31 +15,15 @@ horizon; availableNow is the backfill trigger for reprocessing history.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalars import q, q_sql
 from ..plans.registry import register
+from .replay import chunked_replay, run_to_memory, spool_event_chunks
 from .sources import events_file_stream
-
-
-def _run_to_memory(stream_df: DataFrame, spark: SparkSession) -> DataFrame:
-    """Drive a streaming DF to completion with availableNow into a memory
-    sink; return the materialized result table."""
-    name = "s" + uuid.uuid4().hex[:12]
-    q = (
-        stream_df.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 @register(
@@ -71,7 +55,7 @@ def stream_tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    return _run_to_memory(agg, spark)
+    return run_to_memory(agg, "complete")
 
 
 @register(
@@ -104,7 +88,7 @@ def stream_sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(F.col("window.start").alias("window_start"), "n", "total_value")
     )
-    return _run_to_memory(agg, spark)
+    return run_to_memory(agg, "complete")
 
 
 @register(
@@ -165,7 +149,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "session_value_cents",
         )
     )
-    return _run_to_memory(agg, spark)
+    return run_to_memory(agg, "complete")
 
 
 @register(
@@ -193,7 +177,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy("user_id", "event_type")
         .agg(F.count("*").alias("n_first_seen"))
     )
-    return _run_to_memory(deduped, spark)
+    return run_to_memory(deduped, "complete")
 
 
 @register(
@@ -226,17 +210,7 @@ def stream_rule_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
             q(F.least(F.col("value") / 200.0, F.lit(1.0))).alias("probability"),
         )
     )
-    name = "alerts_" + uuid.uuid4().hex[:8]
-    query = (
-        alerts.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(alerts, "append")
 
 
 @register(
@@ -269,17 +243,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = stream.join(F.broadcast(profile), "user_id").select(
         "event_id", "user_id", "user_total_events", "user_total_value"
     )
-    name = "enrich_" + uuid.uuid4().hex[:8]
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(enriched, "append")
 
 
 @register(
@@ -328,17 +292,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("e_ts") >= F.col("p_ts"))
         & (F.col("e_ts") <= F.col("p_ts") + F.expr("INTERVAL 15 MINUTES")),
     ).select("purchase_id", "error_id", "user_id")
-    name = "ssj_" + uuid.uuid4().hex[:8]
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(joined, "append")
 
 
 @register(
@@ -376,7 +330,7 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("n"))
         .select(F.col("window.start").alias("window_start"), "event_type", "n")
     )
-    counts = _run_to_memory(agg, spark)
+    counts = run_to_memory(agg, "complete")
     w = Window.partitionBy("window_start").orderBy(F.col("n").desc(), "event_type")
     return (
         counts.withColumn("rn", F.row_number().over(w).cast("long"))
@@ -430,8 +384,6 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     is test-harness plumbing — a production stream always has a next
     batch to advance the watermark.
     """
-    from .replay import chunked_replay, spool_event_chunks
-
     spool = spool_event_chunks(spark, sf_dir, n_chunks=3, sentinel_chunks=2)
 
     def transform(stream: DataFrame) -> DataFrame:
@@ -466,10 +418,10 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
             .select("purchase_id", "error_id", "user_id")
         )
 
-    result, _ = chunked_replay(spark, sf_dir, transform, spool=spool)
-    import shutil as _shutil
-
-    _shutil.rmtree(spool, ignore_errors=True)
+    try:
+        result, _ = chunked_replay(spark, sf_dir, transform, spool=spool)
+    finally:
+        shutil.rmtree(spool, ignore_errors=True)
     # Drop the harness's sentinel purchases (negative ids) from the BATCH
     # result — NOT inside the streaming transform: a deterministic filter
     # there gets pushed below withWatermark by Catalyst, silently removing
@@ -518,7 +470,7 @@ def stream_window_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.approx_count_distinct("user_id", 0.05).alias("approx_ndv"))
         .select(F.col("window.start").alias("window_start"), "approx_ndv")
     )
-    got = _run_to_memory(agg, spark)
+    got = run_to_memory(agg, "complete")
     from ..sources.tables import load_tables
 
     ev = load_tables(spark, sf_dir, names=("events",))["events"]

@@ -27,16 +27,13 @@ bit-exactly. State store cost at 100 TB: 24 bytes per account.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
-from collections.abc import Iterable, Iterator
-
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .sources import events_file_stream
+from .account_state import keyed_state_fn, keyed_state_stream
 
 CAP_MILLI = 3_000          # bucket capacity: 3 tokens
 COST_MILLI = 1_000         # 1 token per event
@@ -60,72 +57,34 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def _ratelimit_fn(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Vectorized per-batch update: integer deltas (refill minus cost)
-    cumsum onto the carried prefix; running max via maximum.accumulate
-    seeded with the carried max — identical int64 algebra to the batch
-    closed form. The first event of a key's life has zero elapsed time
-    (matches the oracle's COALESCE(LAG, own ts))."""
-    import numpy as np
+def _ratelimit_step(state: tuple, pdf: pd.DataFrame) -> tuple[dict, tuple]:
+    """Integer deltas (refill minus cost) cumsum onto the carried prefix;
+    running max via maximum.accumulate seeded with the carried max —
+    identical int64 algebra to the batch closed form. The first event of
+    a key's life has zero elapsed time (matches the oracle's
+    COALESCE(LAG, own ts))."""
+    last_ts, prefix, run_max = state
+    pdf = pdf.sort_values(["ts_us", "event_id"])
+    ts = pdf["ts_us"].to_numpy(np.int64)
+    prev = np.concatenate([[ts[0] if last_ts is None else last_ts], ts[:-1]])
+    d = (ts - prev) // 1_000_000 * REFILL_MILLI_PER_SEC - COST_MILLI
+    p = prefix + np.cumsum(d, dtype=np.int64)
+    rm = np.maximum.accumulate(np.maximum(p, run_max))
+    bal = CAP_MILLI + p - np.maximum(rm, 0)
+    out = {
+        "event_id": pdf["event_id"].to_numpy(np.int64),
+        "balance_milli": bal,
+        "accepted": bal >= 0,
+    }
+    return out, (int(ts[-1]), int(p[-1]), int(rm[-1]))
 
-    if state.exists:
-        last_ts, prefix, run_max = state.get
-    else:
-        last_ts, prefix, run_max = None, 0, 0  # P_0 = 0 participates in max
-    user_id = key[0]
-    for pdf in pdfs:
-        if len(pdf) == 0:
-            continue
-        pdf = pdf.sort_values(["ts_us", "event_id"])
-        ts = pdf["ts_us"].to_numpy(np.int64)
-        prev = np.concatenate([[ts[0] if last_ts is None else last_ts], ts[:-1]])
-        elapsed_s = (ts - prev) // 1_000_000
-        d = elapsed_s * REFILL_MILLI_PER_SEC - COST_MILLI
-        p = prefix + np.cumsum(d, dtype=np.int64)
-        rm = np.maximum.accumulate(np.maximum(p, run_max))
-        bal = CAP_MILLI + p - np.maximum(rm, 0)
-        yield pd.DataFrame(
-            {
-                "event_id": pdf["event_id"].to_numpy(np.int64),
-                "user_id": np.full(len(pdf), user_id, dtype=np.int64),
-                "balance_milli": bal,
-                "accepted": bal >= 0,
-            }
-        )
-        last_ts = int(ts[-1])
-        prefix = int(p[-1])
-        run_max = int(rm[-1])
-    state.update((last_ts if last_ts is not None else 0, prefix, run_max))
+
+# no event yet; P_0 = 0 participates in the max
+_ratelimit_fn = keyed_state_fn(_ratelimit_step, (None, 0, 0), OUTPUT_SCHEMA)
 
 
 def ratelimit_stream(events: DataFrame) -> DataFrame:
-    from pyspark.sql import functions as F
-
     prepared = events.select(
         "user_id", "event_id", F.unix_micros("ts").alias("ts_us"), "ts"
     ).withWatermark("ts", "1 hour")
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        _ratelimit_fn,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def run_ratelimit_hermetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = events_file_stream(spark, sf_dir)
-    out = ratelimit_stream(stream)
-    name = "rl_" + uuid.uuid4().hex[:8]
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_rl_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return keyed_state_stream(prepared, _ratelimit_fn, OUTPUT_SCHEMA, STATE_SCHEMA)

@@ -20,19 +20,87 @@ Test usage: run a stateful operator through ``chunked_replay`` and assert
 the result equals the batch formulation — if state is dropped or
 double-counted between batches, the comparison fails (a bug class the
 one-batch replay can never catch).
+
+This module is also the package's one stream runner: ``run_to_memory``
+states the trigger/sink/checkpoint contract (availableNow, memory sink,
+a checkpoint that is removed when the query ends unless the caller owns
+it) once for every hermetic stream query.
 """
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import os
 import shutil
 import tempfile
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..sources.tables import normalize_events
+
+_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+_ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+
+def _drive(
+    df: DataFrame, output_mode: str, checkpoint: str | None
+) -> tuple[DataFrame, int]:
+    """Run ``df`` to completion into a memory sink; returns (table, batches).
+    A checkpoint this function creates is removed once the query ends."""
+    own = checkpoint is None
+    ckpt = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
+    name = "mem_" + uuid.uuid4().hex[:12]
+    try:
+        q = (
+            df.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        if own:
+            shutil.rmtree(ckpt, ignore_errors=True)
+    return df.sparkSession.table(name), len(q.recentProgress)
+
+
+def run_to_memory(
+    df: DataFrame, output_mode: str, checkpoint: str | None = None
+) -> DataFrame:
+    """Drive a streaming DataFrame to completion (availableNow trigger,
+    memory sink) and return the sink table. Pass ``checkpoint`` only when
+    the caller reads it back afterwards; it then stays on disk."""
+    return _drive(df, output_mode, checkpoint)[0]
+
+
+@contextlib.contextmanager
+def rocksdb_state(spark: SparkSession) -> Iterator[None]:
+    """Run the queries started inside the block on the RocksDB state store
+    provider (read at query start), restoring the session's previous
+    provider afterwards."""
+    prev = spark.conf.get(_PROVIDER_CONF, None)
+    spark.conf.set(_PROVIDER_CONF, _ROCKSDB)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(_PROVIDER_CONF)
+        else:
+            spark.conf.set(_PROVIDER_CONF, prev)
+
+
+def latest_per_key(df: DataFrame, order_col: str, key: str = "user_id") -> DataFrame:
+    """Keep each key's row with the largest ``order_col``: the current state
+    in an update-mode sink that holds one cumulative row per key per emit."""
+    w = Window.partitionBy(key).orderBy(F.col(order_col).desc())
+    return df.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+
 
 def spool_event_chunks(
     spark: SparkSession,
@@ -135,34 +203,20 @@ def chunked_replay(
     own_spool = spool is None
     if own_spool:
         spool = spool_event_chunks(spark, sf_dir, n_chunks)
-    # events_file_stream expects <dir>/events.parquet; the spool holds
-    # chunk files directly, so build the reader here with the same dtype
-    # normalization (see sources.events_file_stream).
+    try:
+        return _drive(transform(spool_stream(spark, spool)), output_mode, None)
+    finally:
+        if own_spool:
+            shutil.rmtree(spool, ignore_errors=True)
+
+
+def spool_stream(spark: SparkSession, spool: str) -> DataFrame:
+    """Stream a spool directory one chunk file per micro-batch, with the
+    events columns normalized like the batch table."""
     physical = spark.read.parquet(os.path.join(spool, "chunk_0001.parquet")).schema
     raw = (
         spark.readStream.schema(physical)
         .option("maxFilesPerTrigger", "1")
         .parquet(spool)
     )
-    ts_type = dict(raw.dtypes).get("ts")
-    if ts_type == "bigint":
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    stream = raw.select("event_id", "ts", "user_id", "event_type", "value", "props")
-
-    out = transform(stream)
-    name = "replay_" + uuid.uuid4().hex[:8]
-    q = (
-        out.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_replay_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    n_batches = len(q.recentProgress)
-    if own_spool:
-        shutil.rmtree(spool, ignore_errors=True)
-    return spark.table(name), n_batches
+    return normalize_events(raw)

@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
+from ..sources.tables import normalize_events
+
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType(), True),
@@ -72,13 +74,10 @@ def events_file_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hermetic file source over the events parquet — the test stand-in for
     the Kafka topic (same schema, replayable).
 
-    Streaming file sources need an explicit schema, so the physical type of
-    ``ts`` is taken from the parquet footer via a (lazy, footer-only) batch
-    read and the same normalization as sources/tables.load_tables is
-    applied: ns-as-long -> truncate to micros; TIMESTAMP_NTZ -> cast to
-    TimestampType under the UTC-pinned session; native timestamp passes
-    through. Keeps the stream's event-time column identical to the batch
-    twin so streaming == batch comparisons hold.
+    Streaming file sources need an explicit schema, so the physical schema
+    is taken from the parquet footer via a (lazy, footer-only) batch read,
+    and ``ts`` goes through the same normalize_events as the batch table,
+    so streaming == batch comparisons hold.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -89,12 +88,7 @@ def events_file_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    ts_type = dict(raw.dtypes).get("ts")
-    if ts_type == "bigint":
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw.select("event_id", "ts", "user_id", "event_type", "value", "props")
+    return normalize_events(raw)
 
 
 def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:

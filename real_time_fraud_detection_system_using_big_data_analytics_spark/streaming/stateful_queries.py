@@ -1,4 +1,7 @@
-"""Registry entry for the applyInPandasWithState velocity operator."""
+"""Registry entries for the per-account stateful stream operators. Each
+replays the events parquet through its operator with the package's one
+stream runner (replay.run_to_memory) and is checked against its batch
+formulation."""
 
 from __future__ import annotations
 
@@ -6,8 +9,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import register
-from .cusum import run_cusum_hermetic
-from .velocity import run_velocity_hermetic
+from .account_state import account_profile_stream
+from .cusum import cusum_stream, structuring_stream
+from .ratelimit import ratelimit_stream
+from .replay import latest_per_key, rocksdb_state, run_to_memory
+from .sources import events_file_stream
+from .velocity import run_velocity_join_hermetic, velocity_features_stream
+
+
+def _run_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Replay the events through the account profile; an update-mode sink
+    may hold several cumulative rows per key, the latest is its state."""
+    profiles = account_profile_stream(events_file_stream(spark, sf_dir))
+    out = latest_per_key(run_to_memory(profiles, "update"), "n_events")
+    return out.select(
+        "user_id",
+        F.col("n_events").cast("bigint").alias("n_events"),
+        F.col("total_value_cents").cast("bigint").alias("total_value_cents"),
+        F.col("max_value_cents").cast("bigint").alias("max_value_cents"),
+    )
 
 
 @register(
@@ -28,10 +48,10 @@ def stream_velocity_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     trailing-10-minute event count and value sum, computed incrementally
     with keyed state. The oracle is the batch RANGE-frame formulation —
     streaming state and batch window MUST agree on an in-order replay.
-    Since r8 the sum is int64 CENTS quantized per row before the prefix
-    sum (r7 verdict task 6), so this oracle text is IDENTICAL to the
-    stream_velocity_join_windowed twin's — the two formulations (Python
-    keyed state vs JVM join+window) are pinned to one exact oracle.
+    The sum is int64 CENTS quantized per row before the prefix sum, so
+    this oracle text is IDENTICAL to the stream_velocity_join_windowed
+    twin's — the two formulations (Python keyed state vs JVM join+window)
+    are pinned to one exact oracle.
 
     Caveat vs the batch frame: RANGE frames include timestamp peers; the
     stateful buffer is strictly 'rows seen before me' in (ts, event_id)
@@ -39,8 +59,8 @@ def stream_velocity_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two definitions coincide here; the unit test pins the tie behavior
     explicitly.
     """
-    out = run_velocity_hermetic(spark, sf_dir)
-    return out.select(
+    stream = velocity_features_stream(events_file_stream(spark, sf_dir))
+    return run_to_memory(stream, "append").select(
         "user_id",
         "event_id",
         F.col("n_prior_10m").cast("bigint"),
@@ -67,17 +87,13 @@ def stream_velocity_join_windowed(spark: SparkSession, sf_dir: str) -> DataFrame
     [ts - 10 min, ts] interval chained into a windowed append-mode
     aggregation — no Python worker, no Arrow round trip, no per-batch
     state protocol. The trailing sum is int64 CENTS quantized per row
-    BEFORE the join-side SUM (r6 advice): the join fan-out feeds a
-    shuffled float SUM whose summation order is nondeterministic, while
-    the oracle sums in frame order — integer cents make the equality
-    order-free instead of a ROUND(...,2) knife-edge. Since r8 both
-    velocity queries share this integer-cents oracle VERBATIM
-    (stream_velocity_stateful moved to cents too, r7 verdict task 6),
-    and the bench carries both as an A/B of the Python-state toll (r5
-    verdict task 2). See velocity.velocity_features_join_stream for
-    state bounds."""
-    from .velocity import run_velocity_join_hermetic
-
+    BEFORE the join-side SUM: the join fan-out feeds a shuffled float
+    SUM whose summation order is nondeterministic, while the oracle sums
+    in frame order — integer cents make the equality order-free instead
+    of a ROUND(...,2) knife-edge. Both velocity queries share this
+    integer-cents oracle VERBATIM, and the bench carries both as an A/B
+    of the Python-state toll. See
+    velocity.velocity_features_join_stream for state bounds."""
     out = run_velocity_join_hermetic(spark, sf_dir)
     return out.select(
         "user_id",
@@ -105,21 +121,9 @@ def stream_account_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay's final state must equal the batch GROUP BY — which is the
     oracle. Totals are BIGINT cents quantized per-row BEFORE summation
     (account_state.py module docstring), so the comparison is exact integer
-    equality regardless of batch order vs DuckDB scan order.
-
-    This replaces the rounds-3-5 transformWithStateInPandas twin whose
-    protobuf state protocol could never execute in this sandbox; same
-    semantics, same state layout, but on the API whose replay is actually
-    hash-verified every round. See streaming/account_state.py."""
-    from .account_state import run_account_profile_hermetic
-
-    out = run_account_profile_hermetic(spark, sf_dir)
-    return out.select(
-        "user_id",
-        F.col("n_events").cast("bigint").alias("n_events"),
-        F.col("total_value_cents").cast("bigint").alias("total_value_cents"),
-        F.col("max_value_cents").cast("bigint").alias("max_value_cents"),
-    )
+    equality regardless of batch order vs DuckDB scan order. See
+    streaming/account_state.py."""
+    return _run_profile(spark, sf_dir)
 
 
 @register(
@@ -142,32 +146,10 @@ def stream_account_profile_rocksdb(spark: SparkSession, sf_dir: str) -> DataFram
     state corruption (encoding drift, lost upserts across commits) is a
     value mismatch. The provider conf is read at query start; it is set
     for this query and restored after (shared session). Bench carries the
-    throughput A/B (BENCH_SELF streaming.sustained, r9); this carries
+    throughput A/B (BENCH_SELF streaming.sustained); this carries
     correctness."""
-    from .account_state import run_account_profile_hermetic
-
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(conf, rocksdb)
-    try:
-        out = run_account_profile_hermetic(spark, sf_dir)
-        # force the stream to completion under RocksDB before restoring
-        out = out.select(
-            "user_id",
-            F.col("n_events").cast("bigint").alias("n_events"),
-            F.col("total_value_cents").cast("bigint").alias("total_value_cents"),
-            F.col("max_value_cents").cast("bigint").alias("max_value_cents"),
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
-    return out
+    with rocksdb_state(spark):
+        return _run_profile(spark, sf_dir)
 
 
 @register(
@@ -207,8 +189,8 @@ def stream_cusum_drift_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch computation BIT-exactly, not just approximately — the
     stream==batch equivalence claim is itself the value check. See
     streaming/cusum.py."""
-    out = run_cusum_hermetic(spark, sf_dir)
-    return out.select(
+    stream = cusum_stream(events_file_stream(spark, sf_dir))
+    return run_to_memory(stream, "append").select(
         "event_id",
         "user_id",
         F.col("cusum_cents").cast("bigint"),
@@ -257,10 +239,8 @@ def stream_rate_limit_gcra(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact equality, like the CUSUM twin. See streaming/ratelimit.py
     for the closed-form derivation and the strict-reject variant's
     documented trade."""
-    from .ratelimit import run_ratelimit_hermetic
-
-    out = run_ratelimit_hermetic(spark, sf_dir)
-    return out.select(
+    stream = ratelimit_stream(events_file_stream(spark, sf_dir))
+    return run_to_memory(stream, "append").select(
         "event_id",
         "user_id",
         F.col("balance_milli").cast("bigint"),
@@ -298,10 +278,8 @@ def stream_structuring_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     state only ever holds band transactions (<5% of traffic) — the
     filter-before-state discipline that bounds the state store at scale.
     See streaming/cusum.py (module shared with the CUSUM twin)."""
-    from .cusum import run_structuring_hermetic
-
-    out = run_structuring_hermetic(spark, sf_dir)
-    return out.select(
+    stream = structuring_stream(events_file_stream(spark, sf_dir))
+    return run_to_memory(stream, "append").select(
         "event_id",
         "user_id",
         F.col("n_band_24h").cast("bigint"),

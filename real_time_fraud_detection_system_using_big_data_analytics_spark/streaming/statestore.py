@@ -7,7 +7,7 @@ The reference's only observability is psutil logging
 (spark_streaming_app.py:64-131); this is the engine-native upgrade: the
 state itself is a queryable table.
 
-State-schema evolution (ops note, r9): a checkpoint PINS its operator's
+State-schema evolution (ops note): a checkpoint PINS its operator's
 state schema. Restarting with a widened/changed stateStructType fails
 loudly at query start (Spark's state schema check — pinned by
 tests/test_account_state.py::test_state_schema_widening_fails_loud; do
@@ -19,8 +19,8 @@ a NEW checkpoint via a backfill replay, then cut the stream over.
 
 from __future__ import annotations
 
+import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,7 +41,7 @@ from ..plans.registry import register
     """,
 )
 def stream_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """State Data Source end to end (r8): replay the events table through
+    """State Data Source end to end: replay the events table through
     the stateful account-profile operator (applyInPandasWithState with a
     fixed-width integer-cents state row per user), then read the
     CHECKPOINT'S STATE STORE back with
@@ -57,24 +57,20 @@ def stream_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator; reference analog: the per-batch driver loop it replaces
     had NO way to see its own accumulated state."""
     from .account_state import account_profile_stream
+    from .replay import run_to_memory
     from .sources import events_file_stream
 
     ckpt = tempfile.mkdtemp(prefix="ckpt_ssread_")
-    stream = events_file_stream(spark, sf_dir)
-    q = (
-        account_profile_stream(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("ssread_" + uuid.uuid4().hex[:8])
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    state = spark.read.format("statestore").load(ckpt)
-    return state.select(
-        F.col("key.user_id").alias("user_id"),
-        F.col("value.groupState.n").cast("bigint").alias("n"),
-        F.col("value.groupState.total_cents").cast("bigint").alias("total_cents"),
-        F.col("value.groupState.mx_cents").cast("bigint").alias("mx_cents"),
-    )
+    try:
+        stream = events_file_stream(spark, sf_dir)
+        run_to_memory(account_profile_stream(stream), "update", checkpoint=ckpt)
+        state = spark.read.format("statestore").load(ckpt)
+        # materialize before the checkpoint this query owns is removed
+        return state.select(
+            F.col("key.user_id").alias("user_id"),
+            F.col("value.groupState.n").cast("bigint").alias("n"),
+            F.col("value.groupState.total_cents").cast("bigint").alias("total_cents"),
+            F.col("value.groupState.mx_cents").cast("bigint").alias("mx_cents"),
+        ).localCheckpoint()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)

@@ -26,24 +26,21 @@ exercises:
   warm-started from a batch profile, the migration shape), proven as a
   full-history value equality.
 
-ENVIRONMENT GATE (unlocked r13): the PySpark-side TWS state client
-speaks protobuf to the JVM state server
-(pyspark.sql.streaming.proto.StateMessage_pb2 -> google.protobuf); the
-protobuf PACKAGE is absent from this sandbox (no network installs), but
-the host carries a vendored pure-python protobuf runtime inside its
-google-cloud-sdk install, and session.bootstrap_vendored_protobuf()
-wires it up for the driver (sys.path) and the python workers (PYTHONPATH
-env, inherited by the JVM at launch) — see its docstring for the
-gencode/runtime version-gap handling. The operator still registers
-itself ONLY when protobuf actually imports AND no JVM predates the env
-bootstrap (the same loud-gate policy as the Kafka broker surface:
-streaming/topics.py), so it is never registered unrunnable; a
-deployment with a real `pip install protobuf` needs none of this. Since
-the unlock, tests/test_tws.py runs the full multi-batch replay in this
-sandbox (2 passed, previously 1 skip), and the query is oracle-checked
-by the registry gates. TWS additionally REQUIRES the RocksDB state
+ENVIRONMENT GATE: the PySpark-side TWS state client speaks protobuf to
+the JVM state server (pyspark.sql.streaming.proto.StateMessage_pb2 ->
+google.protobuf). Where the protobuf package is not installed but a
+vendored pure-python runtime exists (inside a google-cloud-sdk install),
+session.bootstrap_vendored_protobuf() wires it up for the driver
+(sys.path) and the python workers (PYTHONPATH env, inherited by the JVM
+at launch) — see its docstring for the gencode/runtime version-gap
+handling. Each TWS query registers itself ONLY when protobuf actually
+imports AND no JVM predates the env bootstrap (``_register_if_protobuf``;
+the same policy as the Kafka broker surface, streaming/topics.py), so it
+is never registered unrunnable; a deployment with a real `pip install
+protobuf` needs none of this. TWS additionally REQUIRES the RocksDB state
 store provider (multiple state variables = column families, which the
-HDFS-backed provider rejects) — the query pins and restores it.
+HDFS-backed provider rejects) — each query runs under
+``replay.rocksdb_state``.
 
 Scale posture: identical to every keyed-state operator in this package —
 state lives in the state store (RocksDB at scale; the provider tests
@@ -55,6 +52,7 @@ the reason the API matters at 100 TB state.
 
 from __future__ import annotations
 
+import shutil
 from typing import TYPE_CHECKING, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,6 +64,7 @@ from pyspark.sql.streaming.stateful_processor import (
 )
 
 from ..plans.registry import register
+from .replay import chunked_replay, latest_per_key, rocksdb_state, spool_event_chunks
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
@@ -163,14 +162,12 @@ def _protobuf_available() -> bool:
     return True
 
 
-def _maybe_register(fn):
-    """Register the TWS query only where its protobuf dependency exists
-    (see the module-docstring ENVIRONMENT GATE)."""
+def _register_if_protobuf(name: str, oracle: str):
+    """Register a TWS query only where its protobuf dependency exists (see
+    the module-docstring ENVIRONMENT GATE)."""
     if _protobuf_available():
-        return register(
-            "stream_transform_with_state", oracle=_TWS_ORACLE
-        )(fn)
-    return fn
+        return register(name, oracle=oracle)
+    return lambda fn: fn
 
 
 _TWS_ORACLE = """
@@ -185,7 +182,7 @@ _TWS_ORACLE = """
 """
 
 
-@_maybe_register
+@_register_if_protobuf("stream_transform_with_state", _TWS_ORACLE)
 def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """transformWithStateInPandas replayed over 4 genuine micro-batches:
     per-user cumulative profile held in TWO named state variables (a
@@ -208,36 +205,15 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     constraint, not a workaround: composite keyed state belongs on
     executor-local RocksDB, the posture stream_account_profile_rocksdb
     already carries for single-variable state."""
-    from .replay import chunked_replay
-
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(conf, rocksdb)
-    try:
+    with rocksdb_state(spark):
         tbl, batches = chunked_replay(
             spark, sf_dir, account_type_profile_stream, n_chunks=4, output_mode="update"
         )
-        assert batches >= 4, f"expected a multi-batch replay, got {batches}"
-    finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        tbl.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    assert batches >= 4, f"expected a multi-batch replay, got {batches}"
+    return latest_per_key(tbl, "n_events")
 
 
-# --- ListState: the third typed state variable (r13) -------------------------
+# --- ListState: the third typed state variable ------------------------------
 
 TOPK_K = 3
 TOPK_SCHEMA = "user_id bigint, n_seen bigint, topk_sum_cents bigint, n_kept bigint"
@@ -315,13 +291,7 @@ _TWS_TOPK_ORACLE = f"""
 """
 
 
-def _maybe_register_topk(fn):
-    if _protobuf_available():
-        return register("stream_tws_topk_liststate", oracle=_TWS_TOPK_ORACLE)(fn)
-    return fn
-
-
-@_maybe_register_topk
+@_register_if_protobuf("stream_tws_topk_liststate", _TWS_TOPK_ORACLE)
 def stream_tws_topk_liststate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """transformWithStateInPandas with a BOUNDED ListState: per-user top-3
     integer-cents values maintained across 4 genuine micro-batches (plus
@@ -336,36 +306,15 @@ def stream_tws_topk_liststate(spark: SparkSession, sf_dir: str) -> DataFrame:
     families). Scale: state per key is O(K) by construction — the
     bounded-list discipline that keeps ListState from becoming the
     100 TB state-store leak."""
-    from .replay import chunked_replay
-
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(conf, rocksdb)
-    try:
+    with rocksdb_state(spark):
         tbl, batches = chunked_replay(
             spark, sf_dir, top_values_profile_stream, n_chunks=4, output_mode="update"
         )
-        assert batches >= 4, f"expected a multi-batch replay, got {batches}"
-    finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_seen").desc())
-    return (
-        tbl.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    assert batches >= 4, f"expected a multi-batch replay, got {batches}"
+    return latest_per_key(tbl, "n_seen")
 
 
-# --- Event-time timers: the TWS lifecycle surface (r13) ----------------------
+# --- Event-time timers: the TWS lifecycle surface ---------------------------
 
 # 6-hour inactivity gap: at the generated event density (~67 events/user
 # over 30 days at every SF — user count scales with data, per-user density
@@ -544,15 +493,7 @@ _TWS_SESSION_ORACLE = f"""
 """
 
 
-def _maybe_register_sessions(fn):
-    if _protobuf_available():
-        return register(
-            "stream_tws_session_timers", oracle=_TWS_SESSION_ORACLE
-        )(fn)
-    return fn
-
-
-@_maybe_register_sessions
+@_register_if_protobuf("stream_tws_session_timers", _TWS_SESSION_ORACLE)
 def stream_tws_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """transformWithStateInPandas in EVENT-TIME mode with registered
     timers: per-user 6-hour-gap sessions replayed over 4 genuine
@@ -569,29 +510,15 @@ def stream_tws_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries. Scale: O(1) state per key (one open session + one timer);
     the sentinel batches are harness plumbing — a production stream
     always has a next batch to advance the watermark."""
-    import shutil as _shutil
-
-    from .replay import chunked_replay, spool_event_chunks
-
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
     spool = spool_event_chunks(spark, sf_dir, n_chunks=4, sentinel_chunks=2)
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(conf, rocksdb)
     try:
-        tbl, batches = chunked_replay(
-            spark, sf_dir, gap_session_stream, output_mode="append", spool=spool
-        )
-        assert batches >= 6, f"expected >=6 micro-batches, got {batches}"
+        with rocksdb_state(spark):
+            tbl, batches = chunked_replay(
+                spark, sf_dir, gap_session_stream, output_mode="append", spool=spool
+            )
     finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
-        _shutil.rmtree(spool, ignore_errors=True)
+        shutil.rmtree(spool, ignore_errors=True)
+    assert batches >= 6, f"expected >=6 micro-batches, got {batches}"
     # Sentinel users (negative ids) are harness clock-movers; dropped on
     # the BATCH result, never inside the streaming transform (a filter
     # there is pushed below withWatermark and freezes the clock — see
@@ -599,7 +526,7 @@ def stream_tws_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tbl.where(F.col("user_id") >= 0)
 
 
-# --- Initial state: the TWS bootstrap surface (r13) ---------------------------
+# --- Initial state: the TWS bootstrap surface -------------------------------
 
 BOOT_SCHEMA = "user_id bigint, n_events bigint, total_cents bigint"
 
@@ -668,15 +595,7 @@ _TWS_BOOT_ORACLE = """
 """
 
 
-def _maybe_register_boot(fn):
-    if _protobuf_available():
-        return register(
-            "stream_tws_initial_state", oracle=_TWS_BOOT_ORACLE
-        )(fn)
-    return fn
-
-
-@_maybe_register_boot
+@_register_if_protobuf("stream_tws_initial_state", _TWS_BOOT_ORACLE)
 def stream_tws_initial_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """transformWithStateInPandas with INITIAL STATE — the batch-to-stream
     migration: the first two event-time quartiles of events (the
@@ -700,16 +619,8 @@ def stream_tws_initial_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     TWS queries."""
     import glob
     import os as _os
-    import shutil as _shutil
     import tempfile
 
-    from .replay import chunked_replay, spool_event_chunks
-
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
     spool = spool_event_chunks(spark, sf_dir, n_chunks=4)
     stream_spool = tempfile.mkdtemp(prefix="replay_boot_")
     try:
@@ -733,7 +644,7 @@ def stream_tws_initial_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             start=1,
         ):
             dest = _os.path.join(stream_spool, f"chunk_{i:04d}.parquet")
-            _shutil.copy(src, dest)
+            shutil.copy(src, dest)
             _os.utime(dest, (1_600_000_000 + i, 1_600_000_000 + i))
 
         def transform(stream: DataFrame) -> DataFrame:
@@ -745,26 +656,12 @@ def stream_tws_initial_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 initialState=profile.groupBy("user_id"),
             )
 
-        prev = spark.conf.get(conf, None)
-        spark.conf.set(conf, rocksdb)
-        try:
+        with rocksdb_state(spark):
             tbl, batches = chunked_replay(
                 spark, sf_dir, transform, output_mode="update", spool=stream_spool
             )
-            assert batches >= 2, f"expected a multi-batch replay, got {batches}"
-        finally:
-            if prev is None:
-                spark.conf.unset(conf)
-            else:
-                spark.conf.set(conf, prev)
     finally:
-        _shutil.rmtree(spool, ignore_errors=True)
-        _shutil.rmtree(stream_spool, ignore_errors=True)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        tbl.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+        shutil.rmtree(spool, ignore_errors=True)
+        shutil.rmtree(stream_spool, ignore_errors=True)
+    assert batches >= 2, f"expected a multi-batch replay, got {batches}"
+    return latest_per_key(tbl, "n_events")

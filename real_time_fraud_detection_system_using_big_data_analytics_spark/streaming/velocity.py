@@ -14,17 +14,19 @@ invocation, and the state store does the rest (RocksDB provider at scale).
 
 from __future__ import annotations
 
-import tempfile
-import uuid
-from collections.abc import Iterable, Iterator
-
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .sources import events_file_stream
+from .account_state import (
+    BUFFER_STATE_SCHEMA,
+    keyed_state_fn,
+    keyed_state_stream,
+    to_cents,
+    trailing_window,
+)
 
 WINDOW_US = 600 * 1_000_000  # 10 minutes in epoch-micros
 
@@ -38,89 +40,37 @@ OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("ts_us", T.ArrayType(T.LongType())),
-        T.StructField("cents", T.ArrayType(T.LongType())),
-    ]
-)
+
+def _velocity_step(state: tuple, pdf: pd.DataFrame) -> tuple[dict, tuple]:
+    """Prior events with ts >= event_ts - 10min, self excluded, in
+    (ts, event_id) order. Values are quantized to int64 CENTS per row
+    before the prefix sum (same rule as the join-windowed twin), so both
+    velocity twins share one integer-cents oracle verbatim."""
+    pdf = pdf.sort_values(["ts_us", "event_id"])
+    ts = pdf["ts_us"].to_numpy(np.int64)
+    n, total, state = trailing_window(
+        state, ts, to_cents(pdf["value"]), WINDOW_US, include_self=False
+    )
+    out = {
+        "event_id": pdf["event_id"].to_numpy(np.int64),
+        "ts_us": ts,
+        "n_prior_10m": n,
+        "sum_prior_cents": total,
+    }
+    return out, state
 
 
-def _velocity_fn(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-user stateful pass: events arrive in micro-batch order; the state
-    holds the (ts, value) buffer from previous batches, pruned to the
-    window horizon.
-
-    Vectorized: the trailing-window count/sum per event is searchsorted
-    over the (buffer ++ batch) timestamp array plus prefix-sum
-    differences — O(n log n) per batch in numpy instead of a per-event
-    Python loop with O(window) list pops (the loop form measured ~1.3k
-    events/s; this form is bounded by Arrow transfer). The window
-    semantics are unchanged: prior events with ts >= event_ts - 10min,
-    self excluded. Values are quantized to int64 CENTS per row before
-    the cumsum (same rule as the join-windowed twin and account_state),
-    so the prefix-sum difference is exact integer arithmetic — no IEEE
-    summation-order dependence at all, and both velocity twins share one
-    integer-cents oracle verbatim (r7 verdict task 6)."""
-    import numpy as np
-
-    if state.exists:
-        buf_ts, buf_cents = state.get
-    else:
-        buf_ts, buf_cents = [], []
-    user_id = key[0]
-    for pdf in pdfs:
-        if len(pdf) == 0:
-            continue
-        pdf = pdf.sort_values(["ts_us", "event_id"])
-        ts = np.concatenate(
-            [np.asarray(buf_ts, dtype=np.int64), pdf["ts_us"].to_numpy(np.int64)]
-        )
-        # floor(x*100 + 0.5) = round-half-up toward +inf; assumes value
-        # is non-negative (it is: events.value is a transaction amount).
-        # See velocity_features_join_stream for the matching JVM-side form.
-        cents = np.concatenate(
-            [
-                np.asarray(buf_cents, dtype=np.int64),
-                np.floor(pdf["value"].to_numpy(np.float64) * 100 + 0.5).astype(
-                    np.int64
-                ),
-            ]
-        )
-        b = len(buf_ts)
-        k = np.arange(b, len(ts))
-        idx = np.searchsorted(ts, ts[k] - WINDOW_US, side="left")
-        cs = np.concatenate([[0], np.cumsum(cents)])
-        yield pd.DataFrame(
-            {
-                "user_id": np.full(len(k), user_id, dtype=np.int64),
-                "event_id": pdf["event_id"].to_numpy(np.int64),
-                "ts_us": ts[k],
-                "n_prior_10m": k - idx,
-                "sum_prior_cents": cs[k] - cs[idx],
-            }
-        )
-        keep = ts >= ts[-1] - WINDOW_US
-        buf_ts, buf_cents = ts[keep].tolist(), cents[keep].tolist()
-    state.update((buf_ts, buf_cents))
+_velocity_fn = keyed_state_fn(_velocity_step, ([], []), OUTPUT_SCHEMA)
 
 
 def velocity_features_stream(events: DataFrame) -> DataFrame:
     """Attach the stateful velocity operator to an events stream (needs
     event_id/ts/user_id/value columns)."""
-    from pyspark.sql import functions as F
-
     prepared = events.select(
         "user_id", "event_id", F.unix_micros("ts").alias("ts_us"), "value", "ts"
     ).withWatermark("ts", "1 hour")
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        _velocity_fn,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state_stream(
+        prepared, _velocity_fn, OUTPUT_SCHEMA, BUFFER_STATE_SCHEMA
     )
 
 
@@ -132,7 +82,7 @@ def velocity_features_join_stream(stream: DataFrame) -> DataFrame:
     keyed by the event — both stages keep their state in the JVM state
     store, no Python worker in the loop.
 
-    Why this exists: r5 task 2 asked whether the applyInPandasWithState
+    Why this exists: it answers whether the applyInPandasWithState
     velocity's ~12.7k events/s bench line is a Python-protocol floor. The
     committed A/B profile (BENCH_NOTES_r6.md) says mostly no: the floor
     is ~0.9 s/micro-batch of engine-side stateful machinery that a pure-
@@ -221,21 +171,3 @@ def run_velocity_join_hermetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shutil.rmtree(spool, ignore_errors=True)
     return result.where(F.col("user_id") >= 0)
-
-
-def run_velocity_hermetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replay the events parquet through the stateful operator to
-    completion (availableNow, memory sink)."""
-    stream = events_file_stream(spark, sf_dir)
-    feats = velocity_features_stream(stream)
-    name = "vel_" + uuid.uuid4().hex[:8]
-    q = (
-        feats.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)

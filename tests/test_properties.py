@@ -471,73 +471,163 @@ class _FakeGroupState:
         self._v = v
 
 
-def test_velocity_kernel_hypothesis_vs_bruteforce():
-    """The vectorized velocity kernel (searchsorted + prefix sums +
-    horizon pruning across batches) must equal the O(n^2) brute-force
-    definition — prior events with ts >= t - 10min, self excluded, in
-    (ts, event_id) order — for random event streams under random
-    chunkings. Catches pruning bugs (an event dropped from the buffer
-    that a later event still needed) and off-by-one window edges that
-    the fixed replay tests can miss."""
+def _draw_chunks(data, rows):
+    """Split in-order ``rows`` into 1-4 contiguous chunks at random cuts and
+    shuffle each chunk: the keyed-state steps must sort their own batch."""
     import pandas as pd
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
 
+    n = len(rows)
+    n_chunks = data.draw(st.integers(1, 4))
+    bounds = sorted(
+        data.draw(st.lists(st.integers(0, n), min_size=n_chunks - 1, max_size=n_chunks - 1))
+    )
+    cuts = [0, *bounds, n]
+    return [
+        pd.DataFrame(data.draw(st.permutations(rows[cuts[i] : cuts[i + 1]])))
+        for i in range(len(cuts) - 1)
+        if cuts[i] < cuts[i + 1]
+    ]
+
+
+def _fold(fn, chunks):
+    """Feed chunks through a keyed-state function as successive
+    micro-batches of one key; returns every emitted row."""
+    state = _FakeGroupState()
+    return [
+        r for chunk in chunks for out in fn((7,), iter([chunk]), state) for r in out.itertuples()
+    ]
+
+
+def test_velocity_kernel_hypothesis_vs_bruteforce():
+    """The shared trailing-window kernel (searchsorted + prefix sums +
+    horizon pruning across batches) must equal the O(n^2) brute-force
+    definition for random event streams under random chunkings, through
+    both rules that use it:
+
+    - velocity: prior events with ts >= t - 10min, self excluded, in
+      (ts, event_id) order;
+    - structuring: band-filtered cents, 24 h frame INCLUDING the current
+      row, emitted only when n_band_24h >= 2.
+
+    Catches pruning bugs (an event dropped from the buffer that a later
+    event still needed) and off-by-one frame edges that the fixed replay
+    tests can miss."""
+    import math
+
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.cusum import (
+        BAND_HI,
+        BAND_LO,
+        LOOKBACK_US,
+        _structuring_fn,
+    )
     from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.velocity import (
         WINDOW_US,
         _velocity_fn,
     )
 
-    @settings(max_examples=30, deadline=None)
-    @given(st.data())
-    def prop(data):
+    def stream(data, horizon_us, lo, hi):
         n = data.draw(st.integers(1, 60))
-        # timestamps spread across ~3 window widths so pruning really fires
+        # timestamps across ~3 frame widths so pruning really fires, on a
+        # quarter-frame grid (+0/1 us) so ties and events exactly one
+        # frame apart are common: the frame edge is where off-by-ones live
         ts = sorted(
-            data.draw(
-                st.lists(
-                    st.integers(0, 3 * WINDOW_US), min_size=n, max_size=n
-                )
+            g * (horizon_us // 4) + j
+            for g, j in data.draw(
+                st.lists(st.tuples(st.integers(0, 12), st.integers(0, 1)), min_size=n, max_size=n)
             )
         )
         vals = data.draw(
-            st.lists(
-                st.floats(0, 500, allow_nan=False, width=32),
-                min_size=n,
-                max_size=n,
-            )
+            st.lists(st.floats(lo, hi, allow_nan=False, width=32), min_size=n, max_size=n)
         )
-        n_chunks = data.draw(st.integers(1, 4))
-        bounds = sorted(
-            data.draw(
-                st.lists(st.integers(0, n), min_size=n_chunks - 1, max_size=n_chunks - 1)
-            )
-        )
-        cuts = [0, *bounds, n]
-        rows = [
-            {"ts_us": ts[i], "event_id": i, "value": float(vals[i])}
-            for i in range(n)
-        ]
-        chunks = [
-            pd.DataFrame(rows[cuts[i] : cuts[i + 1]])
-            for i in range(len(cuts) - 1)
-            if cuts[i] < cuts[i + 1]
-        ]
-        state = _FakeGroupState()
-        got = {}
-        for chunk in chunks:
-            for out in _velocity_fn((7,), iter([chunk]), state):
-                for r in out.itertuples():
-                    got[r.event_id] = (r.n_prior_10m, r.sum_prior_cents)
-        import math
+        return ts, [float(v) for v in vals]
 
+    @settings(max_examples=30, deadline=None)
+    @given(st.data())
+    def prop(data):
+        ts, vals = stream(data, WINDOW_US, 0, 500)
+        rows = [{"ts_us": t, "event_id": i, "value": v} for i, (t, v) in enumerate(zip(ts, vals))]
+        got = {
+            r.event_id: (r.n_prior_10m, r.sum_prior_cents)
+            for r in _fold(_velocity_fn, _draw_chunks(data, rows))
+        }
         cents = [math.floor(v * 100 + 0.5) for v in vals]
-        for k in range(n):
-            n_prior = sum(1 for j in range(k) if ts[j] >= ts[k] - WINDOW_US)
-            s_prior = sum(cents[j] for j in range(k) if ts[j] >= ts[k] - WINDOW_US)
-            assert got[k] == (n_prior, s_prior), (k, got[k], (n_prior, s_prior))
+        for k in range(len(ts)):
+            prior = [j for j in range(k) if ts[j] >= ts[k] - WINDOW_US]
+            want = (len(prior), sum(cents[j] for j in prior))
+            assert got[k] == want, (k, got[k], want)
+
+        # structuring: values around the band so both sides of it occur
+        ts, vals = stream(data, LOOKBACK_US, BAND_LO - 5, BAND_HI + 5)
+        band = [
+            {"ts_us": t, "event_id": i, "cents": math.floor(v * 100.0 + 0.5)}
+            for i, (t, v) in enumerate(zip(ts, vals))
+            if BAND_LO <= v < BAND_HI
+        ]
+        got = {
+            r.event_id: (r.n_band_24h, r.sum_band_cents_24h)
+            for r in _fold(_structuring_fn, _draw_chunks(data, band))
+        }
+        want = {}
+        for k, row in enumerate(band):
+            frame = [b for b in band[: k + 1] if b["ts_us"] >= row["ts_us"] - LOOKBACK_US]
+            if len(frame) >= 2:
+                want[row["event_id"]] = (len(frame), sum(b["cents"] for b in frame))
+        assert got == want
 
     prop()
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.data())
+def test_cusum_chunk_invariance_vs_sequential_recurrence(data):
+    """Random chunkings through _cusum_fn must equal the textbook
+    recurrence S_t = max(0, S_{t-1} + cents_t - REF) per event, with the
+    alert S_t > H — the state carried across batches is exactly (prefix,
+    running min)."""
+    import math
+
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.cusum import (
+        H_CENTS,
+        REF_CENTS,
+        _cusum_fn,
+    )
+
+    n = data.draw(st.integers(1, 60))
+    vals = data.draw(st.lists(st.floats(0, 300, allow_nan=False, width=32), min_size=n, max_size=n))
+    rows = [{"ts_us": 1_000 * i, "event_id": i, "value": float(v)} for i, v in enumerate(vals)]
+    got = {r.event_id: (r.cusum_cents, r.drift_alert) for r in _fold(_cusum_fn, _draw_chunks(data, rows))}
+    s = 0
+    for i, v in enumerate(vals):
+        s = max(0, s + math.floor(float(v) * 100.0 + 0.5) - REF_CENTS)
+        assert got[i] == (s, s > H_CENTS), (i, got[i], s)
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.data())
+def test_gcra_chunk_invariance_vs_sequential_fold(data):
+    """Random chunkings through _ratelimit_fn must equal the sequential
+    meter bal_i = min(CAP, bal_{i-1} + elapsed_s * REFILL - COST), first
+    event with zero elapsed time — the state carried across batches is
+    exactly (last ts, prefix, running max)."""
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.ratelimit import (
+        CAP_MILLI,
+        COST_MILLI,
+        REFILL_MILLI_PER_SEC,
+        _ratelimit_fn,
+    )
+
+    gaps = data.draw(st.lists(st.integers(0, 2_000_000_000), min_size=1, max_size=60))
+    ts = [sum(gaps[: i + 1]) for i in range(len(gaps))]
+    rows = [{"ts_us": t, "event_id": i} for i, t in enumerate(ts)]
+    got = {
+        r.event_id: (r.balance_milli, r.accepted)
+        for r in _fold(_ratelimit_fn, _draw_chunks(data, rows))
+    }
+    bal = CAP_MILLI
+    for i, t in enumerate(ts):
+        elapsed_s = (t - ts[i - 1]) // 1_000_000 if i else 0
+        bal = min(CAP_MILLI, bal + elapsed_s * REFILL_MILLI_PER_SEC - COST_MILLI)
+        assert got[i] == (bal, bal >= 0), (i, got[i], bal)
 
 
 def test_jpeg_magnitude_extend_exhaustive_inverse():

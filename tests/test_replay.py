@@ -65,3 +65,20 @@ def test_velocity_state_survives_batch_boundaries(spark):
         for r in batch.collect()
     }
     assert got == want
+
+
+def test_runner_removes_the_checkpoints_it_creates(spark, tmp_path, monkeypatch):
+    """Every hermetic stream run creates its checkpoint under the temp dir
+    and must remove it once the query ends: a chunked replay and a
+    registry stream query leave no ``ckpt*`` directory behind."""
+    import tempfile
+
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.stateful_queries import (
+        stream_cusum_drift_stateful,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out, _ = chunked_replay(spark, SF, velocity_features_stream, 2)
+    assert out.count() > 0
+    assert stream_cusum_drift_stateful(spark, SF).count() > 0
+    assert not list(tmp_path.glob("ckpt*"))
