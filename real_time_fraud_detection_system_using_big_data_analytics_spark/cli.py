@@ -197,7 +197,7 @@ def cmd_tail(args: argparse.Namespace) -> int:
     # streaming LIMIT: the memory sink materializes at most n rows —
     # without it an availableNow drain of a large topic/dir would pull
     # EVERY row into driver memory for a 10-row debug tail
-    rows = run_to_memory(stream.limit(args.n), "append").limit(args.n).collect()
+    rows = run_to_memory(stream.limit(args.n), "append")[0].limit(args.n).collect()
     for r in rows:
         print(json.dumps(r.asDict(), default=str))
     return 0

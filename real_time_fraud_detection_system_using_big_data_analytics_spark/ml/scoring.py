@@ -180,7 +180,7 @@ def stream_ml_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("fraud_prediction").alias("p_stream"),
         F.col("fraud_probability").alias("prob_stream"),
     )
-    streamed = run_to_memory(scored_stream, "append")
+    streamed = run_to_memory(scored_stream, "append")[0]
 
     batch = FraudPipeline.score(
         model, as_transactions(load_tables(spark, sf_dir, names=("events",))["events"], with_key=True)

@@ -388,7 +388,7 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_deci"
         ),
     )
-    return run_to_memory(agg, "complete")
+    return run_to_memory(agg, "complete")[0]
 
 
 # --- writer variant (custom DataSourceArrowWriter) ---------------------

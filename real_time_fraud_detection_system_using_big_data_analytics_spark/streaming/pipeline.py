@@ -55,7 +55,7 @@ def stream_tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    return run_to_memory(agg, "complete")
+    return run_to_memory(agg, "complete")[0]
 
 
 @register(
@@ -88,7 +88,7 @@ def stream_sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(F.col("window.start").alias("window_start"), "n", "total_value")
     )
-    return run_to_memory(agg, "complete")
+    return run_to_memory(agg, "complete")[0]
 
 
 @register(
@@ -149,7 +149,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "session_value_cents",
         )
     )
-    return run_to_memory(agg, "complete")
+    return run_to_memory(agg, "complete")[0]
 
 
 @register(
@@ -177,7 +177,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy("user_id", "event_type")
         .agg(F.count("*").alias("n_first_seen"))
     )
-    return run_to_memory(deduped, "complete")
+    return run_to_memory(deduped, "complete")[0]
 
 
 @register(
@@ -210,7 +210,7 @@ def stream_rule_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
             q(F.least(F.col("value") / 200.0, F.lit(1.0))).alias("probability"),
         )
     )
-    return run_to_memory(alerts, "append")
+    return run_to_memory(alerts, "append")[0]
 
 
 @register(
@@ -243,7 +243,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = stream.join(F.broadcast(profile), "user_id").select(
         "event_id", "user_id", "user_total_events", "user_total_value"
     )
-    return run_to_memory(enriched, "append")
+    return run_to_memory(enriched, "append")[0]
 
 
 @register(
@@ -292,7 +292,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("e_ts") >= F.col("p_ts"))
         & (F.col("e_ts") <= F.col("p_ts") + F.expr("INTERVAL 15 MINUTES")),
     ).select("purchase_id", "error_id", "user_id")
-    return run_to_memory(joined, "append")
+    return run_to_memory(joined, "append")[0]
 
 
 @register(
@@ -330,7 +330,7 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("n"))
         .select(F.col("window.start").alias("window_start"), "event_type", "n")
     )
-    counts = run_to_memory(agg, "complete")
+    counts = run_to_memory(agg, "complete")[0]
     w = Window.partitionBy("window_start").orderBy(F.col("n").desc(), "event_type")
     return (
         counts.withColumn("rn", F.row_number().over(w).cast("long"))
@@ -470,7 +470,7 @@ def stream_window_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.approx_count_distinct("user_id", 0.05).alias("approx_ndv"))
         .select(F.col("window.start").alias("window_start"), "approx_ndv")
     )
-    got = run_to_memory(agg, "complete")
+    got = run_to_memory(agg, "complete")[0]
     from ..sources.tables import load_tables
 
     ev = load_tables(spark, sf_dir, names=("events",))["events"]

@@ -46,11 +46,14 @@ _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 _ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
 
-def _drive(
-    df: DataFrame, output_mode: str, checkpoint: str | None
+def run_to_memory(
+    df: DataFrame, output_mode: str, checkpoint: str | None = None
 ) -> tuple[DataFrame, int]:
-    """Run ``df`` to completion into a memory sink; returns (table, batches).
-    A checkpoint this function creates is removed once the query ends."""
+    """Drive a streaming DataFrame to completion (availableNow trigger,
+    memory sink); returns (sink table, micro-batches executed). A
+    checkpoint this function creates is removed once the query ends; pass
+    ``checkpoint`` only when the caller reads it back afterwards, and it
+    then stays on disk."""
     own = checkpoint is None
     ckpt = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
     name = "mem_" + uuid.uuid4().hex[:12]
@@ -70,15 +73,6 @@ def _drive(
     return df.sparkSession.table(name), len(q.recentProgress)
 
 
-def run_to_memory(
-    df: DataFrame, output_mode: str, checkpoint: str | None = None
-) -> DataFrame:
-    """Drive a streaming DataFrame to completion (availableNow trigger,
-    memory sink) and return the sink table. Pass ``checkpoint`` only when
-    the caller reads it back afterwards; it then stays on disk."""
-    return _drive(df, output_mode, checkpoint)[0]
-
-
 @contextlib.contextmanager
 def rocksdb_state(spark: SparkSession) -> Iterator[None]:
     """Run the queries started inside the block on the RocksDB state store
@@ -95,10 +89,11 @@ def rocksdb_state(spark: SparkSession) -> Iterator[None]:
             spark.conf.set(_PROVIDER_CONF, prev)
 
 
-def latest_per_key(df: DataFrame, order_col: str, key: str = "user_id") -> DataFrame:
-    """Keep each key's row with the largest ``order_col``: the current state
-    in an update-mode sink that holds one cumulative row per key per emit."""
-    w = Window.partitionBy(key).orderBy(F.col(order_col).desc())
+def latest_per_key(df: DataFrame, order_col: str) -> DataFrame:
+    """Keep each user's row with the largest ``order_col``: the current
+    state in an update-mode sink that holds one cumulative row per user per
+    emit."""
+    w = Window.partitionBy("user_id").orderBy(F.col(order_col).desc())
     return df.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
 
 
@@ -125,8 +120,6 @@ def spool_event_chunks(
     os.makedirs(spool, exist_ok=True)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     # contiguous event-time ranges via ntile over (ts, event_id)
-    from pyspark.sql import Window
-
     w = Window.orderBy("ts", "event_id")
     chunked = ev.withColumn("_chunk", F.ntile(n_chunks).over(w))
     for i in range(1, n_chunks + 1):
@@ -204,7 +197,7 @@ def chunked_replay(
     if own_spool:
         spool = spool_event_chunks(spark, sf_dir, n_chunks)
     try:
-        return _drive(transform(spool_stream(spark, spool)), output_mode, None)
+        return run_to_memory(transform(spool_stream(spark, spool)), output_mode)
     finally:
         if own_spool:
             shutil.rmtree(spool, ignore_errors=True)

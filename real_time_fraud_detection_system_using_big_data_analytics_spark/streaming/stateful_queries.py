@@ -21,7 +21,7 @@ def _run_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay the events through the account profile; an update-mode sink
     may hold several cumulative rows per key, the latest is its state."""
     profiles = account_profile_stream(events_file_stream(spark, sf_dir))
-    out = latest_per_key(run_to_memory(profiles, "update"), "n_events")
+    out = latest_per_key(run_to_memory(profiles, "update")[0], "n_events")
     return out.select(
         "user_id",
         F.col("n_events").cast("bigint").alias("n_events"),
@@ -60,7 +60,7 @@ def stream_velocity_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicitly.
     """
     stream = velocity_features_stream(events_file_stream(spark, sf_dir))
-    return run_to_memory(stream, "append").select(
+    return run_to_memory(stream, "append")[0].select(
         "user_id",
         "event_id",
         F.col("n_prior_10m").cast("bigint"),
@@ -190,7 +190,7 @@ def stream_cusum_drift_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream==batch equivalence claim is itself the value check. See
     streaming/cusum.py."""
     stream = cusum_stream(events_file_stream(spark, sf_dir))
-    return run_to_memory(stream, "append").select(
+    return run_to_memory(stream, "append")[0].select(
         "event_id",
         "user_id",
         F.col("cusum_cents").cast("bigint"),
@@ -240,7 +240,7 @@ def stream_rate_limit_gcra(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the closed-form derivation and the strict-reject variant's
     documented trade."""
     stream = ratelimit_stream(events_file_stream(spark, sf_dir))
-    return run_to_memory(stream, "append").select(
+    return run_to_memory(stream, "append")[0].select(
         "event_id",
         "user_id",
         F.col("balance_milli").cast("bigint"),
@@ -279,7 +279,7 @@ def stream_structuring_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter-before-state discipline that bounds the state store at scale.
     See streaming/cusum.py (module shared with the CUSUM twin)."""
     stream = structuring_stream(events_file_stream(spark, sf_dir))
-    return run_to_memory(stream, "append").select(
+    return run_to_memory(stream, "append")[0].select(
         "event_id",
         "user_id",
         F.col("n_band_24h").cast("bigint"),

@@ -83,6 +83,16 @@ def test_profile_fold_contract():
     assert out2["total_value_cents"].iloc[0] == 1600
     assert out2["max_value_cents"].iloc[0] == 1000
 
+    # two Arrow batches in one call: one row per batch, state carried
+    # between them, and the last row is the cumulative state
+    batch3 = pd.DataFrame({"value": [0.5]})
+    batch4 = pd.DataFrame({"value": [20.0, 0.25]})
+    out3, out4 = list(_profile_fn((7,), iter([batch3, batch4]), st))
+    assert out3["n_events"].iloc[0] == 5
+    assert out3["total_value_cents"].iloc[0] == 1650
+    assert list(out4.iloc[0]) == [7, 7, 3675, 2000]
+    assert st.get == (7, 3675, 2000)
+
 
 def test_state_schema_widening_fails_loud(spark, tmp_path):
     """Ops footgun guard (r9, invited by the statestore read-back surface):

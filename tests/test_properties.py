@@ -489,13 +489,16 @@ def _draw_chunks(data, rows):
     ]
 
 
-def _fold(fn, chunks):
-    """Feed chunks through a keyed-state function as successive
-    micro-batches of one key; returns every emitted row."""
+def _fold(data, fn, chunks):
+    """Feed chunks through a keyed-state function as successive Arrow
+    batches of one key, grouped at random cuts into micro-batches (one
+    call per micro-batch, so state is carried both between pdfs inside a
+    call and between calls); returns every emitted row."""
     state = _FakeGroupState()
-    return [
-        r for chunk in chunks for out in fn((7,), iter([chunk]), state) for r in out.itertuples()
-    ]
+    n = len(chunks)
+    cuts = [0, *sorted(set(data.draw(st.lists(st.integers(1, max(n - 1, 1)), max_size=3)))), n]
+    calls = [chunks[a:b] for a, b in zip(cuts, cuts[1:]) if a < b]
+    return [r for call in calls for out in fn((7,), iter(call), state) for r in out.itertuples()]
 
 
 def test_velocity_kernel_hypothesis_vs_bruteforce():
@@ -548,7 +551,7 @@ def test_velocity_kernel_hypothesis_vs_bruteforce():
         rows = [{"ts_us": t, "event_id": i, "value": v} for i, (t, v) in enumerate(zip(ts, vals))]
         got = {
             r.event_id: (r.n_prior_10m, r.sum_prior_cents)
-            for r in _fold(_velocity_fn, _draw_chunks(data, rows))
+            for r in _fold(data, _velocity_fn, _draw_chunks(data, rows))
         }
         cents = [math.floor(v * 100 + 0.5) for v in vals]
         for k in range(len(ts)):
@@ -565,7 +568,7 @@ def test_velocity_kernel_hypothesis_vs_bruteforce():
         ]
         got = {
             r.event_id: (r.n_band_24h, r.sum_band_cents_24h)
-            for r in _fold(_structuring_fn, _draw_chunks(data, band))
+            for r in _fold(data, _structuring_fn, _draw_chunks(data, band))
         }
         want = {}
         for k, row in enumerate(band):
@@ -595,7 +598,7 @@ def test_cusum_chunk_invariance_vs_sequential_recurrence(data):
     n = data.draw(st.integers(1, 60))
     vals = data.draw(st.lists(st.floats(0, 300, allow_nan=False, width=32), min_size=n, max_size=n))
     rows = [{"ts_us": 1_000 * i, "event_id": i, "value": float(v)} for i, v in enumerate(vals)]
-    got = {r.event_id: (r.cusum_cents, r.drift_alert) for r in _fold(_cusum_fn, _draw_chunks(data, rows))}
+    got = {r.event_id: (r.cusum_cents, r.drift_alert) for r in _fold(data, _cusum_fn, _draw_chunks(data, rows))}
     s = 0
     for i, v in enumerate(vals):
         s = max(0, s + math.floor(float(v) * 100.0 + 0.5) - REF_CENTS)
@@ -621,7 +624,7 @@ def test_gcra_chunk_invariance_vs_sequential_fold(data):
     rows = [{"ts_us": t, "event_id": i} for i, t in enumerate(ts)]
     got = {
         r.event_id: (r.balance_milli, r.accepted)
-        for r in _fold(_ratelimit_fn, _draw_chunks(data, rows))
+        for r in _fold(data, _ratelimit_fn, _draw_chunks(data, rows))
     }
     bal = CAP_MILLI
     for i, t in enumerate(ts):

@@ -10,8 +10,8 @@ and state written by a RocksDB-backed run survives a query RESTART from
 the same checkpoint.
 
 The provider is a session conf read at query start, so each test sets it
-and restores the default in a finally block (the session fixture is
-shared)."""
+through ``rocksdb_state``, which restores the previous provider on exit
+(the session fixture is shared)."""
 
 from __future__ import annotations
 
@@ -21,21 +21,9 @@ import uuid
 
 from pyspark.sql import functions as F
 
-ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
-
-
-@contextlib.contextmanager
-def rocksdb_provider(spark):
-    prev = spark.conf.get(PROVIDER_CONF, None)
-    spark.conf.set(PROVIDER_CONF, ROCKSDB)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(PROVIDER_CONF)
-        else:
-            spark.conf.set(PROVIDER_CONF, prev)
+from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.replay import (
+    rocksdb_state,
+)
 
 
 def test_rocksdb_stateful_profile_matches_batch(spark):
@@ -51,7 +39,7 @@ def test_rocksdb_stateful_profile_matches_batch(spark):
     )
 
     sf = "/root/testdata/sf0.001"
-    with rocksdb_provider(spark):
+    with rocksdb_state(spark):
         tbl, batches = chunked_replay(
             spark, sf, account_profile_stream, n_chunks=4, output_mode="update"
         )
@@ -124,7 +112,7 @@ def test_rocksdb_checkpoint_restart_survival(spark, tmp_path):
         )
         q.awaitTermination()
 
-    with rocksdb_provider(spark):
+    with rocksdb_state(spark):
         a.coalesce(1).write.mode("append").parquet(indir)
         run()
         b.coalesce(1).write.mode("append").parquet(indir)
@@ -173,7 +161,7 @@ def test_rocksdb_windowed_agg_matches_default(spark):
             )
         )
 
-    with rocksdb_provider(spark):
+    with rocksdb_state(spark):
         rocks, batches_r = chunked_replay(
             spark, sf, windowed, n_chunks=4, output_mode="complete"
         )
@@ -195,7 +183,7 @@ def rocksdb_changelog(spark):
     prev = spark.conf.get(CHANGELOG_CONF, None)
     spark.conf.set(CHANGELOG_CONF, "true")
     try:
-        with rocksdb_provider(spark):
+        with rocksdb_state(spark):
             yield
     finally:
         if prev is None:

@@ -55,7 +55,7 @@ def test_velocity_stateful_matches_batch_window(spark):
     """applyInPandasWithState velocity == batch RANGE-frame velocity on an
     in-order replay (the oracle relationship used by the registry).
     Integer-cents comparison — exact, no rounding tolerance."""
-    out = run_to_memory(velocity_features_stream(events_file_stream(spark, SF)), "append")
+    out = run_to_memory(velocity_features_stream(events_file_stream(spark, SF)), "append")[0]
     got = {
         (r["user_id"], r["event_id"]): (r["n_prior_10m"], r["sum_prior_cents"])
         for r in out.select("user_id", "event_id", "n_prior_10m", "sum_prior_cents").collect()

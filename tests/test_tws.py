@@ -173,6 +173,7 @@ def test_tws_timer_path_is_what_flushes_final_sessions(spark):
 
     from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.replay import (
         chunked_replay,
+        rocksdb_state,
         spool_event_chunks,
     )
     from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.tws import (
@@ -180,23 +181,13 @@ def test_tws_timer_path_is_what_flushes_final_sessions(spark):
     )
 
     sf_dir = "/root/testdata/sf0.001"
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
     spool = spool_event_chunks(spark, sf_dir, n_chunks=4, sentinel_chunks=0)
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(conf, rocksdb)
     try:
-        tbl, _ = chunked_replay(
-            spark, sf_dir, gap_session_stream, output_mode="append", spool=spool
-        )
+        with rocksdb_state(spark):
+            tbl, _ = chunked_replay(
+                spark, sf_dir, gap_session_stream, output_mode="append", spool=spool
+            )
     finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
         import shutil
 
         shutil.rmtree(spool, ignore_errors=True)
