@@ -24,6 +24,11 @@ calls the warm min partially measures cache re-reads — the cold column is
 the pipeline-execution number a round-over-round comparison can't be
 flattered on. Additions only: warm min/median methodology, every existing
 field, and the stdout contract are unchanged.
+
+Every sample runs through ``obs.profile``, which times exactly the
+registry call plus the noop write; BENCH_SELF's `query_layers` keeps the
+record of each query's fastest warm sample (build / Catalyst / exec split
+and the stage totals of that run's own jobs).
 """
 
 from __future__ import annotations
@@ -40,7 +45,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pyspark.sql import functions as F
 
-from real_time_fraud_detection_system_using_big_data_analytics_spark import get_session
+from real_time_fraud_detection_system_using_big_data_analytics_spark import get_session, obs
 from real_time_fraud_detection_system_using_big_data_analytics_spark.plans import registry
 
 # The driver captures only the LAST ~2000 chars of output and parses the
@@ -283,11 +288,17 @@ def main() -> None:
         keep = {s.strip() for s in subset.split(",")}
         names = [n for n in names if n in keep]
 
-    def run_once(name: str) -> float:
-        t0 = time.perf_counter()
-        df = registry.QUERIES[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+    # fastest warm sample's obs.profile record per query (build / Catalyst
+    # / exec split plus stage totals) -> BENCH_SELF `query_layers`
+    layers: dict[str, dict] = {}
+
+    def run_once(name: str, warm: bool = False) -> float:
+        rec = obs.profile(spark, name, registry.QUERIES[name], sf_dir)
+        wall = rec["build_s"] + rec["exec_s"]
+        best = layers.get(name)
+        if warm and (best is None or wall < best["build_s"] + best["exec_s"]):
+            layers[name] = rec
+        return wall
 
     for name in names:  # warmup pass
         run_once(name)
@@ -299,7 +310,7 @@ def main() -> None:
     samples: dict[str, list[float]] = {n: [] for n in names}
     for _ in range(4):
         for name in names:
-            samples[name].append(run_once(name))
+            samples[name].append(run_once(name, warm=True))
 
     # Stall-victim retry: a query whose 4 samples ALL landed in host-stall
     # bursts reports a min far above its engine cost (observed: the same
@@ -309,7 +320,7 @@ def main() -> None:
     worst = sorted(names, key=lambda n: -min(samples[n]))[:3]
     for name in worst:
         for _ in range(3):
-            samples[name].append(run_once(name))
+            samples[name].append(run_once(name, warm=True))
 
     # COLD column (r14, r13 verdict item: PERF-visible warm minima on
     # persisted subtrees partly measure CacheManager re-reads because
@@ -407,6 +418,10 @@ def main() -> None:
         "queries": times,
         "queries_cold": cold_times,
         "query_spread": spread,
+        "query_layers": {
+            n: {k: round(v, 4) if isinstance(v, float) else v for k, v in rec.items()}
+            for n, rec in layers.items()
+        },
         "shared28_min": shared28_min,
         "shared28_median": shared28_median,
         "shared28_cold": shared28_cold,
@@ -462,6 +477,9 @@ def streaming_bench(spark, sf_dir: str) -> dict:
     Best-of-2 per stream, same host-noise rationale as the batch set."""
     import shutil
 
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.pipeline import (
+        rule_alerts,
+    )
     from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.replay import (
         chunked_replay,
         spool_event_chunks,
@@ -472,11 +490,6 @@ def streaming_bench(spark, sf_dir: str) -> dict:
     from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.cusum import (
         cusum_stream,
     )
-
-    def rule_alerts(stream):
-        return stream.filter(
-            (F.col("event_type") == "purchase") & (F.col("value") > 150.0)
-        ).select("event_id", "user_id", F.round("value", 2).alias("amount"))
 
     n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     spool = spool_event_chunks(spark, sf_dir, N_STREAM_CHUNKS)
@@ -562,6 +575,9 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
         shutil.rmtree(part_dir)
         os.utime(dest, (1_600_000_000 + i, 1_600_000_000 + i))
 
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.pipeline import (
+        rule_alerts,
+    )
     from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.replay import (
         chunked_replay,
         rocksdb_state,
@@ -569,11 +585,6 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
     from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.velocity import (
         velocity_features_stream,
     )
-
-    def rule_alerts(stream):
-        return stream.filter(
-            (F.col("event_type") == "purchase") & (F.col("value") > 150.0)
-        ).select("event_id", "user_id", F.round("value", 2).alias("amount"))
 
     def windowed_agg(stream):
         # built-in streaming windowed aggregation: JVM state rows (one per

@@ -12,6 +12,8 @@ Layout:
 - ``ml``         — fraud-detection ML pipeline parity (MLlib)
 - ``streaming``  — Structured Streaming layer (sources, windows, state)
 - ``multimodal`` — binary-column (image/audio) plumbing with stubbed codecs
+- ``obs``        — in-session profiling: job-group stage totals, build /
+                   Catalyst / exec split of one query
 """
 
 from .session import get_session

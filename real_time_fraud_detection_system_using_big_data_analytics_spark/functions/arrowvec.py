@@ -18,8 +18,8 @@ contraction impossible, and the JVM fold likewise never contracts (HotSpot
 only fuses via an explicit Math.fma). Per ROW the accumulation order is
 therefore identical to the fold, element for element, so every double —
 and every ranking, tie-break and rounded output derived from it — is
-bit-identical to the expression form. tests/test_dedup_units.py gains an
-A/B test pinning this equivalence on real corpus data.
+bit-identical to the expression form. tests/test_arrowvec.py pins this
+equivalence on real corpus data with A/B tests against the expressions.
 
 Boundary discipline (guide §4.1/§4.2): callers select ONLY the columns a
 kernel needs before mapInArrow (the node is opaque to column pruning), and
@@ -195,6 +195,11 @@ def assign_top_cells(
     """Arrow twin of clustering.with_top_cells: appends ``probe_cells`` =
     the n nearest centroid ids, nearest first (stable argsort of the
     distance row = array_sort over (d, cid) structs: ties by cid)."""
+    if not 1 <= n <= len(centroids):
+        raise ValueError(
+            f"assign_top_cells: n={n} must be between 1 and the number of "
+            f"centroids ({len(centroids)})"
+        )
     keep_cols = list(keep) if keep is not None else [f.name for f in df.schema.fields]
     in_cols = list(dict.fromkeys(keep_cols + [vec_col]))
     src = df.select(*in_cols)

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.classification import LogisticRegression
@@ -52,6 +52,7 @@ PAYSIM_SCHEMA = T.StructType(
     ]
 )
 
+LABEL_COL = "isFraud"
 CATEGORICAL_COLS = ["type"]
 NUMERIC_COLS = [
     "step",
@@ -61,18 +62,13 @@ NUMERIC_COLS = [
     "oldbalanceDest",
     "newbalanceDest",
 ]  # fraud_detection_model.py:110-112
+# fraud_detection_model.py:160-169
+LR_PARAMS = dict(maxIter=10, regParam=0.3, elasticNetParam=0.8, threshold=0.5)
 
 
 @dataclass
 class FraudPipeline:
-    label_col: str = "isFraud"
     weight_col: str | None = "classWeight"  # None reproduces the reference no-op
-    max_iter: int = 10
-    reg_param: float = 0.3
-    elastic_net_param: float = 0.8
-    threshold: float = 0.5
-    categorical_cols: list[str] = field(default_factory=lambda: list(CATEGORICAL_COLS))
-    numeric_cols: list[str] = field(default_factory=lambda: list(NUMERIC_COLS))
 
     # -- M1-M6 ---------------------------------------------------------
     def build_pipeline(self) -> Pipeline:
@@ -81,7 +77,7 @@ class FraudPipeline:
         )
         encoder = OneHotEncoder(inputCols=["type_indexed"], outputCols=["type_encoded"])
         assembler = VectorAssembler(
-            inputCols=["type_encoded"] + self.numeric_cols,
+            inputCols=["type_encoded"] + NUMERIC_COLS,
             outputCol="features_raw",
             handleInvalid="keep",
         )
@@ -90,12 +86,9 @@ class FraudPipeline:
         )
         lr_kwargs = dict(
             featuresCol="features",
-            labelCol=self.label_col,
-            maxIter=self.max_iter,
-            regParam=self.reg_param,
-            elasticNetParam=self.elastic_net_param,
-            threshold=self.threshold,
+            labelCol=LABEL_COL,
             standardization=True,
+            **LR_PARAMS,
         )
         if self.weight_col:
             lr_kwargs["weightCol"] = self.weight_col
@@ -104,15 +97,13 @@ class FraudPipeline:
 
     # -- classWeight (fraud_detection_model.py:197-209, single pass) ----
     def with_class_weight(self, df: DataFrame) -> DataFrame:
+        y = F.col(LABEL_COL)
         counts = df.agg(
-            F.sum(F.when(F.col(self.label_col) == 1, 1).otherwise(0)).alias("n_pos"),
-            F.sum(F.when(F.col(self.label_col) == 0, 1).otherwise(0)).alias("n_neg"),
+            F.sum(F.when(y == 1, 1).otherwise(0)).alias("n_pos"),
+            F.sum(F.when(y == 0, 1).otherwise(0)).alias("n_neg"),
         ).first()
         ratio = (counts["n_neg"] / counts["n_pos"]) if counts["n_pos"] else 1.0
-        return df.withColumn(
-            "classWeight",
-            (F.col(self.label_col) * ratio) + (1.0 - F.col(self.label_col)),
-        )
+        return df.withColumn("classWeight", (y * ratio) + (1.0 - y))
 
     def fit(self, train_df: DataFrame) -> PipelineModel:
         weighted = self.with_class_weight(train_df) if self.weight_col else train_df
@@ -130,16 +121,16 @@ class FraudPipeline:
 
     # -- M8: one cached transform + single-pass metrics -----------------
     @staticmethod
-    def evaluate(model: PipelineModel, test_df: DataFrame, label_col: str = "isFraud") -> dict:
+    def evaluate(model: PipelineModel, test_df: DataFrame) -> dict:
         preds = model.transform(test_df).persist()
         try:
             auc = BinaryClassificationEvaluator(
-                labelCol=label_col,
+                labelCol=LABEL_COL,
                 rawPredictionCol="rawPrediction",
                 metricName="areaUnderROC",
             ).evaluate(preds)
             p = F.col("prediction")
-            y = F.col(label_col).cast("double")
+            y = F.col(LABEL_COL).cast("double")
             row = preds.agg(
                 F.count("*").alias("n"),
                 F.sum(((p == 1.0) & (y == 1.0)).cast("long")).alias("tp"),
@@ -167,9 +158,9 @@ class FraudPipeline:
     def save(self, model: PipelineModel, path: str) -> None:
         model.write().overwrite().save(path)
         sidecar = {
-            "categorical_cols": self.categorical_cols,
-            "numeric_cols": self.numeric_cols,
-            "label_col": self.label_col,
+            "categorical_cols": CATEGORICAL_COLS,
+            "numeric_cols": NUMERIC_COLS,
+            "label_col": LABEL_COL,
             "weight_col": self.weight_col,
         }
         with open(os.path.join(path, "feature_columns.json"), "w") as f:

@@ -26,6 +26,17 @@ def default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else half of physical RAM capped
+    at 48g: the driver is the whole local cluster, and a heap sized past
+    the host lets the JVM grow until the kernel's OOM killer ends it."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    half_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**31
+    return f"{max(1, min(48, half_gib))}g"
+
+
 # Vendored pure-python protobuf runtimes this host happens to carry
 # (Google's public protobuf, shipped inside a google-cloud-sdk install).
 # Used by the transformWithStateInPandas surface (streaming/tws.py) when
@@ -108,7 +119,7 @@ def get_session(app_name: str = "fraud-engine", cpus: int | None = None) -> Spar
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.stopGracefullyOnShutdown", "true")
         # Python DataSource pushFilters: Spark refuses to plan a reader

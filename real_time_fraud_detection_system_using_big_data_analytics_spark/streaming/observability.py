@@ -6,12 +6,14 @@ reference's driver-side dict accumulation + JSON dumps
 Unlike the reference, stats come from the engine's own progress events
 (exact input row counts, batch durations, state-store metrics) rather than
 hand-maintained counters, so they stay correct under retries/recovery.
+Each batch keeps its whole ``durationMs`` phase map (addBatch, walCommit,
+queryPlanning, ...) and its ``stateOperators`` metrics, so a slow trigger
+can be split by phase and a growing state store seen batch by batch.
 """
 
 from __future__ import annotations
 
 import json
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql.streaming import StreamingQueryListener
@@ -55,47 +57,23 @@ class StatsListener(StreamingQueryListener):
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = json.loads(event.progress.json)
         n = int(p.get("numInputRows") or 0)
-        dur = float((p.get("durationMs") or {}).get("triggerExecution") or 0.0)
+        phases = p.get("durationMs") or {}
+        dur = float(phases.get("triggerExecution") or 0.0)
         self.stats.total_batches += 1
         self.stats.total_records += n
         self.stats.total_processing_ms += dur
-        self.stats.batches.append({"numInputRows": n, "triggerExecutionMs": dur})
+        self.stats.batches.append(
+            {
+                "batchId": p.get("batchId"),
+                "numInputRows": n,
+                "triggerExecutionMs": dur,
+                "durationMs": phases,
+                "stateOperators": p.get("stateOperators") or [],
+            }
+        )
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
         pass
 
     def onQueryIdle(self, event) -> None:  # noqa: N802
         pass
-
-
-class ResourceSampler:
-    """psutil checkpoint sampling, harness-side (ResourceUtilization parity,
-    spark_streaming_app.py:64-131). Gated import: psutil may be absent."""
-
-    def __init__(self) -> None:
-        self.samples: list[dict] = []
-
-    def capture(self, label: str) -> dict | None:
-        try:
-            import psutil
-        except ImportError:
-            return None
-        s = {
-            "label": label,
-            "ts": time.time(),
-            "cpu_percent": psutil.cpu_percent(interval=0.1),
-            "memory_percent": psutil.virtual_memory().percent,
-            "memory_used_mb": psutil.virtual_memory().used / 1024 / 1024,
-            "disk_percent": psutil.disk_usage("/").percent,
-        }
-        self.samples.append(s)
-        return s
-
-    def summary(self) -> dict:
-        if not self.samples:
-            return {}
-        out = {}
-        for k in ("cpu_percent", "memory_percent", "memory_used_mb"):
-            vals = [s[k] for s in self.samples]
-            out[k] = {"min": min(vals), "max": max(vals), "avg": sum(vals) / len(vals)}
-        return out

@@ -199,18 +199,22 @@ def stream_rule_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     append stream, so the batch filter over the same table is an exact
     oracle (upgraded from rows-only: the registered form has no
     foreachBatch side effects)."""
-    stream = events_file_stream(spark, sf_dir)
-    alerts = (
-        stream.filter((F.col("event_type") == "purchase") & (F.col("value") > 150.0))
-        .select(
-            "event_id",
-            "user_id",
-            F.round("value", 2).alias("amount"),
-            F.lit(1).alias("prediction"),
-            q(F.least(F.col("value") / 200.0, F.lit(1.0))).alias("probability"),
-        )
+    return run_to_memory(rule_alerts(events_file_stream(spark, sf_dir)), "append")[0]
+
+
+def rule_alerts(stream: DataFrame) -> DataFrame:
+    """The rule-alert transform: purchases over 150 become alert rows with
+    the rule's fixed prediction and its LEAST(value/200, 1) probability.
+    Stateless, so it applies unchanged to a stream or a batch frame."""
+    return stream.filter(
+        (F.col("event_type") == "purchase") & (F.col("value") > 150.0)
+    ).select(
+        "event_id",
+        "user_id",
+        F.round("value", 2).alias("amount"),
+        F.lit(1).alias("prediction"),
+        q(F.least(F.col("value") / 200.0, F.lit(1.0))).alias("probability"),
     )
-    return run_to_memory(alerts, "append")[0]
 
 
 @register(

@@ -82,6 +82,13 @@ def test_top_cells_bitwise_equals_sorted_candidates(spark, vecs, cents):
     assert {int(r["vec_id"]): tuple(pc) for r, pc in zip(rows, drv)} == old
 
 
+def test_top_cells_rejects_n_outside_centroid_count(spark, vecs, cents):
+    # raised on the driver, before the kernel can hit an Arrow length error
+    for n in (0, len(cents) + 1):
+        with pytest.raises(ValueError, match="number of centroids"):
+            av.assign_top_cells(vecs, cents, n, vec_col="e", keep=("vec_id",))
+
+
 def test_bounded_scorer_bitwise_equals_fold_cosine(spark):
     e = load_tables(spark, SF, names=("embeddings",))["embeddings"]
     corpus = fan_out(e).select("vec_id", "embedding", _norm("embedding").alias("e_norm"))

@@ -12,9 +12,9 @@ assertions:
 2. the result still HASH-MATCHES the DuckDB oracle — the spill round-trip
    (UnsafeExternalSorter serialize → disk → merge-read) must not change a
    byte of the answer;
-3. the run actually SPILLED (REST stage metrics, same source as
-   tests/shuffle_audit.py) — otherwise the test silently degrades into a
-   plain rerun and the memory claim is untested.
+3. the run actually SPILLED (the query's stage totals from obs.stages,
+   the same path as tests/shuffle_audit.py) — otherwise the test silently
+   degrades into a plain rerun and the memory claim is untested.
 
 Subprocess because driver memory is fixed at JVM launch — the shared test
 session's 48g heap can never exercise this path. One heavy query keeps
@@ -33,12 +33,11 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 
 _CHILD = r"""
-import json, sys, urllib.request
+import json, sys
 sys.path.insert(0, %(repo)r)
 sys.path.insert(0, %(repo)r + "/tests")
 from pyspark.sql import SparkSession
 
-PORT = 4057
 spark = (
     SparkSession.builder.master("local[4]")
     .appName("memory-pressure")
@@ -48,13 +47,12 @@ spark = (
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    .config("spark.ui.enabled", "true")
-    .config("spark.ui.port", str(PORT))
-    .config("spark.ui.retainedStages", "5000")
+    .config("spark.ui.enabled", "false")
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")
 
+from real_time_fraud_detection_system_using_big_data_analytics_spark import obs
 from real_time_fraud_detection_system_using_big_data_analytics_spark.plans import registry
 from oracle_harness import compare
 
@@ -62,17 +60,15 @@ registry.load_all()
 import __spark_entry__ as entry
 oracles = entry.oracle_sql()
 
-out = {}
-for name in ["graph_adamic_adar"]:
+name = "graph_adamic_adar"
+with obs.stages(spark, name) as st:
     rep = compare(spark, registry.QUERIES[name], oracles[name], "/root/testdata/sf0.1")
-    out[name] = bool(rep["row_match"] and rep["col_match"] and rep["type_match"]
-                     and rep["value_match"])
-
-app_id = spark.sparkContext.applicationId
-url = f"http://localhost:{PORT}/api/v1/applications/{app_id}/stages?status=complete"
-stages = json.loads(urllib.request.urlopen(url, timeout=10).read().decode())
-out["spill_disk_bytes"] = sum(s.get("diskBytesSpilled", 0) for s in stages)
-out["spill_mem_bytes"] = sum(s.get("memoryBytesSpilled", 0) for s in stages)
+out = {
+    name: bool(rep["row_match"] and rep["col_match"] and rep["type_match"]
+               and rep["value_match"]),
+    "spill_disk_bytes": st["spill_disk_bytes"],
+    "spill_mem_bytes": st["spill_mem_bytes"],
+}
 print("MEMPRESSURE " + json.dumps(out))
 spark.stop()
 """
