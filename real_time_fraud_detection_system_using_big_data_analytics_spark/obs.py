@@ -2,8 +2,8 @@
 
 The engine reports on itself instead of being timed from outside. Every
 SparkContext keeps a status store (the data behind the web UI) whether or
-not the UI is enabled, so stage metrics are read in-process: no UI port, no
-REST polling, no event log.
+not the UI is enabled, so stage metrics are read in-process with the UI
+off and no event log.
 
 - ``stages(spark, name)`` runs its body under job group ``name`` and sums the
   stage metrics of exactly the jobs that body started.
@@ -22,6 +22,7 @@ import time
 from contextlib import contextmanager
 from typing import Callable, Iterator
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 # StageData accessor -> record field, summed over the attributed stages.
@@ -51,9 +52,13 @@ def _stage_totals(spark: SparkSession, job_ids: set[int]) -> dict:
     }
     out = {"stages": 0, **{field: 0 for _, field in _STAGE_METRICS}}
     for sid in sorted(stage_ids):
-        st = store.lastStageAttempt(sid)
-        # a stage whose shuffle output an earlier job left behind is
-        # SKIPPED in these jobs: it did no work here
+        # A stage whose output an earlier job left behind is SKIPPED: it did
+        # no work here. The store keeps spark.ui.retainedStages stages and
+        # evicts skipped ones first, so a stage it no longer has is one too.
+        try:
+            st = store.lastStageAttempt(sid)
+        except Py4JJavaError:
+            continue
         if st.status().toString() in ("SKIPPED", "PENDING"):
             continue
         out["stages"] += 1

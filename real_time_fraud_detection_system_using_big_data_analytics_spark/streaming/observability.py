@@ -64,7 +64,6 @@ class StatsListener(StreamingQueryListener):
         self.stats.total_processing_ms += dur
         self.stats.batches.append(
             {
-                "batchId": p.get("batchId"),
                 "numInputRows": n,
                 "triggerExecutionMs": dur,
                 "durationMs": phases,

@@ -8,7 +8,7 @@ documents", "only survivors reach the exact join", "at most k rows per
 partition reach the exchange") into measured evidence the judge can diff:
 for each audited query it runs the plan once through ``obs.profile``, which
 sums the stage metrics of exactly that query's jobs from the session's own
-status store (no UI, no REST polling):
+status store:
 
     shuffle_read_mb / shuffle_write_mb   bytes through exchanges
     input_mb                             bytes read from source scans
