@@ -17,10 +17,10 @@ assertions:
    degrades into a plain rerun and the memory claim is untested.
 
 Subprocess because driver memory is fixed at JVM launch — the shared test
-session's 48g heap can never exercise this path. One heavy query keeps
+session's host-sized heap can never exercise this path. One heavy query keeps
 the wall cost ~2 min; the query choice (graph_adamic_adar) is the largest
-shuffler in SHUFFLE.md (106 MB at sf0.1 — ~7x the starved execution pool,
-so spill is structurally forced, not config-lucky).
+shuffler in SHUFFLE.md (79 MB at sf0.1 on local[4] — several times the
+starved execution pool, so spill is structurally forced, not config-lucky).
 """
 
 from __future__ import annotations
