@@ -9,12 +9,15 @@ the fix; the two-level aggregate carries distinct pairs instead).
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
+from conftest import SF_SMOKE
 
 from real_time_fraud_detection_system_using_big_data_analytics_spark import obs
 from real_time_fraud_detection_system_using_big_data_analytics_spark.plans import registry
 
-SF01 = "/root/testdata/sf0.1"
+SF01 = str(Path(SF_SMOKE).with_name("sf0.1"))  # the audit's scale, next to the smoke set
 MB = 1024 * 1024
 Q21 = "q21_waiting_suppliers"
 
