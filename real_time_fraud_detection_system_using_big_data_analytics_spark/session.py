@@ -10,6 +10,12 @@ At 100 TB scale the same settings hold: AQE coalesces/re-splits shuffle
 partitions at runtime, the skew-join rewrite handles hot keys, and the
 broadcast threshold lets dimension tables (region/nation/customer at TPC-H
 proportions) broadcast instead of shuffling the fact table.
+
+Python workers fork from this package's own daemon module (``pydaemon``),
+which keeps each worker from re-reading Spark's zips and jar before every
+task. ``spark.python.daemon.module`` is a static setting, read once when
+the SparkContext starts, so only ``get_session`` can select it:
+``tune_existing`` cannot apply it to a session someone else built.
 """
 
 from __future__ import annotations
@@ -106,9 +112,20 @@ def bootstrap_vendored_protobuf() -> bool:
     return False
 
 
+# The directory holding this package. The worker daemon is started as
+# ``python -m <package>.pydaemon`` from the JVM's working directory, so the
+# package must be on the PYTHONPATH the JVM inherits at launch.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def get_session(app_name: str = "fraud-engine", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) a local SparkSession with scale-sane defaults."""
     n = cpus or default_parallelism()
+    pythonpath = os.environ.get("PYTHONPATH", "")
+    if _PACKAGE_PARENT not in pythonpath.split(os.pathsep):
+        os.environ["PYTHONPATH"] = os.pathsep.join(
+            p for p in (_PACKAGE_PARENT, pythonpath) if p
+        )
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
@@ -125,6 +142,7 @@ def get_session(app_name: str = "fraud-engine", cpus: int | None = None) -> Spar
         # Python DataSource pushFilters: Spark refuses to plan a reader
         # that implements it while this is false (sources/pysource.py)
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        .config("spark.python.daemon.module", f"{__package__}.pydaemon")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -4,15 +4,20 @@ rate-limit, profile), and the account-profile operator itself.
 
 Each rule is a pure per-batch step ``(state, pdf) -> (out_columns, state)``.
 ``keyed_state_fn`` turns a step into the ``(key, pdfs, GroupState)``
-function Spark calls, adding the ``user_id`` key column to every emitted
+function Spark calls: it folds all of a key's Arrow batches for one
+trigger as one frame, and adds the ``user_id`` key column to the emitted
 frame; ``keyed_state_stream`` keys the stream by user_id and attaches
 that function with no state timeout. Steps whose result depends
-on event order sort their batch by ``(ts_us, event_id)`` themselves.
+on event order sort their frame by ``(ts_us, event_id)`` themselves.
+Spark sorts a trigger's rows by key only, so when a key has more rows
+than ``spark.sql.execution.arrow.maxRecordsPerBatch`` its batches need not
+arrive in event order; one frame per trigger is what lets that sort see
+them all.
 Velocity and structuring share one trailing-window kernel and one buffer
 state schema (``trailing_window``, ``BUFFER_STATE_SCHEMA``).
 
 The profile keeps, per user, a fixed-width state (event count, value sum,
-max value) and emits the updated cumulative row once per Arrow batch — a
+max value) and emits the updated cumulative row once per trigger — a
 streaming materialized view of
 
     SELECT user_id, COUNT(*), SUM(value), MAX(value) FROM events GROUP BY 1
@@ -52,18 +57,18 @@ def keyed_state_fn(
     output_schema: T.StructType,
 ) -> Callable[[tuple, Iterable[pd.DataFrame], GroupState], Iterator[pd.DataFrame]]:
     """Wrap a per-batch step as the applyInPandasWithState function: read
-    the key's state (or ``init``), fold each non-empty Arrow batch through
-    ``step``, emit its columns plus ``user_id`` in schema order, store the
-    final state."""
+    the key's state (or ``init``), fold the key's non-empty Arrow batches
+    for this trigger through ``step`` as one frame, emit its columns plus
+    ``user_id`` in schema order, store the new state."""
     names = output_schema.fieldNames()
 
     def fn(
         key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         s = state.get if state.exists else init
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
+        frames = [pdf for pdf in pdfs if len(pdf)]
+        if frames:
+            pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
             cols, s = step(s, pdf)
             n = len(next(iter(cols.values())))
             cols["user_id"] = np.full(n, key[0], dtype=np.int64)

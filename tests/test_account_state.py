@@ -8,6 +8,8 @@ end-to-end stream==batch equality and the per-batch fold contract.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pandas as pd
 import pytest
 
@@ -83,14 +85,12 @@ def test_profile_fold_contract():
     assert out2["total_value_cents"].iloc[0] == 1600
     assert out2["max_value_cents"].iloc[0] == 1000
 
-    # two Arrow batches in one call: one row per batch, state carried
-    # between them, and the last row is the cumulative state
+    # two Arrow batches in one call (one trigger): folded as one frame,
+    # so one row per key per trigger, and it is the cumulative state
     batch3 = pd.DataFrame({"value": [0.5]})
     batch4 = pd.DataFrame({"value": [20.0, 0.25]})
-    out3, out4 = list(_profile_fn((7,), iter([batch3, batch4]), st))
-    assert out3["n_events"].iloc[0] == 5
-    assert out3["total_value_cents"].iloc[0] == 1650
-    assert list(out4.iloc[0]) == [7, 7, 3675, 2000]
+    (out34,) = list(_profile_fn((7,), iter([batch3, batch4]), st))
+    assert list(out34.iloc[0]) == [7, 7, 3675, 2000]
     assert st.get == (7, 3675, 2000)
 
 
@@ -167,3 +167,42 @@ def test_state_schema_widening_fails_loud(spark, tmp_path):
         run(widened, widened_fn)
     msg = str(exc_info.value)
     assert "state" in msg.lower() and "schema" in msg.lower(), msg
+
+
+def test_key_batches_fold_in_event_order_past_max_records(spark, sf_dir, tmp_path):
+    """One key's rows arrive in reverse event order within one trigger,
+    split over several Arrow batches by a lowered
+    ``maxRecordsPerBatch``: the order-dependent velocity and CUSUM steps
+    must still equal their registry oracles, because the driver folds the
+    key's batches as one frame before the step sorts it."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from tests.oracle_harness import TABLES, compare
+
+    import __spark_entry__ as entry
+
+    sf = Path(sf_dir)
+    events = pq.read_table(sf / "events.parquet")
+    hot = pc.mode(events["user_id"])[0]["mode"].as_py()
+    one_key = events.filter(pc.equal(events["user_id"], hot)).sort_by(
+        [("ts", "descending"), ("event_id", "descending")]
+    )
+    assert one_key.num_rows > 4 * 8
+    pq.write_table(one_key, tmp_path / "events.parquet")
+    for t in TABLES:
+        if t != "events":
+            (tmp_path / f"{t}.parquet").symlink_to(sf / f"{t}.parquet")
+
+    queries, oracles = entry.queries(), entry.oracle_sql()
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "8")
+    try:
+        for name in ("stream_velocity_stateful", "stream_cusum_drift_stateful"):
+            rep = compare(spark, queries[name], oracles[name], str(tmp_path))
+            assert rep["row_match"] and rep["col_match"] and rep["value_match"], (
+                name,
+                rep["first_diff"],
+            )
+    finally:
+        spark.conf.set(conf, prev)

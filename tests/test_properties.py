@@ -492,8 +492,8 @@ def _draw_chunks(data, rows):
 def _fold(data, fn, chunks):
     """Feed chunks through a keyed-state function as successive Arrow
     batches of one key, grouped at random cuts into micro-batches (one
-    call per micro-batch, so state is carried both between pdfs inside a
-    call and between calls); returns every emitted row."""
+    call per micro-batch, whose pdfs the driver folds as one frame; state
+    is carried between calls); returns every emitted row."""
     state = _FakeGroupState()
     n = len(chunks)
     cuts = [0, *sorted(set(data.draw(st.lists(st.integers(1, max(n - 1, 1)), max_size=3)))), n]
