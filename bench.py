@@ -694,7 +694,9 @@ def _changelog_sustained_line(
     import tempfile
 
     from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.replay import (
+        local_checkpoints,
         rocksdb_state,
+        session_conf,
         spool_stream,
     )
 
@@ -719,9 +721,10 @@ def _changelog_sustained_line(
         q.awaitTermination()
         return time.perf_counter() - t0
 
-    spark.conf.set(CHANGELOG_CONF, "true")
     try:
-        with rocksdb_state(spark):
+        with session_conf(spark, CHANGELOG_CONF, "true"), rocksdb_state(
+            spark
+        ), local_checkpoints(spark, ckpt):
             wall = run_once()
             ckpt_bytes = state_bytes = 0
             for root, _, files in os.walk(ckpt):
@@ -736,7 +739,6 @@ def _changelog_sustained_line(
             # the wall is dominated by state load (snapshot + changelog replay)
             recovery_wall = run_once()
     finally:
-        spark.conf.unset(CHANGELOG_CONF)
         import shutil as _shutil
 
         _shutil.rmtree(sink, ignore_errors=True)

@@ -2012,6 +2012,8 @@ def stream_incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFra
 
     from pyspark.sql import Window
 
+    from ..streaming.replay import local_checkpoints
+
     tbl, bound = lsh_shard_index(spark, sf_dir)
     d = load_tables(spark, sf_dir, names=("documents",))["documents"]
     shard = d.filter(F.col("doc_id") * 10 >= _SHARD_DECILES * bound)
@@ -2070,13 +2072,14 @@ def stream_incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFra
                 .parquet(sink)
             )
 
-        query = (
-            stream.writeStream.foreachBatch(probe_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+        with local_checkpoints(spark, ckpt):
+            query = (
+                stream.writeStream.foreachBatch(probe_batch)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            query.awaitTermination()
         batches = len(query.recentProgress)
         assert batches >= 2, f"expected a multi-batch ingest, got {batches}"
         res = spark.read.parquet(sink)

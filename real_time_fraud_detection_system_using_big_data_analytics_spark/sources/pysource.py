@@ -705,20 +705,23 @@ def stream_python_datasource_sink_roundtrip(
     import shutil
     import tempfile
 
+    from ..streaming.replay import local_checkpoints
+
     register_python_stream_datasource(spark)
     register_python_stream_sink_datasource(spark)
     out = tempfile.mkdtemp(prefix="pystream_sink_")
     ckpt = tempfile.mkdtemp(prefix="ckpt_pysink_")
     stream = spark.readStream.format("synthetic_events_stream").load()
     try:
-        q = (
-            stream.writeStream.format("synthetic_events_stream_sink")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with local_checkpoints(spark, ckpt):
+            q = (
+                stream.writeStream.format("synthetic_events_stream_sink")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     back = spark.read.parquet(out + "/batch-*.parquet")

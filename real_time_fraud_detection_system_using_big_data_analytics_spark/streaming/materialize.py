@@ -231,7 +231,7 @@ def stream_exactly_once_filesink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .replay import spool_event_chunks, spool_stream
+    from .replay import local_checkpoints, spool_event_chunks, spool_stream
 
     spool = spool_event_chunks(spark, sf_dir, 5)
     hold = tempfile.mkdtemp(prefix="xonce_hold_")
@@ -254,14 +254,15 @@ def stream_exactly_once_filesink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("value") * 100.0 + 0.5).cast("bigint").alias("value_cents"),
             )
         )
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with local_checkpoints(spark, ckpt):
+            q = (
+                out.writeStream.format("parquet")
+                .option("path", sink)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
 
     run_pass()  # chunks 1-3, then the query STOPS
     for i in (4, 5):

@@ -22,9 +22,14 @@ double-counted between batches, the comparison fails (a bug class the
 one-batch replay can never catch).
 
 This module is also the package's one stream runner: ``run_to_memory``
-states the trigger/sink/checkpoint contract (availableNow, memory sink,
-a checkpoint that is removed when the query ends unless the caller owns
-it) once for every hermetic stream query.
+states the trigger/sink/checkpoint contract once for every hermetic
+stream query: availableNow, memory sink, a checkpoint that is removed
+when the query ends unless the caller owns it, and a local checkpoint
+written through Hadoop's FileSystem API (``local_checkpoints``).
+Without the native Hadoop library, Spark's default ``FileContext``
+manager forks a ``readlink`` for every rename of a local checkpoint
+file; the FileSystem manager writes the same files (``.crc`` checksums
+included) with the same check-then-rename, minus the forks.
 """
 
 from __future__ import annotations
@@ -36,6 +41,7 @@ import shutil
 import tempfile
 import uuid
 from collections.abc import Callable, Iterator
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -44,6 +50,11 @@ from ..sources.tables import normalize_events
 
 _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 _ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+_CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def run_to_memory(
@@ -53,20 +64,22 @@ def run_to_memory(
     memory sink); returns (sink table, micro-batches executed). A
     checkpoint this function creates is removed once the query ends; pass
     ``checkpoint`` only when the caller reads it back afterwards, and it
-    then stays on disk."""
+    then stays on disk. The query writes its checkpoint under
+    :func:`local_checkpoints`."""
     own = checkpoint is None
     ckpt = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
     name = "mem_" + uuid.uuid4().hex[:12]
     try:
-        q = (
-            df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with local_checkpoints(df.sparkSession, ckpt):
+            q = (
+                df.writeStream.outputMode(output_mode)
+                .format("memory")
+                .queryName(name)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
         if own:
             shutil.rmtree(ckpt, ignore_errors=True)
@@ -74,19 +87,53 @@ def run_to_memory(
 
 
 @contextlib.contextmanager
-def rocksdb_state(spark: SparkSession) -> Iterator[None]:
-    """Run the queries started inside the block on the RocksDB state store
-    provider (read at query start), restoring the session's previous
-    provider afterwards."""
-    prev = spark.conf.get(_PROVIDER_CONF, None)
-    spark.conf.set(_PROVIDER_CONF, _ROCKSDB)
+def session_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set one session conf for the block, then restore the session's
+    previous value (or unset it) however the block ends."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
     try:
         yield
     finally:
         if prev is None:
-            spark.conf.unset(_PROVIDER_CONF)
+            spark.conf.unset(key)
         else:
-            spark.conf.set(_PROVIDER_CONF, prev)
+            spark.conf.set(key, prev)
+
+
+def rocksdb_state(spark: SparkSession) -> contextlib.AbstractContextManager:
+    """Run the queries started inside the block on the RocksDB state store
+    provider (read at query start), restoring the session's previous
+    provider afterwards."""
+    return session_conf(spark, _PROVIDER_CONF, _ROCKSDB)
+
+
+def local_checkpoints(
+    spark: SparkSession, checkpoint: str
+) -> contextlib.AbstractContextManager:
+    """Write the checkpoint of the queries started inside the block through
+    Hadoop's FileSystem API when ``checkpoint`` is on the local file system
+    (``file:``, or no scheme on a ``file:`` default file system) and the
+    session names no checkpoint file manager of its own; otherwise change
+    nothing.
+
+    For blocks that wait for an availableNow query over a checkpoint they
+    create: ``run_to_memory``, the exactly-once file-sink restart
+    (``materialize``), the streaming LSH probe (``dedup``), the Python
+    sink roundtrip (``pysource``) and ``bench.py``'s changelog line. Three
+    sites keep Spark's default ``FileContext`` manager, whose rename is
+    atomic on HDFS: the CDC ``start_merge_stream``, which returns a running
+    query; ``kafka_alert_sink``, whose checkpoint the caller names; and
+    ``cli.py``'s Kafka stream."""
+    scheme = urlparse(checkpoint).scheme
+    if not scheme:
+        default_fs = spark.sparkContext._jsc.hadoopConfiguration().get(
+            "fs.defaultFS", "file:///"
+        )
+        scheme = urlparse(default_fs).scheme
+    if scheme != "file" or spark.conf.get(_CHECKPOINT_MANAGER_CONF, None):
+        return contextlib.nullcontext()
+    return session_conf(spark, _CHECKPOINT_MANAGER_CONF, _FS_CHECKPOINT_MANAGER)
 
 
 def latest_per_key(df: DataFrame, order_col: str) -> DataFrame:
@@ -182,6 +229,7 @@ def chunked_replay(
     n_chunks: int = 5,
     output_mode: str = "append",
     spool: str | None = None,
+    checkpoint: str | None = None,
 ) -> tuple[DataFrame, int]:
     """Replay events through ``transform`` (stream-DF -> stream-DF) in
     ``n_chunks`` micro-batches; returns (result table, batches executed).
@@ -192,12 +240,15 @@ def chunked_replay(
     Pass ``spool`` (from :func:`spool_event_chunks`) to reuse a pre-built
     spool across replays — the bench does this so measured wall time is
     the STREAM's, not the chunk-writing setup's. A caller-provided spool
-    is left on disk; an internally-built one is removed."""
+    is left on disk; an internally-built one is removed. ``checkpoint``
+    is passed to :func:`run_to_memory`."""
     own_spool = spool is None
     if own_spool:
         spool = spool_event_chunks(spark, sf_dir, n_chunks)
     try:
-        return run_to_memory(transform(spool_stream(spark, spool)), output_mode)
+        return run_to_memory(
+            transform(spool_stream(spark, spool)), output_mode, checkpoint
+        )
     finally:
         if own_spool:
             shutil.rmtree(spool, ignore_errors=True)

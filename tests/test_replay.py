@@ -8,13 +8,22 @@ double-counted state would break the equality with the batch oracle.
 
 from __future__ import annotations
 
+import contextlib
+import re
+
+import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from real_time_fraud_detection_system_using_big_data_analytics_spark.sources.tables import (
     load_tables,
 )
+from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming import replay
 from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.replay import (
     chunked_replay,
+    local_checkpoints,
+    session_conf,
+    spool_event_chunks,
 )
 from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.velocity import (
     velocity_features_stream,
@@ -22,6 +31,12 @@ from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.v
 
 SF = "/root/testdata/sf0.001"
 N_CHUNKS = 4
+MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing"
+FS_MANAGER = f"{CHECKPOINTING}.FileSystemBasedCheckpointFileManager"
+# what Spark picks for a local path when the session names no manager
+FC_MANAGER = f"{CHECKPOINTING}.FileContextBasedCheckpointFileManager"
+UUID = re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")
 
 
 def test_chunked_replay_is_multi_batch_and_complete(spark):
@@ -82,3 +97,92 @@ def test_runner_removes_the_checkpoints_it_creates(spark, tmp_path, monkeypatch)
     assert out.count() > 0
     assert stream_cusum_drift_stateful(spark, SF).count() > 0
     assert not list(tmp_path.glob("ckpt*"))
+
+
+@pytest.mark.parametrize("runner", [True, False], ids=["runner", "spark_default"])
+def test_second_atomic_create_keeps_the_first_checkpoint_file(spark, tmp_path, runner):
+    """A checkpoint file is written once: a second ``createAtomic`` of the
+    same path without overwrite fails at ``close()`` and the first content
+    stays, under the runner's manager as under Spark's default."""
+    block = local_checkpoints(spark, str(tmp_path)) if runner else contextlib.nullcontext()
+    with block:
+        conf = spark._jsparkSession.sessionState().newHadoopConf()
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "offsets" / "0"))
+    fm = getattr(jvm, CHECKPOINTING).CheckpointFileManager.create(path.getParent(), conf)
+    assert fm.getClass().getName() == (FS_MANAGER if runner else FC_MANAGER)
+    fm.mkdirs(path.getParent())
+    first = fm.createAtomic(path, False)
+    first.write(b"first")
+    first.close()
+    second = fm.createAtomic(path, False)
+    second.write(b"second")
+    with pytest.raises(Py4JJavaError, match="FileAlreadyExistsException"):
+        second.close()
+    assert (tmp_path / "offsets" / "0").read_bytes() == b"first"
+
+
+def test_runner_manager_writes_the_same_checkpoint_files(spark, tmp_path):
+    """A stateful replay into a caller-owned checkpoint leaves the same
+    file names (offsets, commits, state deltas, ``.crc`` checksums,
+    metadata) under the runner's manager as under Spark's default, temp
+    UUIDs aside."""
+    spool = spool_event_chunks(spark, SF, 2, str(tmp_path / "spool"))
+    names = {}
+    for side, block in (
+        ("runner", contextlib.nullcontext()),
+        ("spark_default", session_conf(spark, MANAGER_CONF, FC_MANAGER)),
+    ):
+        ckpt = tmp_path / side
+        with block:
+            chunked_replay(
+                spark, SF, velocity_features_stream, 2, spool=spool, checkpoint=str(ckpt)
+            )
+        names[side] = {
+            UUID.sub("<uuid>", str(f.relative_to(ckpt))) for f in ckpt.rglob("*") if f.is_file()
+        }
+    assert names["runner"] == names["spark_default"]
+    assert {"offsets/1", "commits/1", "state/0/0/2.delta", "state/0/0/.2.delta.crc"} <= names["runner"]
+
+
+def test_runner_restores_the_session_checkpoint_manager(spark, tmp_path, monkeypatch):
+    """The runner's manager holds while its query runs and the session's
+    own value (unset, or one it names) is back once the query has ended,
+    also when the query fails."""
+    seen = []
+
+    @contextlib.contextmanager
+    def spy(session, checkpoint):
+        with local_checkpoints(session, checkpoint):
+            try:
+                yield
+            finally:
+                seen.append(session.conf.get(MANAGER_CONF, None))
+
+    monkeypatch.setattr(replay, "local_checkpoints", spy)
+    boom = F.udf(lambda v: 1 // 0, "long")
+    assert spark.conf.get(MANAGER_CONF, None) is None
+    out, _ = chunked_replay(spark, SF, lambda s: s.select("event_id"), 2)
+    assert out.count() > 0
+    assert seen == [FS_MANAGER]
+    assert spark.conf.get(MANAGER_CONF, None) is None
+    with pytest.raises(Exception, match="ZeroDivisionError"):
+        chunked_replay(spark, SF, lambda s: s.select(boom("value")), 2)
+    assert spark.conf.get(MANAGER_CONF, None) is None
+    with session_conf(spark, MANAGER_CONF, FC_MANAGER):
+        with pytest.raises(Exception, match="ZeroDivisionError"):
+            chunked_replay(spark, SF, lambda s: s.select(boom("value")), 2)
+        assert spark.conf.get(MANAGER_CONF) == FC_MANAGER
+    assert seen == [FS_MANAGER, FS_MANAGER, FC_MANAGER]
+    assert spark.conf.get(MANAGER_CONF, None) is None
+
+
+def test_non_local_checkpoint_keeps_sparks_default_manager(spark, tmp_path):
+    """Only a local checkpoint changes manager: an ``hdfs://`` path keeps
+    ``FileContext``'s atomic rename."""
+    with local_checkpoints(spark, "hdfs://namenode:8020/checkpoints/q1"):
+        assert spark.conf.get(MANAGER_CONF, None) is None
+    for local in (str(tmp_path), f"file://{tmp_path}"):
+        with local_checkpoints(spark, local):
+            assert spark.conf.get(MANAGER_CONF) == FS_MANAGER
+        assert spark.conf.get(MANAGER_CONF, None) is None

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.replay import (
     rocksdb_state,
+    session_conf,
 )
 
 
@@ -180,16 +181,8 @@ CHANGELOG_CONF = (
 
 @contextlib.contextmanager
 def rocksdb_changelog(spark):
-    prev = spark.conf.get(CHANGELOG_CONF, None)
-    spark.conf.set(CHANGELOG_CONF, "true")
-    try:
-        with rocksdb_state(spark):
-            yield
-    finally:
-        if prev is None:
-            spark.conf.unset(CHANGELOG_CONF)
-        else:
-            spark.conf.set(CHANGELOG_CONF, prev)
+    with session_conf(spark, CHANGELOG_CONF, "true"), rocksdb_state(spark):
+        yield
 
 
 def test_rocksdb_changelog_checkpoint_restart(spark, tmp_path):
