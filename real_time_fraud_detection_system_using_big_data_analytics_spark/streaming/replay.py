@@ -117,14 +117,10 @@ def local_checkpoints(
     session names no checkpoint file manager of its own; otherwise change
     nothing.
 
-    For blocks that wait for an availableNow query over a checkpoint they
-    create: ``run_to_memory``, the exactly-once file-sink restart
-    (``materialize``), the streaming LSH probe (``dedup``), the Python
-    sink roundtrip (``pysource``) and ``bench.py``'s changelog line. Three
-    sites keep Spark's default ``FileContext`` manager, whose rename is
-    atomic on HDFS: the CDC ``start_merge_stream``, which returns a running
-    query; ``kafka_alert_sink``, whose checkpoint the caller names; and
-    ``cli.py``'s Kafka stream."""
+    Wrap only a query the block waits on until its availableNow trigger
+    ends. A query that stays running keeps Spark's default manager: on an
+    open-loop stream the faster commits mean more, smaller triggers, and
+    CPU per event rises (ROADMAP item 3)."""
     scheme = urlparse(checkpoint).scheme
     if not scheme:
         default_fs = spark.sparkContext._jsc.hadoopConfiguration().get(
@@ -229,7 +225,6 @@ def chunked_replay(
     n_chunks: int = 5,
     output_mode: str = "append",
     spool: str | None = None,
-    checkpoint: str | None = None,
 ) -> tuple[DataFrame, int]:
     """Replay events through ``transform`` (stream-DF -> stream-DF) in
     ``n_chunks`` micro-batches; returns (result table, batches executed).
@@ -240,15 +235,12 @@ def chunked_replay(
     Pass ``spool`` (from :func:`spool_event_chunks`) to reuse a pre-built
     spool across replays — the bench does this so measured wall time is
     the STREAM's, not the chunk-writing setup's. A caller-provided spool
-    is left on disk; an internally-built one is removed. ``checkpoint``
-    is passed to :func:`run_to_memory`."""
+    is left on disk; an internally-built one is removed."""
     own_spool = spool is None
     if own_spool:
         spool = spool_event_chunks(spark, sf_dir, n_chunks)
     try:
-        return run_to_memory(
-            transform(spool_stream(spark, spool)), output_mode, checkpoint
-        )
+        return run_to_memory(transform(spool_stream(spark, spool)), output_mode)
     finally:
         if own_spool:
             shutil.rmtree(spool, ignore_errors=True)

@@ -22,8 +22,10 @@ from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming i
 from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.replay import (
     chunked_replay,
     local_checkpoints,
+    run_to_memory,
     session_conf,
     spool_event_chunks,
+    spool_stream,
 )
 from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.velocity import (
     velocity_features_stream,
@@ -135,8 +137,8 @@ def test_runner_manager_writes_the_same_checkpoint_files(spark, tmp_path):
     ):
         ckpt = tmp_path / side
         with block:
-            chunked_replay(
-                spark, SF, velocity_features_stream, 2, spool=spool, checkpoint=str(ckpt)
+            run_to_memory(
+                velocity_features_stream(spool_stream(spark, spool)), "append", str(ckpt)
             )
         names[side] = {
             UUID.sub("<uuid>", str(f.relative_to(ckpt))) for f in ckpt.rglob("*") if f.is_file()
