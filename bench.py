@@ -256,9 +256,7 @@ HEADLINE = [
     "ann_ivf_incremental_add",
     "dedup_incremental_index_merge",
     "ann_ivf_delete_compact",
-    # r13 opt round: the refit-drift audit joins the measured harness (the
-    # lambda-sweep gate requires every lambda-filter lead to be banded by a
-    # measured Spark wall; its ORACLE_SF01 wall is DuckDB-dominated)
+    # r13 opt round: the refit-drift audit joins the measured harness
     "ann_ivf_refit_drift",
 ]
 
@@ -374,6 +372,7 @@ def main() -> None:
     # carries the recent runs' totals so the judge reads the BAND, not one
     # draw. Subset/smoke runs don't pollute the history.
     runs_history: list[dict] = []
+    cpus = spark.sparkContext.defaultParallelism
     if not subset:
         hist_path = Path(__file__).resolve().parent / "BENCH_RUNS.jsonl"
         entry = {
@@ -383,12 +382,16 @@ def main() -> None:
             "shared28_median": shared28_median,
             "shared28_cold": shared28_cold,
             "n_queries": len(times),
+            "cpus": cpus,
         }
         with hist_path.open("a") as fh:
             fh.write(json.dumps(entry) + "\n")
         with hist_path.open() as fh:
             all_runs = [json.loads(line) for line in fh if line.strip()]
-        runs_history = [r for r in all_runs if r.get("sf") == sf][-5:]
+        # like with like: runs without a cpus field were taken at local[32]
+        runs_history = [
+            r for r in all_runs if r.get("sf") == sf and r.get("cpus") == cpus
+        ][-5:]
 
     # Reference-defined metrics (BASELINE.md): the quantities the
     # reference's own instrumentation measures, re-measured on our engine
@@ -430,6 +433,7 @@ def main() -> None:
         "shared28_min_runs": [r["shared28_min"] for r in runs_history],
         "sf": sf,
         "n_queries": len(times),
+        "cpus": cpus,
         "reference_metrics": ref_metrics,
         "streaming": streaming,
     }
@@ -500,8 +504,9 @@ def streaming_bench(spark, sf_dir: str) -> dict:
             ("stream_rule_alerts", rule_alerts, N_STREAM_CHUNKS, spool),
             ("stream_velocity_stateful", velocity_features_stream, N_STREAM_CHUNKS, spool),
             # same operator, one big batch: the per-micro-batch stateful
-            # machinery (~0.9 s/batch, BENCH_NOTES_r6.md) amortized away —
-            # read the 8-chunk line against this one, not in isolation
+            # machinery (~0.9 s/batch; BENCH_NOTES_r6.md, see git history
+            # at 4febbca) amortized away — read the 8-chunk line against
+            # this one, not in isolation
             ("stream_velocity_stateful_1batch", velocity_features_stream, 1, spool1),
             ("stream_cusum_drift_stateful", cusum_stream, N_STREAM_CHUNKS, spool),
         ):

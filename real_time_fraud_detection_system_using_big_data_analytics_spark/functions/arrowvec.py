@@ -78,15 +78,6 @@ def fold_dot_nm(A: np.ndarray, B: np.ndarray) -> np.ndarray:
     return acc
 
 
-def fold_dot_rows(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    """(n, d) x (n, d) -> (n,): per-row sequential fold dot."""
-    n, d = A.shape
-    acc = np.zeros(n)
-    for i in range(d):
-        acc += A[:, i] * B[:, i]
-    return acc
-
-
 def fold_self_dot(A: np.ndarray) -> np.ndarray:
     """(n, d) -> (n,): sequential fold of x*x (the `_norm` fold, unsquare-rooted)."""
     n, d = A.shape
@@ -547,53 +538,6 @@ def pq_encode(
                 batch.column(batch.schema.get_field_index(c)) for c in keep_cols
             ] + [codes_arr]
             yield pa.RecordBatch.from_arrays(cols, names=keep_cols + [out_col])
-
-    return src.mapInArrow(kernel, out_schema)
-
-
-def pair_scores(
-    df: DataFrame,
-    a_vec: str,
-    b_vec: str,
-    out_col: str,
-    keep: tuple[str, ...],
-    a_norm: str | None = None,
-    b_norm: str | None = None,
-) -> DataFrame:
-    """Per-row pair scorer for join outputs carrying two vector columns:
-    cosine (when norms given) or raw fold dot. Emits keep + out_col —
-    the vectors are dropped at the boundary so only the columns the
-    consumer needs cross back (guide §2.3 'project before the exchange')."""
-    in_cols = list(dict.fromkeys([*keep, a_vec, b_vec]))
-    if a_norm:
-        in_cols += [c for c in (a_norm, b_norm) if c not in in_cols]
-    src = df.select(*in_cols)
-
-    import pyspark.sql.types as T
-
-    out_schema = T.StructType(
-        [src.schema[c] for c in keep] + [T.StructField(out_col, T.DoubleType(), False)]
-    )
-    names = [*keep, out_col]
-
-    def kernel(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            A = list_to_mat(batch.column(batch.schema.get_field_index(a_vec)))
-            B = list_to_mat(batch.column(batch.schema.get_field_index(b_vec)))
-            s = fold_dot_rows(A, B)
-            if a_norm:
-                na = batch.column(batch.schema.get_field_index(a_norm)).to_numpy(
-                    zero_copy_only=False
-                )
-                nb = batch.column(batch.schema.get_field_index(b_norm)).to_numpy(
-                    zero_copy_only=False
-                )
-                s = s / (na * nb)
-            cols = [batch.column(batch.schema.get_field_index(c)) for c in keep]
-            cols.append(pa.array(s, pa.float64()))
-            yield pa.RecordBatch.from_arrays(cols, names=names)
 
     return src.mapInArrow(kernel, out_schema)
 

@@ -56,9 +56,3 @@ def rev_e4_sql(price: str, disc: str) -> str:
         f"(CAST(FLOOR({price} * 100 + 0.5) AS BIGINT)"
         f" * (100 - CAST(FLOOR({disc} * 100 + 0.5) AS BIGINT)))"
     )
-
-
-def register_udf_examples() -> None:  # pragma: no cover - imported for side effects
-    """Placeholder kept intentionally empty: engine policy is built-ins
-    first (SURVEY §2.8); the sanctioned Python escape hatches live in
-    operators/udf_surface.py with oracle-checked demonstrations."""

@@ -368,31 +368,6 @@ def _ivf_corpus(spark: SparkSession, sf_dir: str, centroids: list[list[float]]) 
     )
 
 
-def _ivf_query_side(
-    spark: SparkSession, sf_dir: str, centroids: list[list[float]], nprobe: int
-) -> DataFrame:
-    """(q_id, q_emb, q_norm, probe_cells): the 1%-sample query set with its
-    ``nprobe`` nearest cells as an (un-exploded) array."""
-    from .similarity import _norm
-
-    base = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-    return with_top_cells(
-        base.filter(F.col("vec_id") % 100 == 0).select(
-            "vec_id",
-            "embedding",
-            F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-        ),
-        centroids,
-        nprobe,
-        keep=("vec_id", "embedding"),
-    ).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        _norm("embedding").alias("q_norm"),
-        F.col("probe_cells").cast("array<bigint>").alias("probe_cells"),
-    )
-
-
 def _collect_probe_queries(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[int], list[list[float]]]:

@@ -185,7 +185,7 @@ def map_functions_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The JSON value is extracted with regexp_extract, not get_json_object:
     on this host Jackson-path JSON functions are erratically 10-100×
-    slower (measured host quirk; BENCH_NOTES), and the props payload is a single
+    slower (measured host quirk; perfbench/NOTES.md), and the props payload is a single
     flat key."""
     e = load_tables(spark, sf_dir, names=("events",))["events"]
     kv = F.regexp_extract("props", r'"k":\s*([0-9]+)', 1)
@@ -280,7 +280,7 @@ def json_parse_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     extension-dependent); both produce the same typed value.
 
     Note: Jackson-path JSON functions are fine at this frequency but are
-    kept OUT of hot loops on this host (measured quirk; BENCH_NOTES)."""
+    kept OUT of hot loops on this host (measured quirk; perfbench/NOTES.md)."""
     ev = load_tables(spark, sf_dir, names=("events",))["events"]
     from pyspark.sql import types as T
 

@@ -41,10 +41,6 @@ def _norm(a: str) -> Column:
     return F.sqrt(F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x))
 
 
-def _cosine(a: str, b: str) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 # dim-agnostic (generate_series bound = len of the actual array): the Spark
 # side folds over the full array with zip_with, so a hardcoded dim here
 # would turn an embedding-width drift in the testdata into an opaque value

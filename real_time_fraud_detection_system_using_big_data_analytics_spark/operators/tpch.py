@@ -30,12 +30,6 @@ from ..plans.registry import register
 from ..functions.scalars import rev_e4, rev_e4_sql
 from ..sources.tables import load_tables
 
-def _rev():
-    # built lazily: Column construction needs an active SparkContext, and
-    # registry.load_all() must import cleanly before any session exists
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
-
-
 def _ts(day: str):
     return F.lit(day).cast("timestamp_ntz")
 

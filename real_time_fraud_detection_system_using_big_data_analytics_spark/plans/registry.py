@@ -28,8 +28,8 @@ ORACLE: dict[str, str] = {}
 # but their registered form is a known scale-killer whose production twin
 # lives elsewhere (e.g. the uncapped wedge joins vs their _capped twins).
 # Harnesses that define the engine's headline posture (bench.py HEADLINE)
-# exclude these; the scale-slope, shuffle-audit and memory-pressure
-# harnesses keep them precisely BECAUSE they are the measured A/B baseline.
+# exclude these; the shuffle-audit and memory-pressure harnesses keep them
+# precisely BECAUSE they are the measured A/B baseline.
 DIAGNOSTIC: set[str] = set()
 
 

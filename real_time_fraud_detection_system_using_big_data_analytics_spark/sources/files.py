@@ -49,8 +49,3 @@ def write_parquet_partitioned(
     and dynamic partition pruning at 100 TB (write once, prune every
     query)."""
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def append_json_metrics(df: DataFrame, path: str) -> None:
-    """Metrics-edge writer (S14): small result frames to JSON lines."""
-    df.coalesce(1).write.mode("append").json(path)

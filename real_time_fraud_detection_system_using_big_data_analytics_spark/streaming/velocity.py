@@ -84,9 +84,9 @@ def velocity_features_join_stream(stream: DataFrame) -> DataFrame:
 
     Why this exists: it answers whether the applyInPandasWithState
     velocity's ~12.7k events/s bench line is a Python-protocol floor. The
-    committed A/B profile (BENCH_NOTES_r6.md) says mostly no: the floor
-    is ~0.9 s/micro-batch of engine-side stateful machinery that a pure-
-    JVM windowed agg pays too (~0.75 s/batch), and that this THREE-
+    A/B profile (BENCH_NOTES_r6.md, see git history at 4febbca) says mostly
+    no: the floor is ~0.9 s/micro-batch of engine-side stateful machinery
+    that a pure-JVM windowed agg pays too (~0.75 s/batch), and that this THREE-
     stateful-store chain pays three times over — so at the bench's 12.5k-
     event micro-batches this form is ~4× SLOWER than the pandas form,
     while a single-batch replay of the pandas form runs 65k events/s.

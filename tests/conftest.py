@@ -17,7 +17,7 @@ SF_CORRECT = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_session("engine-tests", cpus=8)
+    s = get_session("engine-tests")
     yield s
 
 

@@ -60,9 +60,8 @@ def main() -> int:
     # SPARK_GRAFT_SELFCHECK_QUERIES="a,b": re-run ONLY the named queries
     # and MERGE their fresh records into an existing artifact (summary
     # recomputed from the merged map) — the transparent mechanism for
-    # re-gating a fixed query without re-paying the full sweep (mirrors
-    # scale_slope's SPARK_GRAFT_SLOPE_QUERIES). The artifact never gets
-    # hand-edited; this script is the only writer.
+    # re-gating a fixed query without re-paying the full sweep. The
+    # artifact never gets hand-edited; this script is the only writer.
     subset_env = os.environ.get("SPARK_GRAFT_SELFCHECK_QUERIES")
     subset = {s.strip() for s in subset_env.split(",")} if subset_env else None
 

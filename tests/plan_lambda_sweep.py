@@ -13,27 +13,28 @@ documented in SURVEY 4.5:
 
 A hit is a LEAD, not a verdict: the lambda-filter is only a problem when
 the stage it lands in is low-parallelism AND the expression is expensive.
-Since r11 the cross-check against the measured artifacts is AUTOMATED:
-`classify_hits` joins every hit against BENCH_SELF.json walls and
-SCALING.json slopes and splits them into in-band (cheap and linear, or
-registry-tagged diagnostic baselines) vs out-of-band (expensive,
-supralinear, or unbenched) — tests/test_plan_sweep.py fails only on the
-out-of-band set, which is exactly the check that would have caught the
-r10 overlap-decontamination tax (18.7 s >> the 5 s wall band).
+`measure_leads` times every non-diagnostic lead live with `obs.profile`,
+at sf0.1 and on a 5x copy built by `tests/gen_sf.py`, and `classify_hits`
+splits the leads into in-band (cheap and linear, or registry-tagged
+diagnostic baselines) vs out-of-band (expensive, supralinear, or not
+measured) — tests/test_plan_sweep.py fails only on the out-of-band set,
+which is exactly the check that would have caught the r10
+overlap-decontamination tax (18.7 s >> the 5 s wall band).
 
-Usage: python tests/plan_lambda_sweep.py [sf_dir]   (construct-only; no jobs run)
+Usage: python tests/plan_lambda_sweep.py [sf_dir]   (sf_dir is swept; the
+leads are then timed at sf0.1 and 5x sf0.1)
 """
 
 from __future__ import annotations
 
-import json
 import re
 import sys
+import tempfile
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-REPO = Path(__file__).resolve().parent.parent
+from tests.gen_sf import SRC, build_sf
 
 # families whose construction executes work or needs services; the sweep is
 # about declarative batch plans (same exclusion rationale as test_plans.py)
@@ -43,13 +44,8 @@ SKIP_PREFIXES = (
 
 # in-band limits: a lambda-filter lead is actionable only when the query is
 # measurably expensive (wall at sf0.1 above the band every healthy headline
-# query sits in) or measurably supralinear (slope-twin ratio at 5x data).
-# Queries outside bench.py's curated headline set are banded by the
-# FULL-registry self-oracle wall instead (ORACLE_SF01: Spark + DuckDB
-# combined, hence the looser bound — the r10 overlap tax at 18.7 s
-# Spark-side alone would still trip it).
+# query sits in) or measurably supralinear (wall ratio at 5x data).
 WALL_BOUND_SEC = 5.0
-ORACLE_WALL_BOUND_SEC = 12.0
 # slope5 reads ~5 at 5x data for a genuinely LINEAR query (SCALING.md);
 # the bound must sit above that or a healthy linear lambda-filter query
 # gets classified out-of-band (r12 ADVICE — the old 4.0 only worked
@@ -57,6 +53,9 @@ ORACLE_WALL_BOUND_SEC = 12.0
 # leaves linear+noise in-band while still catching the quadratics
 # (13.9-26.5 at 5x).
 SLOPE_BOUND = 7.0
+# warm samples per wall after one warm-up run; their min is the statistic
+# bench.py commits
+WARM_SAMPLES = 3
 
 # a line that STARTS a new plan node: optional tree-drawing prefix
 # (": ", "|  ", spaces) then a branch marker "+- " / ":- ", or the
@@ -113,71 +112,74 @@ def sweep(spark, queries: dict, sf_dir: str) -> tuple[list[tuple[str, int]], lis
     return hits, errors
 
 
+def measure_wall(spark, name: str, fn, sf_dir: str) -> float:
+    """One warm-up run, then the min of WARM_SAMPLES warm build + exec
+    walls of ``fn(spark, sf_dir)`` through a noop sink."""
+    from real_time_fraud_detection_system_using_big_data_analytics_spark import obs
+
+    def wall() -> float:
+        rec = obs.profile(spark, name, fn, sf_dir)
+        return rec["build_s"] + rec["exec_s"]
+
+    wall()
+    return min(wall() for _ in range(WARM_SAMPLES))
+
+
+def measure_leads(
+    spark, queries: dict, hits: list[tuple[str, int]], diagnostic: set[str], work_dir: str
+) -> dict[str, dict[str, float] | Exception]:
+    """Live evidence for every non-diagnostic lead: ``{"wall": s, "slope5":
+    wall(5x) / wall}`` with wall taken at sf0.1 and the 5x copy built under
+    ``work_dir``, or the exception that stopped the measurement."""
+    leads = [name for name, _ in hits if name not in diagnostic]
+    big_dir = build_sf(5, work_dir) if leads else None
+    out: dict[str, dict[str, float] | Exception] = {}
+    for name in leads:
+        try:
+            wall = measure_wall(spark, name, queries[name], SRC)
+            big = measure_wall(spark, name, queries[name], big_dir)
+            out[name] = {"wall": wall, "slope5": big / wall}
+        except Exception as exc:
+            out[name] = exc
+    return out
+
+
 def classify_hits(
     hits: list[tuple[str, int]],
-    bench_queries: dict[str, float],
-    scaling: dict[str, dict[str, float]],
+    measured: dict[str, dict[str, float] | Exception],
     diagnostic: set[str],
-    oracle_walls: dict[str, float] | None = None,
 ) -> tuple[list[str], list[str]]:
-    """Split sweep hits into (in_band, out_of_band) against the committed
-    artifacts. A hit is in-band when it is a registry-tagged diagnostic
-    baseline, or when its measured wall is under the band (BENCH_SELF
-    wall < WALL_BOUND_SEC for headline queries; ORACLE_SF01 combined wall
-    < ORACLE_WALL_BOUND_SEC for the rest of the registry) and its slope
-    twin (when one exists) is under SLOPE_BOUND. Hits with NO measured
-    artifact at all are out-of-band by design — a new lambda-filter query
-    must enter a measured harness before the lead can be dismissed."""
+    """Split sweep hits into (in_band, out_of_band). A hit is in-band when
+    it is a registry-tagged diagnostic baseline, or when its measured wall
+    is under WALL_BOUND_SEC and its slope5 under SLOPE_BOUND. A hit with no
+    measurement, or whose measurement raised, is out-of-band: the lead
+    cannot be dismissed without evidence."""
     in_band: list[str] = []
     out_of_band: list[str] = []
-    oracle_walls = oracle_walls or {}
     for name, n in hits:
         if name in diagnostic:
             in_band.append(f"{name} ({n} filters; diagnostic baseline)")
             continue
-        wall = bench_queries.get(name)
-        owall = oracle_walls.get(name)
-        pts = scaling.get(name) or {}
-        slope = (pts["5"] / pts["1"]) if ("5" in pts and "1" in pts and pts["1"]) else None
-        if slope is not None and slope > SLOPE_BOUND:
-            out_of_band.append(f"{name} ({n} filters; slope5 {slope:.2f} > {SLOPE_BOUND})")
-        elif wall is not None:
-            if wall > WALL_BOUND_SEC:
-                out_of_band.append(
-                    f"{name} ({n} filters; wall {wall:.2f}s > {WALL_BOUND_SEC}s)"
-                )
-            else:
-                tag = f"wall {wall:.2f}s" + (f", slope5 {slope:.2f}" if slope else "")
-                in_band.append(f"{name} ({n} filters; {tag})")
-        elif owall is not None:
-            if owall > ORACLE_WALL_BOUND_SEC:
-                out_of_band.append(
-                    f"{name} ({n} filters; oracle wall {owall:.2f}s "
-                    f"> {ORACLE_WALL_BOUND_SEC}s)"
-                )
-            else:
-                in_band.append(f"{name} ({n} filters; oracle wall {owall:.2f}s)")
+        m = measured.get(name)
+        if m is None:
+            out_of_band.append(f"{name} ({n} filters; UNMEASURED)")
+        elif isinstance(m, Exception):
+            out_of_band.append(
+                f"{name} ({n} filters; measurement raised {type(m).__name__}: {str(m)[:100]})"
+            )
+        elif m["slope5"] > SLOPE_BOUND:
+            out_of_band.append(
+                f"{name} ({n} filters; slope5 {m['slope5']:.2f} > {SLOPE_BOUND})"
+            )
+        elif m["wall"] > WALL_BOUND_SEC:
+            out_of_band.append(
+                f"{name} ({n} filters; wall {m['wall']:.2f}s > {WALL_BOUND_SEC}s)"
+            )
         else:
-            out_of_band.append(f"{name} ({n} filters; UNMEASURED — bench or gate it)")
+            in_band.append(
+                f"{name} ({n} filters; wall {m['wall']:.2f}s, slope5 {m['slope5']:.2f})"
+            )
     return in_band, out_of_band
-
-
-def load_artifacts() -> tuple[dict[str, float], dict[str, dict[str, float]], dict[str, float]]:
-    bench = json.loads((REPO / "BENCH_SELF.json").read_text())
-    scaling = json.loads((REPO / "SCALING.json").read_text())
-    oracle_walls: dict[str, float] = {}
-    latest, latest_round = None, -1
-    for cand in REPO.glob("ORACLE_SF01_r*.json"):
-        m = re.search(r"_r(\d+)\.json$", cand.name)
-        rnd = int(m.group(1)) if m else -1
-        if rnd > latest_round:
-            latest, latest_round = cand, rnd
-    if latest is not None:
-        data = json.loads(latest.read_text())
-        oracle_walls = {
-            k: v["sec"] for k, v in data.get("queries", {}).items() if "sec" in v
-        }
-    return bench.get("queries", {}), scaling, oracle_walls
 
 
 def main() -> int:
@@ -191,10 +193,9 @@ def main() -> int:
     hits, errors = sweep(spark, queries, sf_dir)
     for e in errors:
         print("ERR", e)
-    bench_q, scaling, oracle_walls = load_artifacts()
-    in_band, out_of_band = classify_hits(
-        hits, bench_q, scaling, registry.DIAGNOSTIC, oracle_walls
-    )
+    with tempfile.TemporaryDirectory() as work_dir:
+        measured = measure_leads(spark, queries, hits, registry.DIAGNOSTIC, work_dir)
+    in_band, out_of_band = classify_hits(hits, measured, registry.DIAGNOSTIC)
     for line in in_band:
         print("LAMBDA-FILTER in-band:", line)
     for line in out_of_band:

@@ -1,7 +1,7 @@
 """Measured shuffle/IO audit: per-query stage-metric totals at sf0.1.
 
-Wall-clock on this host is noisy (BENCH_NOTES: multi-second scheduler
-stalls), but SHUFFLE BYTES ARE NOT — they are determined by the physical
+Wall-clock on this host is noisy (multi-second scheduler stalls; see
+BENCH_NOTES_r8.md in git history at 4febbca), but SHUFFLE BYTES ARE NOT — they are determined by the physical
 plan and the data, reproducible to the byte across runs. This script turns
 the docstring scale claims ("the shuffle carries signatures, not
 documents", "only survivors reach the exact join", "at most k rows per

@@ -1033,7 +1033,7 @@ def test_forced_smj_degradation_oracle_green(spark, name):
     explicit F.broadcast() dim hints legitimately survive — a hint is a
     promise of boundedness, not a statistics guess), and the result still
     hash-matches the DuckDB oracle at sf0.01. Also run one-off at sf0.1
-    (BENCH_NOTES_r8.md)."""
+    (BENCH_NOTES_r8.md, see git history at 4febbca)."""
     from tests.oracle_harness import compare
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
