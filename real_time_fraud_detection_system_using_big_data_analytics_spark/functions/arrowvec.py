@@ -39,7 +39,6 @@ from typing import Iterator, Sequence
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def seq_dot_driver(a: Sequence[float], b: Sequence[float]) -> float:

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import register
-from ..functions.scalars import rev_e4, rev_e4_sql
+from ..functions.scalars import rev_e4
 from ..sources.tables import load_tables
 
 def _ts(day: str):

@@ -16,6 +16,15 @@ which keeps each worker from re-reading Spark's zips and jar before every
 task. ``spark.python.daemon.module`` is a static setting, read once when
 the SparkContext starts, so only ``get_session`` can select it:
 ``tune_existing`` cannot apply it to a session someone else built.
+
+The driver JVM that ``get_session`` launches starts from a static AppCDS
+archive in the user cache (``cds.py``), which halves its start-up: it maps
+class metadata instead of parsing and verifying ~15k classes. The first
+session without an archive records its class list, and the archive is
+built once, at that process's exit (about a minute). The archive is used
+only when the Spark conf directory holds nothing but ``*.template`` files;
+``-XX:+VerifySharedSpaces`` makes a damaged archive fall back to a normal
+start.
 """
 
 from __future__ import annotations
@@ -24,12 +33,16 @@ import os
 
 from pyspark.sql import SparkSession
 
+from . import cds
+
 
 def default_parallelism() -> int:
+    """``SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run on
+    (its affinity mask, which ``os.cpu_count`` ignores)."""
     env = os.environ.get("SPARK_GRAFT_CPUS")
     if env:
         return int(env)
-    return os.cpu_count() or 8
+    return len(os.sched_getaffinity(0))
 
 
 def default_driver_memory() -> str:
@@ -144,7 +157,10 @@ def get_session(app_name: str = "fraud-engine", cpus: int | None = None) -> Spar
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.python.daemon.module", f"{__package__}.pydaemon")
     )
-    spark = builder.getOrCreate()
+    with cds.driver_launch() as java_options:
+        if java_options:
+            builder = builder.config("spark.driver.defaultJavaOptions", java_options)
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -10,7 +10,6 @@ stable types) and distributed writers.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..ml.fraud_pipeline import PAYSIM_SCHEMA
