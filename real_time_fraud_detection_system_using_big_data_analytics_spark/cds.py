@@ -207,8 +207,14 @@ def build_at_exit(launch: Launch) -> None:
 def _build(launch: Launch, proc: subprocess.Popen, cmd: list[str], part: Path) -> None:
     """End the recording JVM (closing its stdin ends the py4j gateway),
     then dump and publish the archive, unless another process has."""
+    from pyspark import SparkContext
+
     try:
         if proc.poll() is None:
+            if SparkContext._active_spark_context is not None:
+                # stops the accumulator server, which would otherwise print
+                # an EOFError when the JVM closes its connection
+                SparkContext._active_spark_context.stop()
             proc.stdin.close()
             proc.wait(timeout=GATEWAY_EXIT_S)
         # only a JVM that exited by itself has flushed the whole class list
