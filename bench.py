@@ -545,9 +545,20 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
     lives across 10 production-size batches, not just within one.
     Single sample per stream (a 1M replay is long enough to average over
     host noise bursts on its own; min-of-N would add minutes)."""
-    import glob
     import shutil
     import tempfile
+
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.pipeline import (
+        rule_alerts,
+    )
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.replay import (
+        chunked_replay,
+        rocksdb_state,
+        write_chunk,
+    )
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.velocity import (
+        velocity_features_stream,
+    )
 
     # raw parquet ts may be TIMESTAMP_NTZ; normalize to TIMESTAMP under
     # the UTC session (chunked_replay passes TIMESTAMP spool files through)
@@ -564,32 +575,13 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
 
     spool = tempfile.mkdtemp(prefix="replay_1m_")
     for i in range(replicas):
-        part_dir = os.path.join(spool, f"_stage_{i}")
-        (
+        write_chunk(
             ev.withColumn(
                 "ts", F.timestamp_micros(F.unix_micros("ts") + i * shift_us)
-            )
-            .withColumn("event_id", F.col("event_id") + F.lit(i * idbase))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(part_dir)
+            ).withColumn("event_id", F.col("event_id") + F.lit(i * idbase)),
+            spool,
+            i,
         )
-        (part_file,) = glob.glob(os.path.join(part_dir, "part-*.parquet"))
-        dest = os.path.join(spool, f"chunk_{i:04d}.parquet")
-        shutil.move(part_file, dest)
-        shutil.rmtree(part_dir)
-        os.utime(dest, (1_600_000_000 + i, 1_600_000_000 + i))
-
-    from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.pipeline import (
-        rule_alerts,
-    )
-    from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.replay import (
-        chunked_replay,
-        rocksdb_state,
-    )
-    from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.velocity import (
-        velocity_features_stream,
-    )
 
     def windowed_agg(stream):
         # built-in streaming windowed aggregation: JVM state rows (one per
@@ -699,7 +691,7 @@ def _changelog_sustained_line(
     import tempfile
 
     from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.replay import (
-        local_checkpoints,
+        drain,
         rocksdb_state,
         session_conf,
         spool_stream,
@@ -714,22 +706,12 @@ def _changelog_sustained_line(
     def run_once() -> float:
         stream = spool_stream(spark, spool)
         t0 = time.perf_counter()
-        q = (
-            transform(stream)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        writer = transform(stream).writeStream.outputMode("append").format("parquet")
+        drain(spark, writer.option("path", sink), ckpt)
         return time.perf_counter() - t0
 
     try:
-        with session_conf(spark, CHANGELOG_CONF, "true"), rocksdb_state(
-            spark
-        ), local_checkpoints(spark, ckpt):
+        with session_conf(spark, CHANGELOG_CONF, "true"), rocksdb_state(spark):
             wall = run_once()
             ckpt_bytes = state_bytes = 0
             for root, _, files in os.walk(ckpt):

@@ -12,8 +12,9 @@ off and no event log.
   phases, execution (a noop-sink write) and those stage totals.
 
 Streaming queries run their micro-batches under their own run-id job group,
-so their stages are not attributed here; their progress events carry the
-per-trigger split instead (``streaming/observability.StatsListener``).
+so their stages are not attributed here. A blocking stream's per-trigger
+split comes from the progress records ``streaming/replay.drain`` returns
+(``durationMs`` phases, ``stateOperators``, ``numInputRows``).
 """
 
 from __future__ import annotations

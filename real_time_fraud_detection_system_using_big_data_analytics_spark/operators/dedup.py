@@ -252,12 +252,13 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-band collisions carry identical estimates, so one ``distinct``
     dedups them.
 
-    A/B vs the pre-391b009 self-join formulation (tests/ab_lsh_pairs.py,
-    idle box, sf0.1, interleaved min-of-5): 1.260 s vs 1.248 s — a
-    statistical tie at this scale; the round-to-round bench swings on this
-    line (0.82 s → 1.63 s) were host noise, not the rewrite. The bucket
-    form is kept for its scale posture: one signature-pipeline execution
-    instead of two (Spark reuses no exchange across a self-join)."""
+    A/B vs the pre-391b009 self-join formulation (tests/ab_lsh_pairs.py
+    in git history at 0d05915, idle box, sf0.1, interleaved min-of-5):
+    1.260 s vs 1.248 s — a statistical tie at this scale; the
+    round-to-round bench swings on this line (0.82 s → 1.63 s) were host
+    noise, not the rewrite. The bucket form is kept for its scale posture:
+    one signature-pipeline execution instead of two (Spark reuses no
+    exchange across a self-join)."""
     d = load_tables(spark, sf_dir, names=("documents",))["documents"]
     sigs = _signatures_spark(d)
     band_arr = F.array(
@@ -2005,14 +2006,13 @@ def stream_incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFra
     recomputed. Output is collected to an output-sized local relation
     (pairs, not documents) so the temp sink can be reclaimed — the same
     bounded-result convention as the audit queries."""
-    import glob
     import os
     import shutil
     import tempfile
 
     from pyspark.sql import Window
 
-    from ..streaming.replay import local_checkpoints
+    from ..streaming.replay import drain, write_chunk
 
     tbl, bound = lsh_shard_index(spark, sf_dir)
     d = load_tables(spark, sf_dir, names=("documents",))["documents"]
@@ -2025,19 +2025,7 @@ def stream_incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFra
         w = Window.orderBy("doc_id")
         chunked = shard.withColumn("_chunk", F.ntile(2).over(w))
         for i in (1, 2):
-            part_dir = os.path.join(spool, f"_stage_{i}")
-            (
-                chunked.filter(F.col("_chunk") == i)
-                .drop("_chunk")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part_dir)
-            )
-            (part_file,) = glob.glob(os.path.join(part_dir, "part-*.parquet"))
-            dest = os.path.join(spool, f"chunk_{i:04d}.parquet")
-            shutil.move(part_file, dest)
-            shutil.rmtree(part_dir)
-            os.utime(dest, (1_600_000_000 + i, 1_600_000_000 + i))
+            write_chunk(chunked.filter(F.col("_chunk") == i).drop("_chunk"), spool, i)
 
         schema = spark.read.parquet(os.path.join(spool, "chunk_0001.parquet")).schema
         stream = (
@@ -2072,15 +2060,7 @@ def stream_incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFra
                 .parquet(sink)
             )
 
-        with local_checkpoints(spark, ckpt):
-            query = (
-                stream.writeStream.foreachBatch(probe_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-        batches = len(query.recentProgress)
+        batches = len(drain(spark, stream.writeStream.foreachBatch(probe_batch), ckpt))
         assert batches >= 2, f"expected a multi-batch ingest, got {batches}"
         res = spark.read.parquet(sink)
         return spark.createDataFrame(res.collect(), res.schema)

@@ -705,7 +705,7 @@ def stream_python_datasource_sink_roundtrip(
     import shutil
     import tempfile
 
-    from ..streaming.replay import local_checkpoints
+    from ..streaming.replay import drain
 
     register_python_stream_datasource(spark)
     register_python_stream_sink_datasource(spark)
@@ -713,15 +713,11 @@ def stream_python_datasource_sink_roundtrip(
     ckpt = tempfile.mkdtemp(prefix="ckpt_pysink_")
     stream = spark.readStream.format("synthetic_events_stream").load()
     try:
-        with local_checkpoints(spark, ckpt):
-            q = (
-                stream.writeStream.format("synthetic_events_stream_sink")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(
+            spark,
+            stream.writeStream.format("synthetic_events_stream_sink").option("path", out),
+            ckpt,
+        )
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     back = spark.read.parquet(out + "/batch-*.parquet")

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..plans.registry import register
 from ..sources.tables import load_tables
+from .replay import drain, spool_event_chunks, spool_stream
 
 _POINTER = "_LATEST"
 
@@ -100,16 +101,16 @@ def apply_changes(
     return survivors.unionByName(upserts)
 
 
-def start_merge_stream(
+def merge_stream(
     changes_stream: DataFrame,
     snapshot_dir: str,
     checkpoint_dir: str,
     key: str,
     order_by: str,
     op_col: str = "op",
-    available_now: bool = True,
-):
-    """Run the change stream into the snapshot via foreachBatch.
+) -> list[dict]:
+    """Drain the change stream into the snapshot via foreachBatch
+    (:func:`replay.drain`); returns the query's per-trigger progress.
 
     Each batch writes snapshot version ``v{batch_id:09d}`` then commits
     the pointer. Replayed batches (restart between write and checkpoint
@@ -133,12 +134,8 @@ def start_merge_stream(
         )
         _commit(snapshot_dir, version)
 
-    writer = changes_stream.writeStream.foreachBatch(merge_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = changes_stream.writeStream.foreachBatch(merge_batch)
+    return drain(spark, writer, checkpoint_dir)
 
 
 @register(
@@ -187,11 +184,10 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("recursiveFileLookup", "true")
         .parquet(src)
     )
-    q = start_merge_stream(
+    merge_stream(
         stream, os.path.join(root, "snap"), os.path.join(root, "ckpt"),
         key="k", order_by="seq",
     )
-    q.awaitTermination()
     snapshot = read_snapshot(spark, os.path.join(root, "snap"))
     return snapshot.select("k", "bal")
 
@@ -231,8 +227,6 @@ def stream_exactly_once_filesink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .replay import local_checkpoints, spool_event_chunks, spool_stream
-
     spool = spool_event_chunks(spark, sf_dir, 5)
     hold = tempfile.mkdtemp(prefix="xonce_hold_")
     for i in (4, 5):
@@ -254,25 +248,13 @@ def stream_exactly_once_filesink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("value") * 100.0 + 0.5).cast("bigint").alias("value_cents"),
             )
         )
-        with local_checkpoints(spark, ckpt):
-            q = (
-                out.writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(spark, out.writeStream.format("parquet").option("path", sink), ckpt)
 
     run_pass()  # chunks 1-3, then the query STOPS
-    for i in (4, 5):
+    for i in (4, 5):  # shutil.move keeps write_chunk's pinned mtimes
         shutil.move(
             os.path.join(hold, f"chunk_{i:04d}.parquet"),
             os.path.join(spool, f"chunk_{i:04d}.parquet"),
-        )
-        os.utime(
-            os.path.join(spool, f"chunk_{i:04d}.parquet"),
-            (1_600_000_000 + i, 1_600_000_000 + i),
         )
     run_pass()  # restart from checkpoint: only chunks 4-5 are new
     back = spark.read.parquet(sink)

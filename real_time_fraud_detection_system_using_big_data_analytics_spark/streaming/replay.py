@@ -21,15 +21,18 @@ the result equals the batch formulation — if state is dropped or
 double-counted between batches, the comparison fails (a bug class the
 one-batch replay can never catch).
 
-This module is also the package's one stream runner: ``run_to_memory``
-states the trigger/sink/checkpoint contract once for every hermetic
-stream query: availableNow, memory sink, a checkpoint that is removed
-when the query ends unless the caller owns it, and a local checkpoint
-written through Hadoop's FileSystem API (``local_checkpoints``).
+This module is also the package's one blocking-stream runner.
+:func:`drain` states the contract once for every stream that runs to the
+end of its input: the availableNow trigger, the wait for the query to
+end, and a local checkpoint written through Hadoop's FileSystem API
+(:func:`local_checkpoints`). It returns the query's own per-trigger
+``StreamingQueryProgress`` records, so no Python listener is needed.
 Without the native Hadoop library, Spark's default ``FileContext``
 manager forks a ``readlink`` for every rename of a local checkpoint
 file; the FileSystem manager writes the same files (``.crc`` checksums
 included) with the same check-then-rename, minus the forks.
+:func:`run_to_memory` is :func:`drain` into a memory sink with a
+checkpoint that is removed when the query ends unless the caller owns it.
 """
 
 from __future__ import annotations
@@ -45,6 +48,7 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..sources.tables import normalize_events
 
@@ -57,33 +61,45 @@ _FS_CHECKPOINT_MANAGER = (
 )
 
 
+def drain(
+    spark: SparkSession, writer: DataStreamWriter, checkpoint: str
+) -> list[dict]:
+    """Run a configured stream writer (sink, output mode, query name) to
+    the end of its input: set its checkpoint location and the availableNow
+    trigger, start the query under :func:`local_checkpoints` and wait for
+    it to end. Returns the query's ``recentProgress``: one dict per
+    trigger with its ``numInputRows``, whole ``durationMs`` phase map and
+    ``stateOperators`` metrics. Spark keeps only the latest
+    ``spark.sql.streaming.numRecentProgressUpdates`` records (default
+    100), so a longer run returns that many, the last ones."""
+    with local_checkpoints(spark, checkpoint):
+        q = (
+            writer.option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return q.recentProgress
+
+
 def run_to_memory(
     df: DataFrame, output_mode: str, checkpoint: str | None = None
 ) -> tuple[DataFrame, int]:
-    """Drive a streaming DataFrame to completion (availableNow trigger,
-    memory sink); returns (sink table, micro-batches executed). A
-    checkpoint this function creates is removed once the query ends; pass
-    ``checkpoint`` only when the caller reads it back afterwards, and it
-    then stays on disk. The query writes its checkpoint under
-    :func:`local_checkpoints`."""
+    """:func:`drain` a streaming DataFrame into a memory sink; returns
+    (sink table, micro-batches executed, capped like :func:`drain`'s
+    records). A checkpoint this function creates is removed once the
+    query ends; pass ``checkpoint`` only when the caller reads it back
+    afterwards, and it then stays on disk."""
     own = checkpoint is None
     ckpt = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
     name = "mem_" + uuid.uuid4().hex[:12]
+    writer = df.writeStream.outputMode(output_mode).format("memory").queryName(name)
     try:
-        with local_checkpoints(df.sparkSession, ckpt):
-            q = (
-                df.writeStream.outputMode(output_mode)
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        progress = drain(df.sparkSession, writer, ckpt)
     finally:
         if own:
             shutil.rmtree(ckpt, ignore_errors=True)
-    return df.sparkSession.table(name), len(q.recentProgress)
+    return df.sparkSession.table(name), len(progress)
 
 
 @contextlib.contextmanager
@@ -117,10 +133,10 @@ def local_checkpoints(
     session names no checkpoint file manager of its own; otherwise change
     nothing.
 
-    Wrap only a query the block waits on until its availableNow trigger
-    ends. A query that stays running keeps Spark's default manager: on an
-    open-loop stream the faster commits mean more, smaller triggers, and
-    CPU per event rises (ROADMAP item 3)."""
+    :func:`drain` applies it to every query it runs, each of which ends
+    with its availableNow trigger. A query that stays running keeps
+    Spark's default manager: on an open-loop stream the faster commits
+    mean more, smaller triggers, and CPU per event rises (ROADMAP item 3)."""
     scheme = urlparse(checkpoint).scheme
     if not scheme:
         default_fs = spark.sparkContext._jsc.hadoopConfiguration().get(
@@ -166,24 +182,8 @@ def spool_event_chunks(
     w = Window.orderBy("ts", "event_id")
     chunked = ev.withColumn("_chunk", F.ntile(n_chunks).over(w))
     for i in range(1, n_chunks + 1):
-        part_dir = os.path.join(spool, f"_stage_{i}")
-        (
-            chunked.filter(F.col("_chunk") == i)
-            .drop("_chunk")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(part_dir)
-        )
-        (part_file,) = glob.glob(os.path.join(part_dir, "part-*.parquet"))
-        dest = os.path.join(spool, f"chunk_{i:04d}.parquet")
-        shutil.move(part_file, dest)
-        shutil.rmtree(part_dir)
-        # strictly increasing mtimes: the file source admits files in
-        # modification-time order, so this pins chunk order = batch order
-        os.utime(dest, (1_600_000_000 + i, 1_600_000_000 + i))
+        write_chunk(chunked.filter(F.col("_chunk") == i).drop("_chunk"), spool, i)
     for j in range(1, sentinel_chunks + 1):
-        idx = n_chunks + j
-        part_dir = os.path.join(spool, f"_stage_{idx}")
         # Each sentinel chunk carries one far-future row PER EVENT TYPE the
         # downstream query watermarks on: watermarks are computed on the
         # POST-FILTER watermark columns and the global watermark is the MIN
@@ -209,13 +209,22 @@ def spool_event_chunks(
                 F.lit("{}").alias("props"),
             )
             union = row if union is None else union.unionAll(row)
-        union.coalesce(1).write.mode("overwrite").parquet(part_dir)
-        (part_file,) = glob.glob(os.path.join(part_dir, "part-*.parquet"))
-        dest = os.path.join(spool, f"chunk_{idx:04d}.parquet")
-        shutil.move(part_file, dest)
-        shutil.rmtree(part_dir)
-        os.utime(dest, (1_600_000_000 + idx, 1_600_000_000 + idx))
+        write_chunk(union, spool, n_chunks + j)
     return spool
+
+
+def write_chunk(df: DataFrame, spool: str, i: int) -> None:
+    """Write ``df`` as the single file ``chunk_{i:04d}.parquet`` in
+    ``spool``, with modification time ``1_600_000_000 + i``. The file
+    source admits files in modification-time order, so strictly
+    increasing ``i`` pins chunk order = batch order."""
+    stage = os.path.join(spool, f"_stage_{i}")
+    df.coalesce(1).write.mode("overwrite").parquet(stage)
+    (part_file,) = glob.glob(os.path.join(stage, "part-*.parquet"))
+    dest = os.path.join(spool, f"chunk_{i:04d}.parquet")
+    shutil.move(part_file, dest)
+    shutil.rmtree(stage)
+    os.utime(dest, (1_600_000_000 + i, 1_600_000_000 + i))
 
 
 def chunked_replay(

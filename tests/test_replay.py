@@ -1,4 +1,5 @@
-"""Chunked multi-micro-batch replay (streaming/replay.py, S10).
+"""Chunked multi-micro-batch replay and the blocking-stream runner
+(streaming/replay.py, S10).
 
 The assertions here are the ones a single availableNow replay cannot make:
 the query really executes one micro-batch per chunk, and keyed state
@@ -15,21 +16,27 @@ import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
+from real_time_fraud_detection_system_using_big_data_analytics_spark.plans import registry
 from real_time_fraud_detection_system_using_big_data_analytics_spark.sources.tables import (
     load_tables,
 )
 from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming import replay
 from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.replay import (
     chunked_replay,
+    drain,
     local_checkpoints,
     run_to_memory,
     session_conf,
     spool_event_chunks,
     spool_stream,
 )
+from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.sources import (
+    events_file_stream,
+)
 from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.velocity import (
     velocity_features_stream,
 )
+from tests.oracle_harness import compare
 
 SF = "/root/testdata/sf0.001"
 N_CHUNKS = 4
@@ -39,6 +46,38 @@ FS_MANAGER = f"{CHECKPOINTING}.FileSystemBasedCheckpointFileManager"
 # what Spark picks for a local path when the session names no manager
 FC_MANAGER = f"{CHECKPOINTING}.FileContextBasedCheckpointFileManager"
 UUID = re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")
+
+
+@pytest.fixture
+def manager_spy(monkeypatch):
+    """Record the session's checkpoint manager at the end of every
+    ``local_checkpoints`` block the runner opens."""
+    seen = []
+
+    @contextlib.contextmanager
+    def spy(session, checkpoint):
+        with local_checkpoints(session, checkpoint):
+            try:
+                yield
+            finally:
+                seen.append(session.conf.get(MANAGER_CONF, None))
+
+    monkeypatch.setattr(replay, "local_checkpoints", spy)
+    return seen
+
+
+def test_drain_returns_each_triggers_progress(spark, tmp_path):
+    """The runner returns the engine's own per-trigger records: input rows
+    that add up to the table, the whole ``durationMs`` phase map, and the
+    state-operator metrics."""
+    counts = events_file_stream(spark, SF).groupBy("event_type").agg(F.count("*").alias("n"))
+    writer = counts.writeStream.outputMode("complete").format("memory").queryName("drain_progress")
+    progress = drain(spark, writer, str(tmp_path))
+    assert sum(p["numInputRows"] for p in progress) == 1000  # sf0.001 events row count
+    for p in progress:
+        assert {"triggerExecution", "addBatch", "walCommit"} <= set(p["durationMs"])
+    (op,) = progress[-1]["stateOperators"]
+    assert op["numRowsTotal"] == 5  # one state row per event_type
 
 
 def test_chunked_replay_is_multi_batch_and_complete(spark):
@@ -147,21 +186,11 @@ def test_runner_manager_writes_the_same_checkpoint_files(spark, tmp_path):
     assert {"offsets/1", "commits/1", "state/0/0/2.delta", "state/0/0/.2.delta.crc"} <= names["runner"]
 
 
-def test_runner_restores_the_session_checkpoint_manager(spark, tmp_path, monkeypatch):
+def test_runner_restores_the_session_checkpoint_manager(spark, manager_spy):
     """The runner's manager holds while its query runs and the session's
     own value (unset, or one it names) is back once the query has ended,
     also when the query fails."""
-    seen = []
-
-    @contextlib.contextmanager
-    def spy(session, checkpoint):
-        with local_checkpoints(session, checkpoint):
-            try:
-                yield
-            finally:
-                seen.append(session.conf.get(MANAGER_CONF, None))
-
-    monkeypatch.setattr(replay, "local_checkpoints", spy)
+    seen = manager_spy
     boom = F.udf(lambda v: 1 // 0, "long")
     assert spark.conf.get(MANAGER_CONF, None) is None
     out, _ = chunked_replay(spark, SF, lambda s: s.select("event_id"), 2)
@@ -177,6 +206,19 @@ def test_runner_restores_the_session_checkpoint_manager(spark, tmp_path, monkeyp
         assert spark.conf.get(MANAGER_CONF) == FC_MANAGER
     assert seen == [FS_MANAGER, FS_MANAGER, FC_MANAGER]
     assert spark.conf.get(MANAGER_CONF, None) is None
+
+
+def test_cdc_apply_writes_its_checkpoint_through_the_runner(spark, manager_spy):
+    """The registry's CDC stream drains through the runner, so its local
+    checkpoint goes through the FileSystem manager and the session's
+    manager is unset again afterwards; its result still equals the
+    oracle."""
+    registry.load_all()
+    name = "stream_cdc_apply"
+    rep = compare(spark, registry.QUERIES[name], registry.ORACLE[name], SF)
+    assert manager_spy == [FS_MANAGER]
+    assert spark.conf.get(MANAGER_CONF, None) is None
+    assert rep["row_match"] and rep["col_match"] and rep["value_match"], rep
 
 
 def test_non_local_checkpoint_keeps_sparks_default_manager(spark, tmp_path):

@@ -7,7 +7,6 @@ from __future__ import annotations
 import json
 import tempfile
 
-import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -273,8 +272,8 @@ def test_merge_stream_materializes_snapshot(spark, tmp_path):
 
     from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.materialize import (
         apply_changes,
+        merge_stream,
         read_snapshot,
-        start_merge_stream,
     )
 
     schema = T.StructType(
@@ -299,8 +298,7 @@ def test_merge_stream_materializes_snapshot(spark, tmp_path):
 
     def drain() -> None:
         stream = spark.readStream.schema(schema).parquet(str(src))
-        q = start_merge_stream(stream, snap, ckpt, key="k", order_by="seq")
-        q.awaitTermination()
+        merge_stream(stream, snap, ckpt, key="k", order_by="seq")
 
     def state() -> dict[int, float]:
         df = read_snapshot(spark, snap)
