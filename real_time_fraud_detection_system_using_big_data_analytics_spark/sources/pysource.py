@@ -718,12 +718,14 @@ def stream_python_datasource_sink_roundtrip(
             stream.writeStream.format("synthetic_events_stream_sink").option("path", out),
             ckpt,
         )
+        back = spark.read.parquet(out + "/batch-*.parquet")
+        result = back.groupBy("event_type").agg(
+            F.count("*").cast("bigint").alias("n"),
+            F.sum(F.round(F.col("value") * 10).cast("long")).cast("bigint").alias(
+                "sum_deci"
+            ),
+        )
+        return spark.createDataFrame(result.collect(), result.schema)
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
-    back = spark.read.parquet(out + "/batch-*.parquet")
-    return back.groupBy("event_type").agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum(F.round(F.col("value") * 10).cast("long")).cast("bigint").alias(
-            "sum_deci"
-        ),
-    )
+        shutil.rmtree(out, ignore_errors=True)

@@ -7,12 +7,22 @@ Each rule is a pure per-batch step ``(state, pdf) -> (out_columns, state)``.
 function Spark calls: it folds all of a key's Arrow batches for one
 trigger as one frame, and adds the ``user_id`` key column to the emitted
 frame; ``keyed_state_stream`` keys the stream by user_id and attaches
-that function with no state timeout. Steps whose result depends
-on event order sort their frame by ``(ts_us, event_id)`` themselves.
-Spark sorts a trigger's rows by key only, so when a key has more rows
-than ``spark.sql.execution.arrow.maxRecordsPerBatch`` its batches need not
-arrive in event order; one frame per trigger is what lets that sort see
-them all.
+that function with no state timeout.
+
+The frame a step receives:
+
+- *Columns:* exactly the builder's ``select`` minus ``ts``. A builder may
+  select the event-time ``ts`` for its ``withWatermark``;
+  ``keyed_state_stream`` drops it after the watermark, because no step
+  reads it and a timestamp column is the costliest Arrow-to-pandas
+  conversion per key. Steps read event time as the BIGINT ``ts_us``.
+- *Order:* a frame that carries ``ts_us`` reaches its step sorted by
+  ``(ts_us, event_id)``, by one numpy ``lexsort`` in ``keyed_state_fn``.
+  Spark sorts a trigger's rows by key only, so when a key has more rows
+  than ``spark.sql.execution.arrow.maxRecordsPerBatch`` its batches need
+  not arrive in event order; one frame per trigger is what lets the sort
+  see them all. A frame without ``ts_us`` (the profile's, whose fold is
+  order-free) is passed on in arrival order.
 Velocity and structuring share one trailing-window kernel and one buffer
 state schema (``trailing_window``, ``BUFFER_STATE_SCHEMA``).
 
@@ -58,7 +68,8 @@ def keyed_state_fn(
 ) -> Callable[[tuple, Iterable[pd.DataFrame], GroupState], Iterator[pd.DataFrame]]:
     """Wrap a per-batch step as the applyInPandasWithState function: read
     the key's state (or ``init``), fold the key's non-empty Arrow batches
-    for this trigger through ``step`` as one frame, emit its columns plus
+    for this trigger through ``step`` as one frame, sorted by
+    ``(ts_us, event_id)`` when it carries ``ts_us``, emit its columns plus
     ``user_id`` in schema order, store the new state."""
     names = output_schema.fieldNames()
 
@@ -69,6 +80,11 @@ def keyed_state_fn(
         frames = [pdf for pdf in pdfs if len(pdf)]
         if frames:
             pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+            if "ts_us" in pdf:
+                # pandas' multi-column sort_values costs ~5x this per key
+                pdf = pdf.take(
+                    np.lexsort((pdf["event_id"].to_numpy(), pdf["ts_us"].to_numpy()))
+                )
             cols, s = step(s, pdf)
             n = len(next(iter(cols.values())))
             cols["user_id"] = np.full(n, key[0], dtype=np.int64)
@@ -85,8 +101,15 @@ def keyed_state_stream(
     state_schema: T.StructType,
     output_mode: str = "append",
 ) -> DataFrame:
-    """Key ``prepared`` by user_id and attach the stateful function."""
-    return prepared.groupBy("user_id").applyInPandasWithState(
+    """Key ``prepared`` by user_id and attach the stateful function.
+    ``prepared``'s ``ts`` column, if any, is dropped here, after the
+    builder's ``withWatermark``: the watermark node stays in the plan, but
+    the column never reaches Python. That is safe while the state has no
+    timeout. Spark filters late rows out of a stateful operator's input
+    only under an event-time timeout, and only when the event-time column
+    reaches the operator, so an operator given an event-time timeout must
+    keep ``ts`` in its input."""
+    return prepared.drop("ts").groupBy("user_id").applyInPandasWithState(
         fn,
         outputStructType=output_schema,
         stateStructType=state_schema,

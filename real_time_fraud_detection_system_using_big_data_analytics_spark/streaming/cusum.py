@@ -58,7 +58,6 @@ def _cusum_step(state: tuple, pdf: pd.DataFrame) -> tuple[dict, tuple]:
     minimum.accumulate seeded with the carried min — identical int64
     algebra to the batch closed form."""
     prefix, min_prefix = state
-    pdf = pdf.sort_values(["ts_us", "event_id"])
     p = prefix + np.cumsum(to_cents(pdf["value"]) - REF_CENTS, dtype=np.int64)
     run_min = np.minimum.accumulate(np.minimum(p, min_prefix))
     s = p - np.minimum(run_min, 0)
@@ -104,7 +103,6 @@ def _structuring_step(state: tuple, pdf: pd.DataFrame) -> tuple[dict, tuple]:
     velocity's strictly-prior frame); alert rows are those with >= 2.
     Integer-cent sums, so the replay equals the batch RANGE frame
     bit-for-bit."""
-    pdf = pdf.sort_values(["ts_us", "event_id"])
     n, total, state = trailing_window(
         state,
         pdf["ts_us"].to_numpy(np.int64),

@@ -155,7 +155,10 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumed by a file-source stream, and merged into the versioned
     snapshot by foreachBatch. The returned snapshot is value-checked
     against the SQL that computes the same final state directly — i.e. the
-    oracle checks the incremental-view-maintenance invariant itself."""
+    oracle checks the incremental-view-maintenance invariant itself.
+    The (small) snapshot is collected before its temp directory is
+    removed."""
+    import shutil
     import tempfile
 
     base = (
@@ -174,22 +177,25 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("bal") + 1000.0).alias("bal"), F.lit(2).alias("seq"))
     )
     root = tempfile.mkdtemp(prefix="cdc_apply_")
-    src = os.path.join(root, "changes")
-    wave1.write.mode("overwrite").parquet(os.path.join(src, "w1"))
-    deletes.unionByName(updates).write.mode("overwrite").parquet(
-        os.path.join(src, "w2")
-    )
-    stream = (
-        spark.readStream.schema("k bigint, op string, bal double, seq int")
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
-    merge_stream(
-        stream, os.path.join(root, "snap"), os.path.join(root, "ckpt"),
-        key="k", order_by="seq",
-    )
-    snapshot = read_snapshot(spark, os.path.join(root, "snap"))
-    return snapshot.select("k", "bal")
+    try:
+        src = os.path.join(root, "changes")
+        wave1.write.mode("overwrite").parquet(os.path.join(src, "w1"))
+        deletes.unionByName(updates).write.mode("overwrite").parquet(
+            os.path.join(src, "w2")
+        )
+        stream = (
+            spark.readStream.schema("k bigint, op string, bal double, seq int")
+            .option("recursiveFileLookup", "true")
+            .parquet(src)
+        )
+        merge_stream(
+            stream, os.path.join(root, "snap"), os.path.join(root, "ckpt"),
+            key="k", order_by="seq",
+        )
+        snapshot = read_snapshot(spark, os.path.join(root, "snap")).select("k", "bal")
+        return spark.createDataFrame(snapshot.collect(), snapshot.schema)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(
@@ -250,18 +256,20 @@ def stream_exactly_once_filesink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         drain(spark, out.writeStream.format("parquet").option("path", sink), ckpt)
 
-    run_pass()  # chunks 1-3, then the query STOPS
-    for i in (4, 5):  # shutil.move keeps write_chunk's pinned mtimes
-        shutil.move(
-            os.path.join(hold, f"chunk_{i:04d}.parquet"),
-            os.path.join(spool, f"chunk_{i:04d}.parquet"),
+    try:
+        run_pass()  # chunks 1-3, then the query STOPS
+        for i in (4, 5):  # shutil.move keeps write_chunk's pinned mtimes
+            shutil.move(
+                os.path.join(hold, f"chunk_{i:04d}.parquet"),
+                os.path.join(spool, f"chunk_{i:04d}.parquet"),
+            )
+        run_pass()  # restart from checkpoint: only chunks 4-5 are new
+        back = spark.read.parquet(sink)
+        result = back.groupBy("event_type").agg(
+            F.count("*").alias("n_events"),
+            F.sum("value_cents").alias("total_cents"),
         )
-    run_pass()  # restart from checkpoint: only chunks 4-5 are new
-    back = spark.read.parquet(sink)
-    result = back.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        F.sum("value_cents").alias("total_cents"),
-    )
-    for d in (spool, hold, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    return result
+        return spark.createDataFrame(result.collect(), result.schema)
+    finally:
+        for d in (spool, hold, sink, ckpt):
+            shutil.rmtree(d, ignore_errors=True)

@@ -64,7 +64,6 @@ def _ratelimit_step(state: tuple, pdf: pd.DataFrame) -> tuple[dict, tuple]:
     a key's life has zero elapsed time (matches the oracle's
     COALESCE(LAG, own ts))."""
     last_ts, prefix, run_max = state
-    pdf = pdf.sort_values(["ts_us", "event_id"])
     ts = pdf["ts_us"].to_numpy(np.int64)
     prev = np.concatenate([[ts[0] if last_ts is None else last_ts], ts[:-1]])
     d = (ts - prev) // 1_000_000 * REFILL_MILLI_PER_SEC - COST_MILLI

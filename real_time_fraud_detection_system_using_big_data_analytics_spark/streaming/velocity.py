@@ -46,7 +46,6 @@ def _velocity_step(state: tuple, pdf: pd.DataFrame) -> tuple[dict, tuple]:
     (ts, event_id) order. Values are quantized to int64 CENTS per row
     before the prefix sum (same rule as the join-windowed twin), so both
     velocity twins share one integer-cents oracle verbatim."""
-    pdf = pdf.sort_values(["ts_us", "event_id"])
     ts = pdf["ts_us"].to_numpy(np.int64)
     n, total, state = trailing_window(
         state, ts, to_cents(pdf["value"]), WINDOW_US, include_self=False

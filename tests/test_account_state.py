@@ -206,3 +206,81 @@ def test_key_batches_fold_in_event_order_past_max_records(spark, sf_dir, tmp_pat
             )
     finally:
         spark.conf.set(conf, prev)
+
+
+def test_step_frame_has_no_ts_and_is_in_event_order(spark, sf_dir, tmp_path):
+    """A spy step run through ``keyed_state_stream`` over one chunk whose
+    rows arrive in reverse event order, with every key split over several
+    Arrow batches by a lowered ``maxRecordsPerBatch``: each call sees the
+    key's whole trigger as one frame, without the watermark's ``ts``
+    column, sorted by ``(ts_us, event_id)``."""
+    import numpy as np
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.account_state import (
+        keyed_state_fn,
+        keyed_state_stream,
+    )
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.replay import (
+        run_to_memory,
+        spool_stream,
+        write_chunk,
+    )
+
+    spy_schema = T.StructType(
+        [
+            T.StructField("user_id", T.LongType()),
+            T.StructField("event_id", T.LongType()),
+            T.StructField("ts_us", T.LongType()),
+            T.StructField("pos", T.LongType()),
+            T.StructField("frame_rows", T.LongType()),
+            T.StructField("columns", T.StringType()),
+        ]
+    )
+
+    def spy(state, pdf):
+        n = len(pdf)
+        out = {
+            "event_id": pdf["event_id"].to_numpy(np.int64),
+            "ts_us": pdf["ts_us"].to_numpy(np.int64),
+            "pos": np.arange(n, dtype=np.int64),
+            "frame_rows": np.full(n, n, dtype=np.int64),
+            "columns": [",".join(pdf.columns)] * n,
+        }
+        return out, (state[0] + 1,)
+
+    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    write_chunk(
+        events.orderBy(F.col("ts").desc(), F.col("event_id").desc()), str(tmp_path), 1
+    )
+    prepared = (
+        spool_stream(spark, str(tmp_path))
+        .select("user_id", "event_id", F.unix_micros("ts").alias("ts_us"), "ts")
+        .withWatermark("ts", "1 hour")
+    )
+    stream = keyed_state_stream(
+        prepared,
+        keyed_state_fn(spy, (0,), spy_schema),
+        spy_schema,
+        T.StructType([T.StructField("calls", T.LongType())]),
+    )
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "8")
+    try:
+        rows = run_to_memory(stream, "append")[0].collect()
+    finally:
+        spark.conf.set(conf, prev)
+
+    assert len(rows) == events.count()
+    assert {r["columns"] for r in rows} == {"user_id,event_id,ts_us"}
+    by_key = {}
+    for r in rows:
+        by_key.setdefault(r["user_id"], []).append(r)
+    for key, frame in by_key.items():
+        # one trigger, so one call per key, larger than one Arrow batch
+        assert {r["frame_rows"] for r in frame} == {len(frame)}, key
+        assert len(frame) > 8, key
+        seen = [(r["ts_us"], r["event_id"]) for r in sorted(frame, key=lambda r: r["pos"])]
+        assert seen == sorted(seen), key

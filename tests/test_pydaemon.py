@@ -6,13 +6,16 @@ These tests count ``zipimport._read_directory`` calls around that call
 inside a worker: the archives on the daemon's start-up path (Spark's
 zips and jar, from the ``PYTHONPATH`` the workers inherit) must not be
 re-read, while a zip added later by ``addPyFile`` still is, and its
-module still imports. A last test starts a session from a directory
+module still imports. The last tests start a session from a directory
 that does not hold the checkout, so the daemon module must come from the
-``PYTHONPATH`` that ``get_session`` exports.
+``PYTHONPATH`` that ``get_session`` exports; in that fresh session the
+first Python task is a plain RDD map, whose worker must have forked from
+a daemon that imported pandas and froze its heap.
 """
 
 from __future__ import annotations
 
+import ast
 import json
 import os
 import subprocess
@@ -21,6 +24,7 @@ import zipfile
 from pathlib import Path
 
 import pandas as pd
+import pytest
 from pyspark.sql import types as T
 
 REPO = Path(__file__).resolve().parent.parent
@@ -124,6 +128,12 @@ from %(package)s import get_session
 
 spark = get_session("pydaemon-cwd", cpus=1)
 
+def frozen(_):
+    import gc, sys
+    return gc.get_freeze_count(), "pandas" in sys.modules
+
+print("PYDAEMON_FREEZE", spark.sparkContext.parallelize([0], 1).map(frozen).collect())
+
 def double(pdf):
     return pdf.assign(v=pdf["v"] * 2)
 
@@ -134,7 +144,11 @@ spark.stop()
 """
 
 
-def test_session_started_outside_the_checkout_runs_python_tasks(tmp_path):
+@pytest.fixture(scope="module")
+def child_session(tmp_path_factory):
+    """stdout lines of one session started outside the checkout, by
+    prefix, and the stdout and stderr tails for failure messages."""
+    tmp_path = tmp_path_factory.mktemp("pydaemon_cwd")
     env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
     inherited = env.get("PYTHONPATH", "").split(os.pathsep)
     env["PYTHONPATH"] = os.pathsep.join(
@@ -148,9 +162,22 @@ def test_session_started_outside_the_checkout_runs_python_tasks(tmp_path):
         cwd=str(tmp_path),
         env=env,
     )
-    line = next(
-        (ln for ln in proc.stdout.splitlines() if ln.startswith("PYDAEMON ")), None
-    )
-    assert line == "PYDAEMON [2, 4, 6]", (
-        f"stdout tail: {proc.stdout[-1500:]}\nstderr tail: {proc.stderr[-3000:]}"
-    )
+    lines = {
+        ln.split(" ", 1)[0]: ln for ln in proc.stdout.splitlines() if ln.startswith("PYDAEMON")
+    }
+    return lines, f"stdout tail: {proc.stdout[-1500:]}\nstderr tail: {proc.stderr[-3000:]}"
+
+
+def test_session_started_outside_the_checkout_runs_python_tasks(child_session):
+    lines, tails = child_session
+    assert lines.get("PYDAEMON") == "PYDAEMON [2, 4, 6]", tails
+
+
+def test_workers_fork_from_a_frozen_daemon_with_pandas_imported(child_session):
+    """``gc.get_freeze_count()`` is inherited from the daemon, and a plain
+    RDD task never imports pandas itself."""
+    lines, tails = child_session
+    line = lines.get("PYDAEMON_FREEZE")
+    assert line is not None, tails
+    ((freeze_count, has_pandas),) = ast.literal_eval(line.split(" ", 1)[1])
+    assert freeze_count > 0 and has_pandas, (line, tails)

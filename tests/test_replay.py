@@ -124,20 +124,24 @@ def test_velocity_state_survives_batch_boundaries(spark):
 
 
 def test_runner_removes_the_checkpoints_it_creates(spark, tmp_path, monkeypatch):
-    """Every hermetic stream run creates its checkpoint under the temp dir
-    and must remove it once the query ends: a chunked replay and a
-    registry stream query leave no ``ckpt*`` directory behind."""
+    """Every hermetic stream run creates its checkpoints, spools and sinks
+    under the temp dir and must remove them: a chunked replay and the
+    registry stream queries that write a file sink or a snapshot return
+    their results with the temp dir left empty."""
     import tempfile
 
-    from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.stateful_queries import (
-        stream_cusum_drift_stateful,
-    )
-
+    registry.load_all()
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     out, _ = chunked_replay(spark, SF, velocity_features_stream, 2)
     assert out.count() > 0
-    assert stream_cusum_drift_stateful(spark, SF).count() > 0
-    assert not list(tmp_path.glob("ckpt*"))
+    for name in (
+        "stream_cusum_drift_stateful",
+        "stream_exactly_once_filesink",
+        "stream_cdc_apply",
+        "stream_python_datasource_sink_roundtrip",
+    ):
+        assert registry.QUERIES[name](spark, SF).count() > 0, name
+        assert not list(tmp_path.iterdir()), (name, sorted(tmp_path.iterdir()))
 
 
 @pytest.mark.parametrize("runner", [True, False], ids=["runner", "spark_default"])
