@@ -129,6 +129,7 @@ def cmd_stream(args: argparse.Namespace) -> int:
         import tempfile
 
         from .ml.fraud_pipeline import PAYSIM_SCHEMA
+        from .session import scratch_root
         from .streaming.sources import kafka_alert_sink, kafka_json_stream
 
         stream = kafka_json_stream(spark, args.kafka, args.topic, PAYSIM_SCHEMA)
@@ -137,9 +138,8 @@ def cmd_stream(args: argparse.Namespace) -> int:
         alerts = scored.filter(scored["fraud_prediction"] == 1).select(
             "nameOrig", "nameDest", "amount", "fraud_prediction", "fraud_probability"
         )
-        sink = kafka_alert_sink(
-            alerts, args.kafka, args.alert_topic, tempfile.mkdtemp(prefix="ckpt_")
-        )
+        ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=scratch_root())
+        sink = kafka_alert_sink(alerts, args.kafka, args.alert_topic, ckpt)
         q = sink.start()
         q.awaitTermination()
         return 0

@@ -28,12 +28,16 @@ scanned once per iteration with no self-join anywhere.
 
 from __future__ import annotations
 
+import functools
+import tempfile
+
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalars import q, q_sql
 from ..plans.registry import register
+from ..session import scratch_root
 from ..sources.tables import fan_out, load_tables
 
 K = 8
@@ -197,11 +201,10 @@ def fit_centroids(vecs: DataFrame) -> list[list[float]]:
     return centroids
 
 
-_CENTROID_CACHE: dict[str, list[list[float]]] = {}
-
-
+@functools.cache
 def fitted_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
-    """The fitted coarse quantizer for ``sf_dir``, built once per process.
+    """The fitted coarse quantizer for ``sf_dir``, built once per
+    (session, sf_dir).
 
     An IVF index separates BUILD (k-means fit — expensive, once) from
     PROBE (per-query cell lookup — cheap, many). The probe queries reuse
@@ -211,11 +214,10 @@ def fitted_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     state means the cache holds bit-identical values to a fresh fit, so
     oracle results are unaffected. ``cluster_kmeans_embeddings`` remains
     UNCACHED — measuring the fit is that query's whole point."""
-    if sf_dir not in _CENTROID_CACHE:
-        vecs = _prepare_vecs(spark, sf_dir)
-        _CENTROID_CACHE[sf_dir] = fit_centroids(vecs)
-        vecs.unpersist()
-    return _CENTROID_CACHE[sf_dir]
+    vecs = _prepare_vecs(spark, sf_dir)
+    centroids = fit_centroids(vecs)
+    vecs.unpersist()
+    return centroids
 
 
 def _kmeans_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -648,25 +650,19 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_INDEX_CACHE: dict[str, str] = {}
-
-
+@functools.cache
 def ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the IVF index ON DISK: the cell-assigned corpus written
-    as parquet hive-partitioned by cell id, built once per (process,
+    as parquet hive-partitioned by cell id, built once per (session,
     sf_dir) like the fitted centroids it embeds. This is the production
     separation the in-memory probes only simulate: BUILD pays the k-means
     fit plus one partitioned write; every PROBE after that is a
     partition-pruned read of just the cells it needs."""
-    if sf_dir not in _IVF_INDEX_CACHE:
-        import tempfile
-
-        centroids = fitted_centroids(spark, sf_dir)
-        corpus = _ivf_corpus(spark, sf_dir, centroids)
-        path = tempfile.mkdtemp(prefix="ivf_index_")
-        corpus.write.mode("overwrite").partitionBy("cell").parquet(path)
-        _IVF_INDEX_CACHE[sf_dir] = path
-    return _IVF_INDEX_CACHE[sf_dir]
+    centroids = fitted_centroids(spark, sf_dir)
+    corpus = _ivf_corpus(spark, sf_dir, centroids)
+    path = tempfile.mkdtemp(prefix="ivf_index_", dir=scratch_root())
+    corpus.write.mode("overwrite").partitionBy("cell").parquet(path)
+    return path
 
 
 @register("ann_ivf_persisted_probe", oracle=_ivf_kmeans_oracle())
@@ -836,16 +832,13 @@ def fit_pq_codebooks(vecs: DataFrame) -> list[list[list[float]]]:
     return books
 
 
-_PQ_CACHE: dict[str, list[list[list[float]]]] = {}
-
-
+@functools.cache
 def fitted_pq(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
     """Build/probe split, same rationale as fitted_centroids."""
-    if sf_dir not in _PQ_CACHE:
-        vecs = _prepare_vecs(spark, sf_dir)
-        _PQ_CACHE[sf_dir] = fit_pq_codebooks(vecs)
-        vecs.unpersist()
-    return _PQ_CACHE[sf_dir]
+    vecs = _prepare_vecs(spark, sf_dir)
+    books = fit_pq_codebooks(vecs)
+    vecs.unpersist()
+    return books
 
 
 def _pq_slice_sql(expr: str, m: int) -> str:
@@ -1334,8 +1327,6 @@ def ann_ivf_pq_shortlist_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 9*(max+1), new = the rest, both derived from one bounded scalar.
 
 _IVF_BASE_DECILES = 9
-_IVF_INCR_CACHE: dict[str, str] = {}
-_BASE_CENTROID_CACHE: dict[str, list[list[float]]] = {}
 
 
 def _embed_bound(spark: SparkSession, sf_dir: str) -> int:
@@ -1343,28 +1334,29 @@ def _embed_bound(spark: SparkSession, sf_dir: str) -> int:
     return int(base.agg(F.max("vec_id")).first()[0]) + 1
 
 
+@functools.cache
 def fitted_centroids_base(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     """The coarse quantizer fitted on the BASE slice only (lowest 9 id
     deciles) — the frozen state the incremental add assigns against.
-    Cached per (process, sf_dir) like fitted_centroids; deterministic fit
+    Cached per (session, sf_dir) like fitted_centroids; deterministic fit
     + quantized state keeps it bit-identical to the oracle's base-
     restricted centroid chain."""
-    if sf_dir not in _BASE_CENTROID_CACHE:
-        bound = _embed_bound(spark, sf_dir)
-        base = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-        vecs = (
-            fan_out(base.filter(F.col("vec_id") * 10 < _IVF_BASE_DECILES * bound))
-            .select(
-                "vec_id",
-                F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-            )
-            .persist()
+    bound = _embed_bound(spark, sf_dir)
+    base = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
+    vecs = (
+        fan_out(base.filter(F.col("vec_id") * 10 < _IVF_BASE_DECILES * bound))
+        .select(
+            "vec_id",
+            F.transform("embedding", lambda x: x.cast("double")).alias("e"),
         )
-        _BASE_CENTROID_CACHE[sf_dir] = fit_centroids(vecs)
-        vecs.unpersist()
-    return _BASE_CENTROID_CACHE[sf_dir]
+        .persist()
+    )
+    centroids = fit_centroids(vecs)
+    vecs.unpersist()
+    return centroids
 
 
+@functools.cache
 def ivf_incremental_index_path(spark: SparkSession, sf_dir: str) -> str:
     """BUILD the persisted IVF index on the base slice, then ADD the new
     batch: assign new vectors to the FROZEN base centroids (map-only, no
@@ -1375,24 +1367,20 @@ def ivf_incremental_index_path(spark: SparkSession, sf_dir: str) -> str:
     probes stay consistent (the parquet twin of the WAP pattern in
     etl_wap_publish). tests/test_incremental_index.py proves read-back
     equality with a from-scratch rebuild on the same data."""
-    if sf_dir not in _IVF_INCR_CACHE:
-        import tempfile
-
-        bound = _embed_bound(spark, sf_dir)
-        cents = fitted_centroids_base(spark, sf_dir)
-        full = _ivf_corpus(spark, sf_dir, cents)
-        path = tempfile.mkdtemp(prefix="ivf_incr_index_")
-        # BUILD: base slice (the filter pushes below the map-only
-        # assignment to the parquet scan)
-        full.filter(F.col("vec_id") * 10 < _IVF_BASE_DECILES * bound).write.mode(
-            "overwrite"
-        ).partitionBy("cell").parquet(path)
-        # ADD: new batch, same frozen centroids, append-only
-        full.filter(F.col("vec_id") * 10 >= _IVF_BASE_DECILES * bound).write.mode(
-            "append"
-        ).partitionBy("cell").parquet(path)
-        _IVF_INCR_CACHE[sf_dir] = path
-    return _IVF_INCR_CACHE[sf_dir]
+    bound = _embed_bound(spark, sf_dir)
+    cents = fitted_centroids_base(spark, sf_dir)
+    full = _ivf_corpus(spark, sf_dir, cents)
+    path = tempfile.mkdtemp(prefix="ivf_incr_index_", dir=scratch_root())
+    # BUILD: base slice (the filter pushes below the map-only
+    # assignment to the parquet scan)
+    full.filter(F.col("vec_id") * 10 < _IVF_BASE_DECILES * bound).write.mode(
+        "overwrite"
+    ).partitionBy("cell").parquet(path)
+    # ADD: new batch, same frozen centroids, append-only
+    full.filter(F.col("vec_id") * 10 >= _IVF_BASE_DECILES * bound).write.mode(
+        "append"
+    ).partitionBy("cell").parquet(path)
+    return path
 
 
 def _ivf_incr_oracle() -> str:
@@ -1474,11 +1462,11 @@ def ann_ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- IVF index maintenance: DELETE via tombstones + targeted compaction ------
 
-_IVF_DEL_CACHE: dict[str, str] = {}
 _DELETE_MOD = 10
 _DELETE_RES = 7   # delete set = vec_id % 10 == 7 (~10% of the index)
 
 
+@functools.cache
 def ivf_delete_compact_path(spark: SparkSession, sf_dir: str) -> str:
     """The incremental index COPIED, then a delete batch (vec_id % 10 == 7
     — the GDPR-shaped erasure slice) applied in the two production
@@ -1499,18 +1487,16 @@ def ivf_delete_compact_path(spark: SparkSession, sf_dir: str) -> str:
     At 100 TB this is the erasure cost model to design for: deletes are
     metadata-sized until compaction, and compaction I/O is proportional
     to AFFECTED data, never index size."""
-    if sf_dir not in _IVF_DEL_CACHE:
-        import shutil
-        import tempfile
+    import os
+    import shutil
 
-        src = ivf_incremental_index_path(spark, sf_dir)
-        path = tempfile.mkdtemp(prefix="ivf_del_index_")
-        shutil.rmtree(path)
-        shutil.copytree(src, path)
-        tomb_path = ivf_apply_tombstones(spark, path)
-        ivf_compact_deletes(spark, path, tomb_path)
-        _IVF_DEL_CACHE[sf_dir] = path
-    return _IVF_DEL_CACHE[sf_dir]
+    src = ivf_incremental_index_path(spark, sf_dir)
+    root = tempfile.mkdtemp(prefix="ivf_del_index_", dir=scratch_root())
+    path = os.path.join(root, "index")
+    shutil.copytree(src, path)
+    tomb_path = ivf_apply_tombstones(spark, path)
+    ivf_compact_deletes(spark, path, tomb_path)
+    return path
 
 
 def ivf_apply_tombstones(spark: SparkSession, path: str) -> str:
@@ -1541,12 +1527,12 @@ def ivf_compact_deletes(spark: SparkSession, path: str, tomb_path: str) -> None:
     import glob
     import os
     import shutil
-    import tempfile
 
     tomb = spark.read.parquet(tomb_path)
     affected = [int(r["cell"]) for r in tomb.select("cell").distinct().collect()]
-    staging = tempfile.mkdtemp(prefix="ivf_compact_staging_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ivf_compact_staging_", dir=scratch_root()
+    ) as staging:
         survivors = (
             spark.read.parquet(path)
             .filter(F.col("cell").cast("bigint").isin(affected))
@@ -1559,8 +1545,6 @@ def ivf_compact_deletes(spark: SparkSession, path: str, tomb_path: str) -> None:
             staged = os.path.join(staging, f"cell={cell}")
             if os.path.isdir(staged):
                 shutil.move(staged, os.path.join(path, f"cell={cell}"))
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
     shutil.rmtree(tomb_path, ignore_errors=True)
 
 

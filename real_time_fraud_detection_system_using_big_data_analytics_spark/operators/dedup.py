@@ -22,11 +22,15 @@ Scale posture (100 TB):
 
 from __future__ import annotations
 
+import functools
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalars import q, q_sql
 from ..plans.registry import register
+from ..session import scratch_root
 from ..sources.tables import fan_out, load_tables
 
 N_SEEDS = 8          # minhash signature length
@@ -1614,7 +1618,6 @@ def dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SHARD_DECILES = 9        # corpus = lowest 9 deciles, shard = newest 1
 _ASSIGN_MIN_EST = 0.5     # cluster-assignment bound on the minhash estimate
-_LSH_INDEX_CACHE: dict[str, tuple[str, int]] = {}
 
 
 def _band_rows(sigs: DataFrame) -> DataFrame:
@@ -1636,36 +1639,34 @@ def _band_rows(sigs: DataFrame) -> DataFrame:
     )
 
 
+@functools.cache
 def lsh_shard_index(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     """(table name, id bound): the persisted corpus signature index for
-    ``sf_dir``, built once per process. The index holds the CORPUS side
-    only (doc_id*10 < 9*bound): band rows (doc_id, full signature,
-    bucket_key) written as a bucketed+sorted table on bucket_key, so every
-    future shard probe sort-merge-joins against it with no Exchange on
-    the index side (pinned in tests/test_plans.py). The signature arrays
+    ``sf_dir``, built once per (session, sf_dir). The index holds the
+    CORPUS side only (doc_id*10 < 9*bound): band rows (doc_id, full
+    signature, bucket_key) written as a bucketed+sorted table on
+    bucket_key, so every future shard probe sort-merge-joins against it
+    with no Exchange on the index side (pinned in tests/test_plans.py). The signature arrays
     ride IN the index so the probe can score est_jaccard without touching
     corpus text — the property that makes incremental dedup O(shard), not
     O(corpus)."""
-    if sf_dir not in _LSH_INDEX_CACHE:
-        import hashlib
-        import tempfile
+    import hashlib
 
-        d = load_tables(spark, sf_dir, names=("documents",))["documents"]
-        bound = int(d.agg(F.max("doc_id")).first()[0]) + 1
-        corpus = d.filter(F.col("doc_id") * 10 < _SHARD_DECILES * bound)
-        rows = _band_rows(_signatures_spark(corpus))
-        tbl = "lsh_sig_idx_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        path = tempfile.mkdtemp(prefix="lsh_index_")
-        (
-            rows.write.mode("overwrite")
-            .option("path", f"{path}/{tbl}")
-            .bucketBy(8, "bucket_key")
-            .sortBy("bucket_key")
-            .saveAsTable(tbl)
-        )
-        _LSH_INDEX_CACHE[sf_dir] = (tbl, bound)
-    return _LSH_INDEX_CACHE[sf_dir]
+    d = load_tables(spark, sf_dir, names=("documents",))["documents"]
+    bound = int(d.agg(F.max("doc_id")).first()[0]) + 1
+    corpus = d.filter(F.col("doc_id") * 10 < _SHARD_DECILES * bound)
+    rows = _band_rows(_signatures_spark(corpus))
+    tbl = "lsh_sig_idx_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    path = tempfile.mkdtemp(prefix="lsh_index_", dir=scratch_root())
+    (
+        rows.write.mode("overwrite")
+        .option("path", f"{path}/{tbl}")
+        .bucketBy(8, "bucket_key")
+        .sortBy("bucket_key")
+        .saveAsTable(tbl)
+    )
+    return tbl, bound
 
 
 def _incremental_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1818,7 +1819,6 @@ def dedup_incremental_shard_assign(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-_LSH_MERGED_CACHE: dict[str, str] = {}
 # positional hex arithmetic shared by both engines: value of the first 8
 # hex chars of an md5, summed row-wise into an order-free digest. 16^7 *
 # 15 * row_count stays far under int64 even at sf1 band-row counts.
@@ -1868,26 +1868,24 @@ def _index_digest_spark(rows: DataFrame) -> DataFrame:
     )
 
 
+@functools.cache
 def lsh_merged_index(spark: SparkSession, sf_dir: str) -> str:
     """The MERGED persisted signature index for ``sf_dir``: the corpus
     build (lowest 9 id deciles) plus the new shard's band rows APPENDED
-    as additional bucketed files — built once per process, like
+    as additional bucketed files — built once per (session, sf_dir), like
     lsh_shard_index. The append goes through the same
     bucketBy/sortBy/saveAsTable spec, so Spark routes the shard rows into
     the existing 8-bucket layout as NEW files per bucket; nothing already
     on disk is rewritten (tests/test_incremental_index.py pins the
     pre-append file set byte-identical) and the catalog keeps the
     bucketed metadata, so post-merge probes still join Exchange-free."""
-    if sf_dir not in _LSH_MERGED_CACHE:
-        import hashlib
-        import tempfile
+    import hashlib
 
-        tbl = "lsh_merged_idx_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        path = tempfile.mkdtemp(prefix="lsh_merged_")
-        write_corpus_index(spark, sf_dir, tbl, f"{path}/{tbl}")
-        append_shard_index(spark, sf_dir, tbl)
-        _LSH_MERGED_CACHE[sf_dir] = tbl
-    return _LSH_MERGED_CACHE[sf_dir]
+    tbl = "lsh_merged_idx_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    path = tempfile.mkdtemp(prefix="lsh_merged_", dir=scratch_root())
+    write_corpus_index(spark, sf_dir, tbl, f"{path}/{tbl}")
+    append_shard_index(spark, sf_dir, tbl)
+    return tbl
 
 
 def write_corpus_index(spark: SparkSession, sf_dir: str, tbl: str, path: str) -> None:
@@ -2007,8 +2005,6 @@ def stream_incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFra
     (pairs, not documents) so the temp sink can be reclaimed — the same
     bounded-result convention as the audit queries."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import Window
 
@@ -2018,10 +2014,8 @@ def stream_incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFra
     d = load_tables(spark, sf_dir, names=("documents",))["documents"]
     shard = d.filter(F.col("doc_id") * 10 >= _SHARD_DECILES * bound)
 
-    spool = tempfile.mkdtemp(prefix="doc_ingest_spool_")
-    sink = tempfile.mkdtemp(prefix="doc_ingest_sink_")
-    ckpt = tempfile.mkdtemp(prefix="doc_ingest_ckpt_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="doc_ingest_", dir=scratch_root()) as root:
+        spool, sink, ckpt = (os.path.join(root, p) for p in ("spool", "sink", "ckpt"))
         w = Window.orderBy("doc_id")
         chunked = shard.withColumn("_chunk", F.ntile(2).over(w))
         for i in (1, 2):
@@ -2064,7 +2058,3 @@ def stream_incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFra
         assert batches >= 2, f"expected a multi-batch ingest, got {batches}"
         res = spark.read.parquet(sink)
         return spark.createDataFrame(res.collect(), res.schema)
-    finally:
-        shutil.rmtree(spool, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink, ignore_errors=True)

@@ -19,25 +19,21 @@ Exchange on the join key.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import register
+from ..session import scratch_root
 from .warehouse import _CUTOFF
 from ..sources.files import write_parquet_partitioned
 from ..sources.tables import load_tables
 
-# One temp location per (process, purpose): repeated runs of the same query
-# in one session overwrite in place instead of leaking directories.
-_SCRATCH: dict[str, str] = {}
-
 
 def _scratch(purpose: str) -> str:
-    if purpose not in _SCRATCH:
-        _SCRATCH[purpose] = tempfile.mkdtemp(prefix=f"etl_{purpose}_")
-    return _SCRATCH[purpose]
+    path = os.path.join(scratch_root(), f"etl_{purpose}")
+    os.makedirs(path, exist_ok=True)
+    return path
 
 
 @register(

@@ -25,11 +25,24 @@ built once, at that process's exit (about a minute). The archive is used
 only when the Spark conf directory holds nothing but ``*.template`` files;
 ``-XX:+VerifySharedSpaces`` makes a damaged archive fall back to a normal
 start.
+
+Scratch data lives under one directory per process, ``scratch_root()``,
+removed at interpreter exit. A directory that dies with the call that made
+it is a ``tempfile.TemporaryDirectory(dir=scratch_root())``; a directory
+something still reads after the call (a lazy DataFrame a query returns, a
+memoized index) is a ``tempfile.mkdtemp(dir=scratch_root())``. The root has
+process lifetime because pyspark has no session-stop hook, every memo that
+points into it is per process, and every harness here runs one session per
+process.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -129,6 +142,16 @@ def bootstrap_vendored_protobuf() -> bool:
 # ``python -m <package>.pydaemon`` from the JVM's working directory, so the
 # package must be on the PYTHONPATH the JVM inherits at launch.
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@functools.cache
+def scratch_root() -> str:
+    """This process's scratch directory, made on first use (so a
+    ``tempfile.tempdir`` or ``TMPDIR`` set before then decides where it
+    lives) and removed at interpreter exit."""
+    root = tempfile.mkdtemp(prefix="spark_graft_scratch_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
 
 
 def get_session(app_name: str = "fraud-engine", cpus: int | None = None) -> SparkSession:

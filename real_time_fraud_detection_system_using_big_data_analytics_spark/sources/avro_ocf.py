@@ -629,12 +629,13 @@ def etl_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
+    from ..session import scratch_root
     from .tables import load_tables
 
     register_avro_datasource(spark)
     events = load_tables(spark, sf_dir, names=("events",))["events"]
     cols = ["event_id", "ts", "user_id", "event_type", "value"]
-    out = tempfile.mkdtemp(prefix="avro_rt_")
+    out = tempfile.mkdtemp(prefix="avro_rt_", dir=scratch_root())
     # repartition to the core count, not a fixed 8: the python-worker Avro
     # encode is the cost here, and 8 tasks left 3/4 of local[32] idle
     # (guide §2.6 idle capacity; scale-adaptive, not a tuned constant).

@@ -539,9 +539,11 @@ def source_python_datasource_write_roundtrip(
     import os
     import tempfile
 
+    from ..session import scratch_root
+
     register_python_datasource(spark)
     register_python_sink_datasource(spark)
-    out = tempfile.mkdtemp(prefix="pysink_")
+    out = tempfile.mkdtemp(prefix="pysink_", dir=scratch_root())
     df = (
         spark.read.format("synthetic_events")
         .option("n_rows", "10000")
@@ -702,17 +704,17 @@ def stream_python_datasource_sink_roundtrip(
     duplicate epoch and no lost task. The ledger file must list every
     committed batch id; tests/test_pysource.py additionally pins the
     replay-idempotence path directly."""
-    import shutil
+    import os
     import tempfile
 
+    from ..session import scratch_root
     from ..streaming.replay import drain
 
     register_python_stream_datasource(spark)
     register_python_stream_sink_datasource(spark)
-    out = tempfile.mkdtemp(prefix="pystream_sink_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_pysink_")
     stream = spark.readStream.format("synthetic_events_stream").load()
-    try:
+    with tempfile.TemporaryDirectory(prefix="pystream_sink_", dir=scratch_root()) as d:
+        out, ckpt = os.path.join(d, "out"), os.path.join(d, "ckpt")
         drain(
             spark,
             stream.writeStream.format("synthetic_events_stream_sink").option("path", out),
@@ -726,6 +728,3 @@ def stream_python_datasource_sink_roundtrip(
             ),
         )
         return spark.createDataFrame(result.collect(), result.schema)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)

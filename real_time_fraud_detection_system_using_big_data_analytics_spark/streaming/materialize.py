@@ -35,11 +35,13 @@ Scale posture:
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.registry import register
+from ..session import scratch_root
 from ..sources.tables import load_tables
 from .replay import drain, spool_event_chunks, spool_stream
 
@@ -158,9 +160,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle checks the incremental-view-maintenance invariant itself.
     The (small) snapshot is collected before its temp directory is
     removed."""
-    import shutil
-    import tempfile
-
     base = (
         load_tables(spark, sf_dir, names=("orders",))["orders"]
         .filter(F.col("o_orderkey") <= 600)
@@ -176,8 +175,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("k", F.lit("upsert").alias("op"),
                 (F.col("bal") + 1000.0).alias("bal"), F.lit(2).alias("seq"))
     )
-    root = tempfile.mkdtemp(prefix="cdc_apply_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="cdc_apply_", dir=scratch_root()) as root:
         src = os.path.join(root, "changes")
         wave1.write.mode("overwrite").parquet(os.path.join(src, "w1"))
         deletes.unionByName(updates).write.mode("overwrite").parquet(
@@ -194,8 +192,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         snapshot = read_snapshot(spark, os.path.join(root, "snap")).select("k", "bal")
         return spark.createDataFrame(snapshot.collect(), snapshot.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(
@@ -231,17 +227,6 @@ def stream_exactly_once_filesink(spark: SparkSession, sf_dir: str) -> DataFrame:
     never failing. No shuffle anywhere until the final small aggregate.
     """
     import shutil
-    import tempfile
-
-    spool = spool_event_chunks(spark, sf_dir, 5)
-    hold = tempfile.mkdtemp(prefix="xonce_hold_")
-    for i in (4, 5):
-        shutil.move(
-            os.path.join(spool, f"chunk_{i:04d}.parquet"),
-            os.path.join(hold, f"chunk_{i:04d}.parquet"),
-        )
-    sink = tempfile.mkdtemp(prefix="xonce_sink_")
-    ckpt = tempfile.mkdtemp(prefix="xonce_ckpt_")
 
     def run_pass() -> None:
         out = (
@@ -256,7 +241,16 @@ def stream_exactly_once_filesink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         drain(spark, out.writeStream.format("parquet").option("path", sink), ckpt)
 
-    try:
+    with tempfile.TemporaryDirectory(prefix="xonce_", dir=scratch_root()) as root:
+        spool = spool_event_chunks(spark, sf_dir, 5, os.path.join(root, "spool"))
+        hold = os.path.join(root, "hold")
+        os.makedirs(hold)
+        for i in (4, 5):
+            shutil.move(
+                os.path.join(spool, f"chunk_{i:04d}.parquet"),
+                os.path.join(hold, f"chunk_{i:04d}.parquet"),
+            )
+        sink, ckpt = os.path.join(root, "sink"), os.path.join(root, "ckpt")
         run_pass()  # chunks 1-3, then the query STOPS
         for i in (4, 5):  # shutil.move keeps write_chunk's pinned mtimes
             shutil.move(
@@ -270,6 +264,3 @@ def stream_exactly_once_filesink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("value_cents").alias("total_cents"),
         )
         return spark.createDataFrame(result.collect(), result.schema)
-    finally:
-        for d in (spool, hold, sink, ckpt):
-            shutil.rmtree(d, ignore_errors=True)

@@ -15,13 +15,14 @@ horizon; availableNow is the backfill trigger for reprocessing history.
 
 from __future__ import annotations
 
-import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalars import q, q_sql
 from ..plans.registry import register
+from ..session import scratch_root
 from .replay import chunked_replay, run_to_memory, spool_event_chunks
 from .sources import events_file_stream
 
@@ -388,8 +389,6 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     is test-harness plumbing — a production stream always has a next
     batch to advance the watermark.
     """
-    spool = spool_event_chunks(spark, sf_dir, n_chunks=3, sentinel_chunks=2)
-
     def transform(stream: DataFrame) -> DataFrame:
         purchases = (
             stream.filter(
@@ -422,10 +421,9 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
             .select("purchase_id", "error_id", "user_id")
         )
 
-    try:
+    with tempfile.TemporaryDirectory(prefix="replay_spool_", dir=scratch_root()) as d:
+        spool = spool_event_chunks(spark, sf_dir, 3, d, sentinel_chunks=2)
         result, _ = chunked_replay(spark, sf_dir, transform, spool=spool)
-    finally:
-        shutil.rmtree(spool, ignore_errors=True)
     # Drop the harness's sentinel purchases (negative ids) from the BATCH
     # result — NOT inside the streaming transform: a deterministic filter
     # there gets pushed below withWatermark by Catalyst, silently removing

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from ..session import scratch_root
 from ..sources.tables import normalize_events
 
 _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
@@ -90,15 +91,15 @@ def run_to_memory(
     records). A checkpoint this function creates is removed once the
     query ends; pass ``checkpoint`` only when the caller reads it back
     afterwards, and it then stays on disk."""
-    own = checkpoint is None
-    ckpt = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
+    own = (
+        contextlib.nullcontext(checkpoint)
+        if checkpoint
+        else tempfile.TemporaryDirectory(prefix="ckpt_", dir=scratch_root())
+    )
     name = "mem_" + uuid.uuid4().hex[:12]
     writer = df.writeStream.outputMode(output_mode).format("memory").queryName(name)
-    try:
+    with own as ckpt:
         progress = drain(df.sparkSession, writer, ckpt)
-    finally:
-        if own:
-            shutil.rmtree(ckpt, ignore_errors=True)
     return df.sparkSession.table(name), len(progress)
 
 
@@ -175,7 +176,7 @@ def spool_event_chunks(
     otherwise never emit its null rows — sentinel batch 1 advances the
     watermark past all real data, sentinel batch 2 gives the engine a
     batch that APPLIES the advanced watermark and flushes the state."""
-    spool = spool_dir or tempfile.mkdtemp(prefix="replay_spool_")
+    spool = spool_dir or tempfile.mkdtemp(prefix="replay_spool_", dir=scratch_root())
     os.makedirs(spool, exist_ok=True)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     # contiguous event-time ranges via ntile over (ts, event_id)
@@ -245,14 +246,15 @@ def chunked_replay(
     spool across replays — the bench does this so measured wall time is
     the STREAM's, not the chunk-writing setup's. A caller-provided spool
     is left on disk; an internally-built one is removed."""
-    own_spool = spool is None
-    if own_spool:
-        spool = spool_event_chunks(spark, sf_dir, n_chunks)
-    try:
-        return run_to_memory(transform(spool_stream(spark, spool)), output_mode)
-    finally:
-        if own_spool:
-            shutil.rmtree(spool, ignore_errors=True)
+    own = (
+        tempfile.TemporaryDirectory(prefix="replay_spool_", dir=scratch_root())
+        if spool is None
+        else contextlib.nullcontext(spool)
+    )
+    with own as d:
+        if spool is None:
+            spool_event_chunks(spark, sf_dir, n_chunks, d)
+        return run_to_memory(transform(spool_stream(spark, d)), output_mode)
 
 
 def spool_stream(spark: SparkSession, spool: str) -> DataFrame:

@@ -19,13 +19,13 @@ a NEW checkpoint via a backfill replay, then cut the stream over.
 
 from __future__ import annotations
 
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import register
+from ..session import scratch_root
 
 
 @register(
@@ -60,8 +60,7 @@ def stream_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .replay import run_to_memory
     from .sources import events_file_stream
 
-    ckpt = tempfile.mkdtemp(prefix="ckpt_ssread_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="ckpt_ssread_", dir=scratch_root()) as ckpt:
         stream = events_file_stream(spark, sf_dir)
         run_to_memory(account_profile_stream(stream), "update", checkpoint=ckpt)
         state = spark.read.format("statestore").load(ckpt)
@@ -72,5 +71,3 @@ def stream_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value.groupState.total_cents").cast("bigint").alias("total_cents"),
             F.col("value.groupState.mx_cents").cast("bigint").alias("mx_cents"),
         ).localCheckpoint()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)

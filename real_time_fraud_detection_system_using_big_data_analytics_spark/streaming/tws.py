@@ -53,6 +53,7 @@ the reason the API matters at 100 TB state.
 from __future__ import annotations
 
 import shutil
+import tempfile
 from typing import TYPE_CHECKING, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,6 +65,7 @@ from pyspark.sql.streaming.stateful_processor import (
 )
 
 from ..plans.registry import register
+from ..session import scratch_root
 from .replay import chunked_replay, latest_per_key, rocksdb_state, spool_event_chunks
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -510,14 +512,12 @@ def stream_tws_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries. Scale: O(1) state per key (one open session + one timer);
     the sentinel batches are harness plumbing — a production stream
     always has a next batch to advance the watermark."""
-    spool = spool_event_chunks(spark, sf_dir, n_chunks=4, sentinel_chunks=2)
-    try:
+    with tempfile.TemporaryDirectory(prefix="replay_spool_", dir=scratch_root()) as d:
+        spool = spool_event_chunks(spark, sf_dir, 4, d, sentinel_chunks=2)
         with rocksdb_state(spark):
             tbl, batches = chunked_replay(
                 spark, sf_dir, gap_session_stream, output_mode="append", spool=spool
             )
-    finally:
-        shutil.rmtree(spool, ignore_errors=True)
     assert batches >= 6, f"expected >=6 micro-batches, got {batches}"
     # Sentinel users (negative ids) are harness clock-movers; dropped on
     # the BATCH result, never inside the streaming transform (a filter
@@ -619,11 +619,11 @@ def stream_tws_initial_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     TWS queries."""
     import glob
     import os as _os
-    import tempfile
 
-    spool = spool_event_chunks(spark, sf_dir, n_chunks=4)
-    stream_spool = tempfile.mkdtemp(prefix="replay_boot_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="replay_boot_", dir=scratch_root()) as d:
+        spool = spool_event_chunks(spark, sf_dir, 4, _os.path.join(d, "history"))
+        stream_spool = _os.path.join(d, "stream")
+        _os.makedirs(stream_spool)
         # history = quartiles 1-2 (chunk files), stream = quartiles 3-4
         # renamed into a fresh spool (chunk order preserved via utime)
         history = spark.read.parquet(
@@ -660,8 +660,5 @@ def stream_tws_initial_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             tbl, batches = chunked_replay(
                 spark, sf_dir, transform, output_mode="update", spool=stream_spool
             )
-    finally:
-        shutil.rmtree(spool, ignore_errors=True)
-        shutil.rmtree(stream_spool, ignore_errors=True)
     assert batches >= 2, f"expected a multi-batch replay, got {batches}"
     return latest_per_key(tbl, "n_events")

@@ -160,13 +160,14 @@ def run_velocity_join_hermetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     only ever join themselves and are dropped AFTER the replay — a filter
     inside the stream would be pushed below withWatermark and freeze the
     clock."""
-    import shutil
+    import tempfile
 
+    from ..session import scratch_root
     from .replay import chunked_replay, spool_event_chunks
 
-    spool = spool_event_chunks(spark, sf_dir, n_chunks=3, sentinel_chunks=2)
-    result, _ = chunked_replay(
-        spark, sf_dir, velocity_features_join_stream, spool=spool
-    )
-    shutil.rmtree(spool, ignore_errors=True)
+    with tempfile.TemporaryDirectory(prefix="replay_spool_", dir=scratch_root()) as d:
+        spool = spool_event_chunks(spark, sf_dir, 3, d, sentinel_chunks=2)
+        result, _ = chunked_replay(
+            spark, sf_dir, velocity_features_join_stream, spool=spool
+        )
     return result.where(F.col("user_id") >= 0)

@@ -146,11 +146,10 @@ def test_roundtrip_property(rows):
 # --- Spark end-to-end -------------------------------------------------------
 
 
-def test_spark_write_read_exact_rows(spark):
+def test_spark_write_read_exact_rows(spark, tmp_path):
     """Every row survives the DataSource write -> staged commit -> per-file
     partitioned read, value-exact, with one part file per task."""
     import os
-    import tempfile
 
     from real_time_fraud_detection_system_using_big_data_analytics_spark.sources.avro_ocf import (
         register_avro_datasource,
@@ -164,7 +163,7 @@ def test_spark_write_read_exact_rows(spark):
         load_tables(spark, "/root/testdata/sf0.001", names=("events",))["events"]
         .select("event_id", "ts", "user_id", "event_type", "value")
     )
-    out = tempfile.mkdtemp(prefix="avro_t_")
+    out = str(tmp_path / "avro")
     ev.repartition(4).write.format("avro_ocf").mode("overwrite").save(out)
     parts = [f for f in os.listdir(out) if f.startswith("part-") and f.endswith(".avro")]
     assert len(parts) == 4 and os.path.exists(os.path.join(out, "_SUCCESS"))

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 import uuid
 
 import pytest
@@ -54,14 +53,14 @@ def topic(spark):
     return name
 
 
-def test_kafka_source_decodes_events(spark, topic):
+def test_kafka_source_decodes_events(spark, topic, tmp_path):
     stream = kafka_json_stream(spark, BOOTSTRAP, topic, EVENTS_SCHEMA)
     out = "k" + uuid.uuid4().hex[:10]
     q = (
         stream.writeStream.outputMode("append")
         .format("memory")
         .queryName(out)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_kafka_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -72,12 +71,12 @@ def test_kafka_source_decodes_events(spark, topic):
     assert sorted(r["event_id"] for r in rows) == list(range(10))
 
 
-def test_kafka_alert_sink_roundtrip(spark, topic):
+def test_kafka_alert_sink_roundtrip(spark, topic, tmp_path):
     alerts_topic = topic + "_alerts"
     stream = kafka_json_stream(spark, BOOTSTRAP, topic, EVENTS_SCHEMA)
     alerts = stream.filter(F.col("value") >= 5)
     writer = kafka_alert_sink(
-        alerts, BOOTSTRAP, alerts_topic, tempfile.mkdtemp(prefix="ckpt_alerts_")
+        alerts, BOOTSTRAP, alerts_topic, str(tmp_path / "ckpt")
     )
     q = writer.trigger(availableNow=True).start()
     q.awaitTermination()

@@ -114,7 +114,7 @@ def test_weight_col_actually_wired(spark):
     assert not lr_ref.isSet(lr_ref.weightCol)
 
 
-def test_stream_scoring_equals_batch_scoring(spark):
+def test_stream_scoring_equals_batch_scoring(spark, tmp_path):
     """With ONE fitted model, scoring the events stream must produce
     exactly the batch-scored rows: the LR transform is per-row arithmetic,
     so streaming vs batch execution may not change a single prediction or
@@ -153,7 +153,6 @@ def test_stream_scoring_equals_batch_scoring(spark):
 
     want = alert_rows(FraudPipeline.score(model, batch))
 
-    import tempfile
     import uuid
 
     stream_scored = FraudPipeline.score(
@@ -171,7 +170,7 @@ def test_stream_scoring_equals_batch_scoring(spark):
         .writeStream.outputMode("append")
         .format("memory")
         .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )

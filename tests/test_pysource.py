@@ -144,15 +144,14 @@ def test_stream_reader_yields_arrow_batches():
     assert out[0].schema.names == ["event_id", "user_id", "event_type", "value"]
 
 
-def test_stream_source_offset_contract(spark):
+def test_stream_source_offset_contract(spark, tmp_path):
     """availableNow over the finite streaming source terminates having
     read exactly [0, 5000) once; a second availableNow run from the same
     checkpoint reads nothing new (offsets committed)."""
-    import tempfile
     import uuid
 
     register_python_stream_datasource(spark)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_pysrc_test_")
+    ckpt = str(tmp_path / "ckpt")
     name = "pysrc_t_" + uuid.uuid4().hex[:8]
     stream = spark.readStream.format("synthetic_events_stream").load()
     # distinct aggs are unsupported on streams: pin the exact id set via

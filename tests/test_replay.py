@@ -10,6 +10,7 @@ double-counted state would break the equality with the batch oracle.
 from __future__ import annotations
 
 import contextlib
+import os
 import re
 
 import pytest
@@ -17,6 +18,9 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from real_time_fraud_detection_system_using_big_data_analytics_spark.plans import registry
+from real_time_fraud_detection_system_using_big_data_analytics_spark.session import (
+    scratch_root,
+)
 from real_time_fraud_detection_system_using_big_data_analytics_spark.sources.tables import (
     load_tables,
 )
@@ -123,17 +127,16 @@ def test_velocity_state_survives_batch_boundaries(spark):
     assert got == want
 
 
-def test_runner_removes_the_checkpoints_it_creates(spark, tmp_path, monkeypatch):
+def test_runner_removes_the_checkpoints_it_creates(spark):
     """Every hermetic stream run creates its checkpoints, spools and sinks
-    under the temp dir and must remove them: a chunked replay and the
-    registry stream queries that write a file sink or a snapshot return
-    their results with the temp dir left empty."""
-    import tempfile
-
+    under the process scratch root and must remove them: a chunked replay
+    and the registry stream queries that write a file sink or a snapshot
+    return their results with the root's entries unchanged."""
     registry.load_all()
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    before = sorted(os.listdir(scratch_root()))
     out, _ = chunked_replay(spark, SF, velocity_features_stream, 2)
     assert out.count() > 0
+    assert sorted(os.listdir(scratch_root())) == before
     for name in (
         "stream_cusum_drift_stateful",
         "stream_exactly_once_filesink",
@@ -141,7 +144,7 @@ def test_runner_removes_the_checkpoints_it_creates(spark, tmp_path, monkeypatch)
         "stream_python_datasource_sink_roundtrip",
     ):
         assert registry.QUERIES[name](spark, SF).count() > 0, name
-        assert not list(tmp_path.iterdir()), (name, sorted(tmp_path.iterdir()))
+        assert sorted(os.listdir(scratch_root())) == before, name
 
 
 @pytest.mark.parametrize("runner", [True, False], ids=["runner", "spark_default"])

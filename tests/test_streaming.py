@@ -5,7 +5,6 @@ parse with corrupt records."""
 from __future__ import annotations
 
 import json
-import tempfile
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -145,7 +144,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
         .agg(F.count("*").alias("n"))
         .select(F.col("window.start").alias("ws"), "n")
     )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+    ckpt = str(tmp_path / "ckpt")
     q = (
         agg.writeStream.outputMode("update")
         .format("memory")
