@@ -26,6 +26,19 @@ only when the Spark conf directory holds nothing but ``*.template`` files;
 ``-XX:+VerifySharedSpaces`` makes a damaged archive fall back to a normal
 start.
 
+That JVM also compiles a method with C2 only once it is ten times as hot
+as the JDK's default tier-4 thresholds ask; below that it stays C1 code. A
+conf directory with a real file in it leaves the JVM's options to it. Each
+streaming query and most batch queries bring their own generated classes
+and planning work, so the JIT keeps compiling: over perfbench's five state
+replays (4 cores) the compiler threads took 53% of the process tree's CPU
+in the first pass after warm-up and 40% in the third. With the raised
+thresholds that pass took 15.9 CPU-s instead of 25.6 and 6.3 s of wall
+instead of 7.6. C1 alone (``-XX:TieredStopAtLevel=1``) saved more there
+(12.9 CPU-s) but about doubled the warm walls of ``bench.py``'s sf0.1
+scans, joins and PageRank, whose loops the raised thresholds still hand
+to C2.
+
 Scratch data lives under one directory per process, ``scratch_root()``,
 removed at interpreter exit. A directory that dies with the call that made
 it is a ``tempfile.TemporaryDirectory(dir=scratch_root())``; a directory
@@ -142,6 +155,10 @@ def bootstrap_vendored_protobuf() -> bool:
 # ``python -m <package>.pydaemon`` from the JVM's working directory, so the
 # package must be on the PYTHONPATH the JVM inherits at launch.
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_C2_THRESHOLDS = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
 
 
 @functools.cache
@@ -182,7 +199,9 @@ def get_session(app_name: str = "fraud-engine", cpus: int | None = None) -> Spar
     )
     with cds.driver_launch() as java_options:
         if java_options:
-            builder = builder.config("spark.driver.defaultJavaOptions", java_options)
+            builder = builder.config(
+                "spark.driver.defaultJavaOptions", f"{java_options} {_C2_THRESHOLDS}"
+            )
         spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

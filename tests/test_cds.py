@@ -42,6 +42,7 @@ print("CDSCHILD " + json.dumps({
     "sum": spark.range(100).selectExpr("sum(id)").collect()[0][0],
     "conf_dir_kept": os.environ.get("SPARK_CONF_DIR") == conf_dir,
     "cds_args": [a for a in args if "SharedArchiveFile" in a or "DumpLoadedClassList" in a],
+    "jit_args": [a for a in args if a.startswith("-XX:Tier4")],
     "vm_info": jvm.java.lang.System.getProperty("java.vm.info"),
     "probe": spark.conf.get("spark.graft.cdsprobe", None),
     "jvm_pid": jvm.java.lang.ProcessHandle.current().pid(),
@@ -135,6 +136,7 @@ def test_session_maps_spark_classes_from_the_archive(built_cache, tmp_path):
     assert proc.returncode == 0 and rep and rep["sum"] == 4950, _detail(proc)
     assert rep["conf_dir_kept"], rep
     assert [a.split("=")[0] for a in rep["cds_args"]] == ["-XX:SharedArchiveFile"], rep
+    assert len(rep["jit_args"]) == 4 and "sharing" in rep["vm_info"], rep
     loads = [ln for ln in proc.stdout.splitlines()
              if "[class,load] org.apache.spark.sql.SparkSession " in ln]
     assert loads and loads[0].endswith("source: shared objects file"), loads
@@ -196,6 +198,7 @@ def test_a_conf_dir_with_a_real_file_starts_as_before(tmp_path):
     proc, rep = _run_child(cache, tmp_path, conf=conf)
     assert proc.returncode == 0 and rep and rep["sum"] == 4950, _detail(proc)
     assert rep["probe"] == "true" and rep["conf_dir_kept"] and rep["cds_args"] == [], rep
+    assert rep["jit_args"] == [], rep
     assert not cache.exists()
 
 
