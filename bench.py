@@ -38,6 +38,7 @@ import json
 import os
 import re
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -46,6 +47,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from pyspark.sql import functions as F
 
 from real_time_fraud_detection_system_using_big_data_analytics_spark import get_session, obs
+from real_time_fraud_detection_system_using_big_data_analytics_spark.session import scratch_root
+from real_time_fraud_detection_system_using_big_data_analytics_spark.sources.tables import load_tables
 from real_time_fraud_detection_system_using_big_data_analytics_spark.plans import registry
 
 # The driver captures only the LAST ~2000 chars of output and parses the
@@ -479,8 +482,6 @@ def streaming_bench(spark, sf_dir: str) -> dict:
     as 8 genuine micro-batches (maxFilesPerTrigger=1 over a pre-spooled
     chunk directory — chunk-writing setup is excluded from the timing).
     Best-of-2 per stream, same host-noise rationale as the batch set."""
-    import shutil
-
     from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.pipeline import (
         rule_alerts,
     )
@@ -495,11 +496,11 @@ def streaming_bench(spark, sf_dir: str) -> dict:
         cusum_stream,
     )
 
-    n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    spool = spool_event_chunks(spark, sf_dir, N_STREAM_CHUNKS)
-    spool1 = spool_event_chunks(spark, sf_dir, 1)
+    n_events = load_tables(spark, sf_dir, ("events",))["events"].count()
     out: dict = {}
-    try:
+    with tempfile.TemporaryDirectory(prefix="replay_spool_", dir=scratch_root()) as d:
+        spool = spool_event_chunks(spark, sf_dir, N_STREAM_CHUNKS, os.path.join(d, "n"))
+        spool1 = spool_event_chunks(spark, sf_dir, 1, os.path.join(d, "1"))
         for name, transform, n_chunks, sp in (
             ("stream_rule_alerts", rule_alerts, N_STREAM_CHUNKS, spool),
             ("stream_velocity_stateful", velocity_features_stream, N_STREAM_CHUNKS, spool),
@@ -525,9 +526,6 @@ def streaming_bench(spark, sf_dir: str) -> dict:
                 "out_rows": rows,
                 "events_per_sec": round(n_events / wall, 1),
             }
-    finally:
-        shutil.rmtree(spool, ignore_errors=True)
-        shutil.rmtree(spool1, ignore_errors=True)
     return out
 
 
@@ -545,9 +543,6 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
     lives across 10 production-size batches, not just within one.
     Single sample per stream (a 1M replay is long enough to average over
     host noise bursts on its own; min-of-N would add minutes)."""
-    import shutil
-    import tempfile
-
     from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.pipeline import (
         rule_alerts,
     )
@@ -560,11 +555,7 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
         velocity_features_stream,
     )
 
-    # raw parquet ts may be TIMESTAMP_NTZ; normalize to TIMESTAMP under
-    # the UTC session (chunked_replay passes TIMESTAMP spool files through)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
+    ev = load_tables(spark, sf_dir, ("events",))["events"]
     n = ev.count()
     first = ev.agg(
         (F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))).alias("span"),
@@ -572,16 +563,6 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
     ).first()
     shift_us = int(first["span"]) + 3_600_000_000  # replica gap > 1h watermark
     idbase = int(first["idbase"])
-
-    spool = tempfile.mkdtemp(prefix="replay_1m_")
-    for i in range(replicas):
-        write_chunk(
-            ev.withColumn(
-                "ts", F.timestamp_micros(F.unix_micros("ts") + i * shift_us)
-            ).withColumn("event_id", F.col("event_id") + F.lit(i * idbase)),
-            spool,
-            i,
-        )
 
     def windowed_agg(stream):
         # built-in streaming windowed aggregation: JVM state rows (one per
@@ -600,7 +581,15 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
 
     total_events = n * replicas
     out: dict = {"n_events": total_events, "batches_requested": replicas}
-    try:
+    with tempfile.TemporaryDirectory(prefix="replay_1m_", dir=scratch_root()) as spool:
+        for i in range(replicas):
+            write_chunk(
+                ev.withColumn(
+                    "ts", F.timestamp_micros(F.unix_micros("ts") + i * shift_us)
+                ).withColumn("event_id", F.col("event_id") + F.lit(i * idbase)),
+                spool,
+                i,
+            )
         # provider A/B (r8 verdict task 4): the same sustained replays under
         # the default HDFS-backed provider and under RocksDB — the 100 TB
         # state posture (keyed state on local disk, not executor heap)
@@ -667,8 +656,6 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
                 spark, spool, velocity_features_stream, total_events, replicas
             )
         )
-    finally:
-        shutil.rmtree(spool, ignore_errors=True)
     return out
 
 
@@ -688,7 +675,6 @@ def _changelog_sustained_line(
     sink-comparable only to itself; the A/B twin for throughput remains
     the rocksdb line above."""
     import glob
-    import tempfile
 
     from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.replay import (
         drain,
@@ -700,8 +686,6 @@ def _changelog_sustained_line(
     CHANGELOG_CONF = (
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_changelog_")
-    sink = tempfile.mkdtemp(prefix="sink_changelog_")
 
     def run_once() -> float:
         stream = spool_stream(spark, spool)
@@ -710,7 +694,8 @@ def _changelog_sustained_line(
         drain(spark, writer.option("path", sink), ckpt)
         return time.perf_counter() - t0
 
-    try:
+    with tempfile.TemporaryDirectory(prefix="changelog_", dir=scratch_root()) as d:
+        ckpt, sink = os.path.join(d, "ckpt"), os.path.join(d, "sink")
         with session_conf(spark, CHANGELOG_CONF, "true"), rocksdb_state(spark):
             wall = run_once()
             ckpt_bytes = state_bytes = 0
@@ -725,11 +710,6 @@ def _changelog_sustained_line(
             # recovery: restart from the same checkpoint with no new input —
             # the wall is dominated by state load (snapshot + changelog replay)
             recovery_wall = run_once()
-    finally:
-        import shutil as _shutil
-
-        _shutil.rmtree(sink, ignore_errors=True)
-        _shutil.rmtree(ckpt, ignore_errors=True)
     return {
         "wall_sec": round(wall, 3),
         "batches": replicas,
@@ -763,7 +743,7 @@ def reference_metrics(spark, sf_dir: str) -> dict:
     alerts = registry.QUERIES["stream_rule_alerts"](spark, sf_dir)
     n_alerts = alerts.count()
     stream_wall = time.perf_counter() - t0
-    n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
+    n_events = load_tables(spark, sf_dir, ("events",))["events"].count()
     out["streaming_events_per_sec"] = round(n_events / stream_wall, 1)
     out["streaming_alerts"] = n_alerts
     out["streaming_wall_sec"] = round(stream_wall, 3)

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.scalars import q, q_sql
 from ..plans.registry import register
 from ..session import scratch_root
-from ..sources.tables import fan_out, load_tables
+from ..sources.tables import fan_out, load_tables, parquet_schema
 
 N_SEEDS = 8          # minhash signature length
 BAND_ROWS = 2        # seeds per LSH band -> 4 bands
@@ -2021,9 +2021,9 @@ def stream_incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFra
         for i in (1, 2):
             write_chunk(chunked.filter(F.col("_chunk") == i).drop("_chunk"), spool, i)
 
-        schema = spark.read.parquet(os.path.join(spool, "chunk_0001.parquet")).schema
+        first = os.path.join(spool, "chunk_0001.parquet")
         stream = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(parquet_schema(spark, first))
             .option("maxFilesPerTrigger", "1")
             .parquet(spool)
         )

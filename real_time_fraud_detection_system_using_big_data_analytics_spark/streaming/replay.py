@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from ..session import scratch_root
-from ..sources.tables import normalize_events
+from ..sources.tables import normalize_events, parquet_schema
 
 _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 _ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -178,7 +178,9 @@ def spool_event_chunks(
     batch that APPLIES the advanced watermark and flushes the state."""
     spool = spool_dir or tempfile.mkdtemp(prefix="replay_spool_", dir=scratch_root())
     os.makedirs(spool, exist_ok=True)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    # the raw file, not load_tables': chunks keep the table's physical types
+    path = f"{sf_dir}/events.parquet"
+    ev = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     # contiguous event-time ranges via ntile over (ts, event_id)
     w = Window.orderBy("ts", "event_id")
     chunked = ev.withColumn("_chunk", F.ntile(n_chunks).over(w))
@@ -260,7 +262,7 @@ def chunked_replay(
 def spool_stream(spark: SparkSession, spool: str) -> DataFrame:
     """Stream a spool directory one chunk file per micro-batch, with the
     events columns normalized like the batch table."""
-    physical = spark.read.parquet(os.path.join(spool, "chunk_0001.parquet")).schema
+    physical = parquet_schema(spark, os.path.join(spool, "chunk_0001.parquet"))
     raw = (
         spark.readStream.schema(physical)
         .option("maxFilesPerTrigger", "1")

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
-from ..sources.tables import normalize_events
+from ..sources.tables import normalize_events, parquet_schema
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -74,16 +74,13 @@ def events_file_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hermetic file source over the events parquet — the test stand-in for
     the Kafka topic (same schema, replayable).
 
-    Streaming file sources need an explicit schema, so the physical schema
-    is taken from the parquet footer via a (lazy, footer-only) batch read,
-    and ``ts`` goes through the same normalize_events as the batch table,
-    so streaming == batch comparisons hold.
+    Streaming file sources need an explicit schema: the file's physical
+    one, from parquet_schema (inferred once per session, like the batch
+    table's), and ``ts`` goes through the same normalize_events as the
+    batch table, so streaming == batch comparisons hold.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    physical = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     raw = (
-        spark.readStream.schema(physical)
+        spark.readStream.schema(parquet_schema(spark, f"{sf_dir}/events.parquet"))
         # the source path must be a directory; select just the events file
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)

@@ -66,6 +66,7 @@ from pyspark.sql.streaming.stateful_processor import (
 
 from ..plans.registry import register
 from ..session import scratch_root
+from ..sources.tables import parquet_schema
 from .replay import chunked_replay, latest_per_key, rocksdb_state, spool_event_chunks
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -626,10 +627,8 @@ def stream_tws_initial_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         _os.makedirs(stream_spool)
         # history = quartiles 1-2 (chunk files), stream = quartiles 3-4
         # renamed into a fresh spool (chunk order preserved via utime)
-        history = spark.read.parquet(
-            _os.path.join(spool, "chunk_0001.parquet"),
-            _os.path.join(spool, "chunk_0002.parquet"),
-        )
+        first, second = (_os.path.join(spool, f"chunk_000{i}.parquet") for i in (1, 2))
+        history = spark.read.schema(parquet_schema(spark, first)).parquet(first, second)
         profile = (
             history.groupBy("user_id")
             .agg(

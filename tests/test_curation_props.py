@@ -62,7 +62,7 @@ def test_pii_scrub_removes_every_digit(spark):
         load_tables,
     )
 
-    ev = load_tables(spark, SF, names=("events",), register=False)["events"]
+    ev = load_tables(spark, SF, names=("events",))["events"]
     scrubbed = ev.select(
         F.regexp_replace("props", "[0-9]+", "<NUM>").alias("s")
     )

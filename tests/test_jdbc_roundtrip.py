@@ -49,7 +49,7 @@ def test_jdbc_write_then_partitioned_read_roundtrip(spark, sf_dir, derby):
     # independently per action, so the collect() building `expected`, the
     # min/max aggs, and the JDBC write could each pick a different subset
     src = (
-        load_tables(spark, sf_dir, names=("orders",), register=False)["orders"]
+        load_tables(spark, sf_dir, names=("orders",))["orders"]
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
         .filter(F.col("o_orderkey") % 17 == 0)
     )
@@ -86,7 +86,7 @@ def test_jdbc_count_pushdown_remote(spark, sf_dir, derby):
     """A3: COUNT against the remote table via a pushed-down subquery —
     the database does the counting, Spark reads one row."""
     want = (
-        load_tables(spark, sf_dir, names=("orders",), register=False)["orders"]
+        load_tables(spark, sf_dir, names=("orders",))["orders"]
         .filter(F.col("o_orderkey") % 17 == 0)
         .count()
     )
@@ -164,7 +164,7 @@ def test_postgres_write_schema_partitioned_read(spark, sf_dir, pg_url):
     props = {"driver": PG_DRIVER, "reWriteBatchedInserts": "true"}
     # deterministic key slice, not limit() — see the Derby round-trip note
     src = (
-        load_tables(spark, sf_dir, names=("orders",), register=False)["orders"]
+        load_tables(spark, sf_dir, names=("orders",))["orders"]
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
         .filter(F.col("o_orderkey") % 37 == 0)
     )

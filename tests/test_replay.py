@@ -103,7 +103,7 @@ def test_velocity_state_survives_batch_boundaries(spark):
 
     from pyspark.sql import Window
 
-    ev = load_tables(spark, SF, names=("events",), register=False)["events"]
+    ev = load_tables(spark, SF, names=("events",))["events"]
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.unix_micros("ts"))
