@@ -549,7 +549,7 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
     from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.replay import (
         chunked_replay,
         rocksdb_state,
-        write_chunk,
+        write_chunks,
     )
     from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.velocity import (
         velocity_features_stream,
@@ -583,12 +583,11 @@ def sustained_streaming_bench(spark, sf_dir: str, replicas: int = 10) -> dict:
     out: dict = {"n_events": total_events, "batches_requested": replicas}
     with tempfile.TemporaryDirectory(prefix="replay_1m_", dir=scratch_root()) as spool:
         for i in range(replicas):
-            write_chunk(
-                ev.withColumn(
-                    "ts", F.timestamp_micros(F.unix_micros("ts") + i * shift_us)
-                ).withColumn("event_id", F.col("event_id") + F.lit(i * idbase)),
+            write_chunks(
+                ev.withColumn("ts", F.timestamp_micros(F.unix_micros("ts") + i * shift_us))
+                .withColumn("event_id", F.col("event_id") + F.lit(i * idbase))
+                .withColumn("_chunk", F.lit(i)),
                 spool,
-                i,
             )
         # provider A/B (r8 verdict task 4): the same sustained replays under
         # the default HDFS-backed provider and under RocksDB — the 100 TB

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.scalars import q, q_sql
 from ..plans.registry import register
 from ..session import scratch_root
-from ..sources.tables import fan_out, load_tables, parquet_schema
+from ..sources.tables import fan_out, load_tables
 
 N_SEEDS = 8          # minhash signature length
 BAND_ROWS = 2        # seeds per LSH band -> 4 bands
@@ -2006,9 +2006,7 @@ def stream_incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFra
     bounded-result convention as the audit queries."""
     import os
 
-    from pyspark.sql import Window
-
-    from ..streaming.replay import drain, write_chunk
+    from ..streaming.replay import chunk_stream, drain, ntile_chunks, write_chunks
 
     tbl, bound = lsh_shard_index(spark, sf_dir)
     d = load_tables(spark, sf_dir, names=("documents",))["documents"]
@@ -2016,17 +2014,8 @@ def stream_incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFra
 
     with tempfile.TemporaryDirectory(prefix="doc_ingest_", dir=scratch_root()) as root:
         spool, sink, ckpt = (os.path.join(root, p) for p in ("spool", "sink", "ckpt"))
-        w = Window.orderBy("doc_id")
-        chunked = shard.withColumn("_chunk", F.ntile(2).over(w))
-        for i in (1, 2):
-            write_chunk(chunked.filter(F.col("_chunk") == i).drop("_chunk"), spool, i)
-
-        first = os.path.join(spool, "chunk_0001.parquet")
-        stream = (
-            spark.readStream.schema(parquet_schema(spark, first))
-            .option("maxFilesPerTrigger", "1")
-            .parquet(spool)
-        )
+        write_chunks(ntile_chunks(shard, 2, "doc_id"), spool)
+        stream = chunk_stream(spark, spool)
         idx = spark.table(tbl).select(
             F.col("doc_id").alias("doc_a"), F.col("mhs").alias("mhs_a"), "bucket_key"
         )

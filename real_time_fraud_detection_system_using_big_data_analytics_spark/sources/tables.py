@@ -132,7 +132,7 @@ def _inferred_schema(
     spark: SparkSession, path: str, size: int, mtime_ns: int, ctime_ns: int
 ) -> StructType:
     # ctime is in the key because replay spools forge mtimes: every
-    # spool's chunk_0001.parquet has the same one (replay.write_chunk)
+    # spool's chunk_0001.parquet has the same one (replay.write_chunks)
     return spark.read.parquet(path).schema
 
 

@@ -252,7 +252,7 @@ def stream_exactly_once_filesink(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         sink, ckpt = os.path.join(root, "sink"), os.path.join(root, "ckpt")
         run_pass()  # chunks 1-3, then the query STOPS
-        for i in (4, 5):  # shutil.move keeps write_chunk's pinned mtimes
+        for i in (4, 5):  # shutil.move keeps write_chunks' pinned mtimes
             shutil.move(
                 os.path.join(hold, f"chunk_{i:04d}.parquet"),
                 os.path.join(spool, f"chunk_{i:04d}.parquet"),

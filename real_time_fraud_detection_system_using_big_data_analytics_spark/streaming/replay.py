@@ -10,8 +10,9 @@ that coverage hermetically:
 
 1. the events table is split into N contiguous event-time chunks (ordered
    by (ts, event_id) so the replay is in-order, like the producer's);
-2. each chunk lands in a spool directory as one parquet file with strictly
-   increasing modification times;
+2. one write job (:func:`write_chunks`) lands each chunk in a spool
+   directory as one parquet file, with strictly increasing modification
+   times;
 3. the stream reads the spool with ``maxFilesPerTrigger=1`` — the file
    source admits one file per micro-batch, so chunk boundaries ARE batch
    boundaries.
@@ -49,6 +50,7 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.types import LongType
 
 from ..session import scratch_root
 from ..sources.tables import normalize_events, parquet_schema
@@ -165,69 +167,83 @@ def spool_event_chunks(
     sentinel_chunks: int = 0,
 ) -> str:
     """Split the events table into ``n_chunks`` event-time-ordered parquet
-    files under a spool directory; returns the directory path.
+    files under a spool directory, in one :func:`write_chunks` job; returns
+    the directory path. The cut is :func:`ntile_chunks` over
+    ``(ts, event_id)``, which states its single-task bound.
 
-    ``sentinel_chunks`` appends that many extra single-row chunk files
-    whose one event sits far past the real data's max event time
-    (event_type='sentinel', user_id=-1 — joins/filters on real types never
-    see it). Two sentinels are the watermark-flush idiom for OUTER
-    stateful operators under availableNow: Spark does not run no-data
-    micro-batches for that trigger, so evictable outer-join state would
-    otherwise never emit its null rows — sentinel batch 1 advances the
-    watermark past all real data, sentinel batch 2 gives the engine a
-    batch that APPLIES the advanced watermark and flushes the state."""
+    ``sentinel_chunks`` appends that many extra chunk files whose events
+    sit far past the real data's max event time, with ``ts`` in the file's
+    own physical type and the real chunks' schema. Two sentinels are the
+    watermark-flush idiom for OUTER stateful operators under availableNow:
+    Spark does not run no-data micro-batches for that trigger, so
+    evictable outer-join state would otherwise never emit its null rows —
+    sentinel batch 1 advances the watermark past all real data, sentinel
+    batch 2 gives the engine a batch that APPLIES the advanced watermark
+    and flushes the state."""
     spool = spool_dir or tempfile.mkdtemp(prefix="replay_spool_", dir=scratch_root())
     os.makedirs(spool, exist_ok=True)
     # the raw file, not load_tables': chunks keep the table's physical types
     path = f"{sf_dir}/events.parquet"
     ev = spark.read.schema(parquet_schema(spark, path)).parquet(path)
-    # contiguous event-time ranges via ntile over (ts, event_id)
-    w = Window.orderBy("ts", "event_id")
-    chunked = ev.withColumn("_chunk", F.ntile(n_chunks).over(w))
-    for i in range(1, n_chunks + 1):
-        write_chunk(chunked.filter(F.col("_chunk") == i).drop("_chunk"), spool, i)
-    for j in range(1, sentinel_chunks + 1):
-        # Each sentinel chunk carries one far-future row PER EVENT TYPE the
-        # downstream query watermarks on: watermarks are computed on the
-        # POST-FILTER watermark columns and the global watermark is the MIN
-        # across them, so a sentinel that any side filters away advances
-        # nothing. Negative user_ids keep sentinels out of every real join
-        # key; consumers drop them with event_id/user_id >= 0 filters.
-        mx = ev.agg(F.max("ts").alias("mx"))
-        sentinel_rows = [
-            ("purchase", -1, 999999.0),
-            ("error", -2, 0.0),
-            ("view", -3, 0.0),
-            ("click", -4, 0.0),
-            ("signup", -5, 0.0),
-        ]
-        union = None
-        for k, (etype, uid, val) in enumerate(sentinel_rows):
-            row = mx.select(
-                F.lit(-(j * 10 + k)).cast("long").alias("event_id"),
-                (F.col("mx") + F.expr(f"INTERVAL {9 + j} DAYS")).alias("ts"),
-                F.lit(uid).cast("long").alias("user_id"),
-                F.lit(etype).alias("event_type"),
-                F.lit(val).alias("value"),
-                F.lit("{}").alias("props"),
-            )
-            union = row if union is None else union.unionAll(row)
-        write_chunk(union, spool, n_chunks + j)
+    chunked = ntile_chunks(ev, n_chunks, "ts", "event_id")
+    if sentinel_chunks:
+        chunked = chunked.unionByName(_sentinels(ev, n_chunks, sentinel_chunks))
+    write_chunks(chunked, spool)
     return spool
 
 
-def write_chunk(df: DataFrame, spool: str, i: int) -> None:
-    """Write ``df`` as the single file ``chunk_{i:04d}.parquet`` in
-    ``spool``, with modification time ``1_600_000_000 + i``. The file
-    source admits files in modification-time order, so strictly
-    increasing ``i`` pins chunk order = batch order."""
-    stage = os.path.join(spool, f"_stage_{i}")
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    (part_file,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-    dest = os.path.join(spool, f"chunk_{i:04d}.parquet")
-    shutil.move(part_file, dest)
+def _sentinels(ev: DataFrame, n_chunks: int, sentinel_chunks: int) -> DataFrame:
+    """Sentinel chunk ``n_chunks + j``: one row per event type at the real
+    data's max(ts) + 9 + j days, in ``ev``'s schema (a TIMESTAMP(NANOS)
+    ``ts`` reads as bigint nanoseconds under ``nanosAsLong``)."""
+    # One row PER EVENT TYPE the downstream query watermarks on: the global
+    # watermark is the MIN over the post-filter watermark columns, so a
+    # sentinel that any side filters away advances nothing. Negative
+    # user_ids keep sentinels out of every real join key; consumers drop
+    # them with event_id/user_id >= 0 filters.
+    names = ("_chunk", "days", "event_id", "user_id", "event_type", "value", "props")
+    rows = (
+        (n_chunks + j, 9 + j, -(j * 10 + k), -1 - k, etype, 999999.0 if k == 0 else 0.0, "{}")
+        for j in range(1, sentinel_chunks + 1)
+        for k, etype in enumerate(("purchase", "error", "view", "click", "signup"))
+    )
+    structs = (F.struct(*(F.lit(v).alias(c) for c, v in zip(names, r))) for r in rows)
+    days = F.col("days")
+    ns = ev.schema["ts"].dataType == LongType()
+    offset = days * 86_400_000_000_000 if ns else F.make_dt_interval(days)
+    out = ev.agg(F.max("ts").alias("mx")).select("mx", F.inline(F.array(*structs)))
+    out = out.withColumn("ts", F.col("mx") + offset)
+    return out.select(*(out[f.name].cast(f.dataType) for f in ev.schema), "_chunk")
+
+
+def ntile_chunks(df: DataFrame, n_chunks: int, *order: str) -> DataFrame:
+    """``df`` with the ``_chunk`` column :func:`write_chunks` takes:
+    ``ntile(n_chunks)`` over ``order``, rows in that order."""
+    # No partitionBy, so one task ranks every row. The bound: spools replay
+    # the driver's generated tables, and the cut must be the exact rank
+    # statistic the DuckDB oracles reproduce (stream_tws_initial_state's
+    # ntile(4) OVER (ORDER BY ts, event_id)), not an approximate quantile.
+    return df.withColumn("_chunk", F.ntile(n_chunks).over(Window.orderBy(*order)))
+
+
+def write_chunks(df: DataFrame, spool: str) -> None:
+    """Write each distinct ``_chunk`` value ``i`` of ``df`` as the one
+    parquet file ``chunk_{i:04d}.parquet`` in ``spool``, with modification
+    time ``1_600_000_000 + i``, in one write job. The file source admits
+    files in modification-time order, so chunk order is batch order. Rows
+    keep ``df``'s order within a chunk: the caller states it."""
+    stage = os.path.join(spool, "_stage")
+    rows = df.coalesce(1).withColumn("_row", F.monotonically_increasing_id())
+    rows = rows.sortWithinPartitions("_chunk", "_row").drop("_row")
+    rows.write.mode("overwrite").partitionBy("_chunk").parquet(stage)
+    for part in glob.glob(os.path.join(stage, "_chunk=*")):
+        files = glob.glob(os.path.join(part, "part-*.parquet"))
+        assert len(files) == 1, f"{part} holds {len(files)} files, not one"
+        i = int(part.rsplit("=", 1)[1])
+        dest = os.path.join(spool, f"chunk_{i:04d}.parquet")
+        os.replace(files[0], dest)
+        os.utime(dest, (1_600_000_000 + i, 1_600_000_000 + i))
     shutil.rmtree(stage)
-    os.utime(dest, (1_600_000_000 + i, 1_600_000_000 + i))
 
 
 def chunked_replay(
@@ -260,12 +276,14 @@ def chunked_replay(
 
 
 def spool_stream(spark: SparkSession, spool: str) -> DataFrame:
-    """Stream a spool directory one chunk file per micro-batch, with the
-    events columns normalized like the batch table."""
-    physical = parquet_schema(spark, os.path.join(spool, "chunk_0001.parquet"))
-    raw = (
-        spark.readStream.schema(physical)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(spool)
-    )
-    return normalize_events(raw)
+    """:func:`chunk_stream` of an events spool, with the events columns
+    normalized like the batch table."""
+    return normalize_events(chunk_stream(spark, spool))
+
+
+def chunk_stream(spark: SparkSession, spool: str) -> DataFrame:
+    """Stream a spool directory one chunk file per micro-batch, read with
+    the schema of its lowest-numbered chunk file."""
+    first = min(glob.glob(os.path.join(spool, "chunk_*.parquet")))
+    reader = spark.readStream.schema(parquet_schema(spark, first))
+    return reader.option("maxFilesPerTrigger", "1").parquet(spool)

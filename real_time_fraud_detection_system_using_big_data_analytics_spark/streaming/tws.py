@@ -52,7 +52,7 @@ the reason the API matters at 100 TB state.
 
 from __future__ import annotations
 
-import shutil
+import os
 import tempfile
 from typing import TYPE_CHECKING, Iterator
 
@@ -618,16 +618,15 @@ def stream_tws_initial_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     key like any keyed state; after that the operator is the ordinary
     O(1)-state profile. Same protobuf gate and RocksDB pin as the other
     TWS queries."""
-    import glob
-    import os as _os
-
     with tempfile.TemporaryDirectory(prefix="replay_boot_", dir=scratch_root()) as d:
-        spool = spool_event_chunks(spark, sf_dir, 4, _os.path.join(d, "history"))
-        stream_spool = _os.path.join(d, "stream")
-        _os.makedirs(stream_spool)
-        # history = quartiles 1-2 (chunk files), stream = quartiles 3-4
-        # renamed into a fresh spool (chunk order preserved via utime)
-        first, second = (_os.path.join(spool, f"chunk_000{i}.parquet") for i in (1, 2))
+        spool = spool_event_chunks(spark, sf_dir, 4, os.path.join(d, "stream"))
+        # history = quartiles 1-2, moved out of the spool; the stream
+        # replays the chunk files left in it, quartiles 3-4
+        hist = os.path.join(d, "history")
+        os.makedirs(hist)
+        first, second = (os.path.join(hist, f"chunk_000{i}.parquet") for i in (1, 2))
+        for f in (first, second):
+            os.replace(os.path.join(spool, os.path.basename(f)), f)
         history = spark.read.schema(parquet_schema(spark, first)).parquet(first, second)
         profile = (
             history.groupBy("user_id")
@@ -638,13 +637,6 @@ def stream_tws_initial_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("total_cents"),
             )
         )
-        for i, src in enumerate(
-            sorted(glob.glob(_os.path.join(spool, "chunk_000[34].parquet"))),
-            start=1,
-        ):
-            dest = _os.path.join(stream_spool, f"chunk_{i:04d}.parquet")
-            shutil.copy(src, dest)
-            _os.utime(dest, (1_600_000_000 + i, 1_600_000_000 + i))
 
         def transform(stream: DataFrame) -> DataFrame:
             return stream.groupBy("user_id").transformWithStateInPandas(
@@ -657,7 +649,7 @@ def stream_tws_initial_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         with rocksdb_state(spark):
             tbl, batches = chunked_replay(
-                spark, sf_dir, transform, output_mode="update", spool=stream_spool
+                spark, sf_dir, transform, output_mode="update", spool=spool
             )
     assert batches >= 2, f"expected a multi-batch replay, got {batches}"
     return latest_per_key(tbl, "n_events")

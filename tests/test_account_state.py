@@ -215,6 +215,7 @@ def test_step_frame_has_no_ts_and_is_in_event_order(spark, sf_dir, tmp_path):
     key's whole trigger as one frame, without the watermark's ``ts``
     column, sorted by ``(ts_us, event_id)``."""
     import numpy as np
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -225,7 +226,7 @@ def test_step_frame_has_no_ts_and_is_in_event_order(spark, sf_dir, tmp_path):
     from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.replay import (
         run_to_memory,
         spool_stream,
-        write_chunk,
+        write_chunks,
     )
 
     spy_schema = T.StructType(
@@ -251,9 +252,17 @@ def test_step_frame_has_no_ts_and_is_in_event_order(spark, sf_dir, tmp_path):
         return out, (state[0] + 1,)
 
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    write_chunk(
-        events.orderBy(F.col("ts").desc(), F.col("event_id").desc()), str(tmp_path), 1
+    write_chunks(
+        events.orderBy(F.col("ts").desc(), F.col("event_id").desc()).withColumn(
+            "_chunk", F.lit(1)
+        ),
+        str(tmp_path),
     )
+    # the file really holds the events in reverse order, or the sort below
+    # would be checked against input that was already in order
+    written = pq.read_table(tmp_path / "chunk_0001.parquet", columns=["ts", "event_id"])
+    keys = list(zip(written["ts"].to_pylist(), written["event_id"].to_pylist()))
+    assert keys == sorted(keys, reverse=True) != sorted(keys)
     prepared = (
         spool_stream(spark, str(tmp_path))
         .select("user_id", "event_id", F.unix_micros("ts").alias("ts_us"), "ts")

@@ -10,9 +10,13 @@ double-counted state would break the equality with the batch oracle.
 from __future__ import annotations
 
 import contextlib
+import datetime
 import os
 import re
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
@@ -41,6 +45,7 @@ from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.v
     velocity_features_stream,
 )
 from tests.oracle_harness import compare
+from tests.test_tables import jobs_started
 
 SF = "/root/testdata/sf0.001"
 N_CHUNKS = 4
@@ -237,3 +242,45 @@ def test_non_local_checkpoint_keeps_sparks_default_manager(spark, tmp_path):
         with local_checkpoints(spark, local):
             assert spark.conf.get(MANAGER_CONF) == FS_MANAGER
         assert spark.conf.get(MANAGER_CONF, None) is None
+
+
+def test_a_spool_is_written_in_the_same_jobs_at_any_chunk_count(spark, tmp_path):
+    """Every chunk file of a spool, sentinels included, comes out of one
+    write: the jobs a spool starts do not grow with its chunk count."""
+    spool_event_chunks(spark, SF, 2, str(tmp_path / "warm"))  # caches the schema
+    jobs = [
+        jobs_started(
+            spark,
+            f"test_replay.spool_{n}",
+            lambda: spool_event_chunks(spark, SF, n, str(tmp_path / str(n)), sentinel_chunks=2),
+        )
+        for n in (2, 6)
+    ]
+    assert jobs[0] == jobs[1] <= 3, jobs
+
+
+@pytest.mark.parametrize("n", [3, 7])
+def test_spool_chunks_are_the_ntile_cut_in_event_order(spark, tmp_path, n):
+    """The real chunks, in index order, are the events sorted by
+    ``(ts, event_id)``, cut as ``ntile`` cuts (the first ``N mod n`` one
+    row longer); the two sentinel chunks follow, each five rows past the
+    last event; every chunk file has one schema and the mtime of its
+    index."""
+    spool_event_chunks(spark, SF, n, str(tmp_path), sentinel_chunks=2)
+    files = sorted(tmp_path.glob("chunk_*.parquet"))
+    assert [f.name for f in files] == [f"chunk_{i:04d}.parquet" for i in range(1, n + 3)]
+    assert [f.stat().st_mtime for f in files] == [1_600_000_000 + i for i in range(1, n + 3)]
+    tables = [pq.read_table(f) for f in files]
+    assert all(t.schema.equals(tables[0].schema) for t in tables)
+
+    events = pq.read_table(f"{SF}/events.parquet").sort_by(
+        [("ts", "ascending"), ("event_id", "ascending")]
+    )
+    real, sentinels = tables[:n], tables[n:]
+    assert pa.concat_tables(real).to_pylist() == events.to_pylist()
+    rows = events.num_rows
+    assert [t.num_rows for t in real] == [rows // n + (i < rows % n) for i in range(n)]
+    last = pc.max(events["ts"]).as_py()
+    for j, t in enumerate(sentinels, start=1):
+        assert t["user_id"].to_pylist() == [-1, -2, -3, -4, -5]
+        assert set(t["ts"].to_pylist()) == {last + datetime.timedelta(days=9 + j)}

@@ -23,12 +23,13 @@ from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.r
     chunked_replay,
     spool_event_chunks,
     spool_stream,
-    write_chunk,
+    write_chunks,
 )
 from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.sources import (
     events_file_stream,
 )
 from real_time_fraud_detection_system_using_big_data_analytics_spark.streaming.velocity import (
+    run_velocity_join_hermetic,
     velocity_features_stream,
 )
 
@@ -67,7 +68,9 @@ def test_repeated_reads_start_no_jobs(spark, tmp_path):
 def test_nanos_events_spool_and_replay(spark, tmp_path):
     """An events file with TIMESTAMP(NANOS) ``ts`` spools and replays on a
     session without ``nanosAsLong`` set: the reader pins it. Every event
-    comes back, with its ts truncated to micros."""
+    comes back, with its ts truncated to micros. A replay whose spool
+    carries sentinel chunks (built in the file's bigint ``ts``) returns
+    the same rows as on the micros file."""
     table = pq.read_table(f"{SF}/events.parquet")
     nanos = table.set_column(
         table.schema.get_field_index("ts"), "ts", table["ts"].cast(pa.timestamp("ns"))
@@ -85,6 +88,8 @@ def test_nanos_events_spool_and_replay(spark, tmp_path):
             spark, str(sf), velocity_features_stream, n_chunks=4, spool=spool
         )
         got = {(r["event_id"], r["ts_us"]) for r in out.collect()}
+        spark.conf.unset(NANOS_AS_LONG)
+        joined = run_velocity_join_hermetic(spark, str(sf)).collect()
     finally:
         if prev is None:
             spark.conf.unset(NANOS_AS_LONG)
@@ -93,6 +98,8 @@ def test_nanos_events_spool_and_replay(spark, tmp_path):
     assert batches >= 4
     micros = table["ts"].cast(pa.int64()).to_pylist()
     assert got == set(zip(table["event_id"].to_pylist(), micros))
+    assert len(joined) == table.num_rows
+    assert sorted(joined) == sorted(run_velocity_join_hermetic(spark, SF).collect())
 
 
 def test_a_table_rewritten_in_place_is_read_with_its_new_schema(spark, tmp_path):
@@ -109,23 +116,23 @@ def test_a_table_rewritten_in_place_is_read_with_its_new_schema(spark, tmp_path)
 def test_a_chunk_rewritten_with_the_same_mtime_is_read_with_its_new_schema(
     spark, tmp_path
 ):
-    """write_chunk forges each chunk's mtime from its index, so a chunk
+    """write_chunks forges each chunk's mtime from its index, so a chunk
     rewritten at the same path keeps its mtime, and may keep its size; the
     stream still sees the new file's schema."""
     spool = str(tmp_path / "spool")
     chunk = os.path.join(spool, "chunk_0001.parquet")
-    ev = load_tables(spark, SF, ("events",))["events"]
-    write_chunk(ev, spool, 1)
+    ev = load_tables(spark, SF, ("events",))["events"].withColumn("_chunk", F.lit(1))
+    write_chunks(ev, spool)
     mtime = os.stat(chunk).st_mtime_ns
     assert dict(spool_stream(spark, spool).dtypes)["value"] == "double"
 
     ev = ev.withColumn("value", F.col("value").cast("float"))
-    write_chunk(ev, spool, 1)
+    write_chunks(ev, spool)
     size = os.stat(chunk).st_size
     assert os.stat(chunk).st_mtime_ns == mtime
     assert dict(spool_stream(spark, spool).dtypes)["value"] == "float"
 
     # a same-length column name: same bytes, same mtime, another schema
-    write_chunk(ev.withColumnRenamed("props", "notes"), spool, 1)
+    write_chunks(ev.withColumnRenamed("props", "notes"), spool)
     assert (os.stat(chunk).st_size, os.stat(chunk).st_mtime_ns) == (size, mtime)
     assert parquet_schema(spark, chunk).names[-1] == "notes"
