@@ -331,7 +331,9 @@ def main() -> None:
     # SEPARATELY as `queries_cold`; the warm min/median methodology and
     # every existing field are unchanged (additions only). Two samples,
     # min, to shave the worst host-stall draws; disable with
-    # SPARK_GRAFT_BENCH_COLD_SAMPLES=0.
+    # SPARK_GRAFT_BENCH_COLD_SAMPLES=0. clearCache does not drop a fitted
+    # model: after their first call in a session, ml_train_rule_agreement
+    # and stream_ml_score reuse the session's ml.scoring.reference_model.
     n_cold = int(os.environ.get("SPARK_GRAFT_BENCH_COLD_SAMPLES", "2"))
     cold_times: dict[str, float] = {}
     if n_cold > 0:

@@ -112,7 +112,7 @@ def probe_cells_driver(
     """Driver-side twin of assign_top_cells for a collected bounded query
     set: the n nearest centroid ids per query, nearest first (same
     _dist_matrix + stable argsort as the kernel, so bit-identical to the
-    with_top_cells column it replaces)."""
+    probe_cells column the kernel would append)."""
     E = np.asarray(q_vecs, dtype=np.float64)
     C, cc = _centroid_arrays(centroids)
     D = _dist_matrix(E, C, cc)
@@ -182,9 +182,9 @@ def assign_top_cells(
     vec_col: str = "e",
     keep: tuple[str, ...] | None = None,
 ) -> DataFrame:
-    """Arrow twin of clustering.with_top_cells: appends ``probe_cells`` =
-    the n nearest centroid ids, nearest first (stable argsort of the
-    distance row = array_sort over (d, cid) structs: ties by cid)."""
+    """Appends ``probe_cells`` = the n nearest centroid ids, nearest first
+    (stable argsort of the distance row = array_sort over (d, cid)
+    structs: ties by cid) — the query-side probe list for nprobe>1 IVF."""
     if not 1 <= n <= len(centroids):
         raise ValueError(
             f"assign_top_cells: n={n} must be between 1 and the number of "

@@ -71,16 +71,21 @@ class FraudPipeline:
     weight_col: str | None = "classWeight"  # None reproduces the reference no-op
 
     # -- M1-M6 ---------------------------------------------------------
+    @staticmethod
+    def feature_stages() -> list:
+        """Index -> one-hot -> assemble into ``features_raw``: the stages
+        every model head shares."""
+        return [
+            StringIndexer(inputCol="type", outputCol="type_indexed", handleInvalid="keep"),
+            OneHotEncoder(inputCols=["type_indexed"], outputCols=["type_encoded"]),
+            VectorAssembler(
+                inputCols=["type_encoded"] + NUMERIC_COLS,
+                outputCol="features_raw",
+                handleInvalid="keep",
+            ),
+        ]
+
     def build_pipeline(self) -> Pipeline:
-        indexer = StringIndexer(
-            inputCol="type", outputCol="type_indexed", handleInvalid="keep"
-        )
-        encoder = OneHotEncoder(inputCols=["type_indexed"], outputCols=["type_encoded"])
-        assembler = VectorAssembler(
-            inputCols=["type_encoded"] + NUMERIC_COLS,
-            outputCol="features_raw",
-            handleInvalid="keep",
-        )
         scaler = StandardScaler(
             inputCol="features_raw", outputCol="features", withStd=True, withMean=True
         )
@@ -93,7 +98,7 @@ class FraudPipeline:
         if self.weight_col:
             lr_kwargs["weightCol"] = self.weight_col
         lr = LogisticRegression(**lr_kwargs)
-        return Pipeline(stages=[indexer, encoder, assembler, scaler, lr])
+        return Pipeline(stages=[*self.feature_stages(), scaler, lr])
 
     # -- classWeight (fraud_detection_model.py:197-209, single pass) ----
     def with_class_weight(self, df: DataFrame) -> DataFrame:

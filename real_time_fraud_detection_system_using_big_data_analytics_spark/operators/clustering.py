@@ -130,21 +130,6 @@ def with_assignment(
     return assign_cells(df, centroids, vec_col="e", keep=keep)
 
 
-def with_top_cells(
-    df: DataFrame,
-    centroids: list[list[float]],
-    n: int,
-    keep: tuple[str, ...] | None = None,
-) -> DataFrame:
-    """Attach ``probe_cells`` = the ``n`` nearest centroid ids, nearest
-    first — the query-side probe list for nprobe>1 IVF. Same Arrow kernel
-    family as with_assignment (stable argsort of the distance row =
-    array_sort over (d, cid) structs); still map-only."""
-    from ..functions.arrowvec import assign_top_cells
-
-    return assign_top_cells(df, centroids, n, vec_col="e", keep=keep)
-
-
 def _prepare_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, e=double[]) fanned out and persisted — the working set every
     Lloyd pass re-reads."""
@@ -450,7 +435,7 @@ def _kernel_probe_top3(
 
 def _ivf_probe(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     """The shared probe plan: each query scored within its nprobe nearest
-    cells (driver-derived probe list — same argsort as with_top_cells),
+    cells (driver-derived probe list — same argsort as arrowvec.assign_top_cells),
     assignment + exact-cosine top-3 fused in the shared Arrow probe
     kernel over the plain corpus scan."""
     from ..functions.arrowvec import probe_cells_driver

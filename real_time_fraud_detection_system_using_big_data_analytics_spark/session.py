@@ -14,8 +14,7 @@ proportions) broadcast instead of shuffling the fact table.
 Python workers fork from this package's own daemon module (``pydaemon``),
 which keeps each worker from re-reading Spark's zips and jar before every
 task. ``spark.python.daemon.module`` is a static setting, read once when
-the SparkContext starts, so only ``get_session`` can select it:
-``tune_existing`` cannot apply it to a session someone else built.
+the SparkContext starts, so only ``get_session`` can select it.
 
 The driver JVM that ``get_session`` launches starts from a static AppCDS
 archive in the user cache (``cds.py``), which halves its start-up: it maps
@@ -204,20 +203,4 @@ def get_session(app_name: str = "fraud-engine", cpus: int | None = None) -> Spar
             )
         spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    return spark
-
-
-def tune_existing(spark: SparkSession) -> SparkSession:
-    """Apply the runtime-settable subset of our defaults to a session we did
-    not create (the driver harness passes its own). Only touches confs that
-    are safe to flip mid-session."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    except Exception:
-        pass
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
     return spark

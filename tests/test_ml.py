@@ -14,6 +14,8 @@ from real_time_fraud_detection_system_using_big_data_analytics_spark.ml import (
     PAYSIM_SCHEMA,
 )
 
+from tests.test_tables import SF, jobs_started
+
 
 def paysim_fixture(spark, n: int = 200):
     """Deterministic PaySim-shaped frame: fraud = full-drain TRANSFER rows
@@ -198,11 +200,12 @@ def test_lr_golden_coefficients_and_confusion(spark):
     """
     from real_time_fraud_detection_system_using_big_data_analytics_spark.ml.scoring import (
         events_as_transactions,
+        reference_model,
     )
 
-    df = events_as_transactions(spark, "/root/testdata/sf0.001")
-    train, test = df.randomSplit([0.8, 0.2], seed=42)
-    model = FraudPipeline().fit(train)
+    # the registry audits' shared holdout model, so the pin covers it
+    model = reference_model(spark, SF, True)
+    test = events_as_transactions(spark, SF).randomSplit([0.8, 0.2], seed=42)[1]
     lr = model.stages[-1]
 
     golden_intercept = -0.6540171726426149
@@ -229,3 +232,14 @@ def test_lr_golden_coefficients_and_confusion(spark):
     assert m["confusion_matrix"] == {"tp": 5, "fp": 8, "tn": 149, "fn": 0}
     assert m["n"] == 162
     assert abs(m["auc"] - 0.9961783439490446) < 1e-6
+
+
+def test_reference_model_is_fitted_once_per_session(spark):
+    """The LR audits share one fitted model per (session, sf_dir, split):
+    once it is warm, building an audit only plans (no fit, no job)."""
+    from real_time_fraud_detection_system_using_big_data_analytics_spark.ml import scoring
+
+    model = scoring.reference_model(spark, SF, True)
+    assert scoring.reference_model(spark, SF, True) is model
+    for build in (scoring.ml_train_score_confusion, scoring.ml_train_rule_agreement):
+        assert jobs_started(spark, f"test_ml.{build.__name__}", lambda: build(spark, SF)) == 0
